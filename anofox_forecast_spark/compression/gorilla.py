@@ -20,9 +20,14 @@ Value encoding (§4.1.2):
     else → '11' + 5 bits #leading-zeros + 6 bits length + meaningful bits
 
 The Spark layer (``compress_chunks``) packs each (series, chunk) into one
-BinaryType blob pair inside an ``applyInPandas`` — Arrow-batched, no per-row
-Python at the Spark layer; the bit-packing loop runs over one in-memory
-chunk (bounded size) per call. Round-trip losslessness is property-tested.
+BinaryType blob pair inside the harness's batched ``mapInPandas`` (many
+series per Arrow batch) with the vectorized encoders. ``decompress_chunks``
+is narrow: chunk rows are self-contained (header, codec magic, point
+count), so it is one ``mapInPandas`` over the chunk frame with no Exchange
+and no Sort; each Arrow batch of chunks becomes output frames of about
+``maxRecordsPerBatch`` points, so a frame's size does not grow with the
+chunk length. The word-level ``_BitReader`` serves both the Gorilla and
+the Chimp decoder. Round-trip losslessness is property-tested.
 """
 
 from __future__ import annotations
@@ -56,19 +61,24 @@ class _BitWriter:
 
 
 class _BitReader:
-    __slots__ = ("data", "pos")
+    """MSB-first bit reader: one ``int.from_bytes`` over the covering byte
+    slice per read. Reading past the last byte raises IndexError, so a
+    truncated blob fails instead of decoding to garbage."""
+
+    __slots__ = ("data", "pos", "nbits")
 
     def __init__(self, data: bytes) -> None:
         self.data = data
         self.pos = 0
+        self.nbits = 8 * len(data)
 
     def read(self, bits: int) -> int:
-        out = 0
-        for _ in range(bits):
-            byte = self.data[self.pos >> 3]
-            out = (out << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return out
+        end = self.pos + bits
+        if end > self.nbits:
+            raise IndexError(f"bit stream exhausted: read to bit {end} of {self.nbits}")
+        lo, hi = self.pos >> 3, (end + 7) >> 3
+        self.pos = end
+        return (int.from_bytes(self.data[lo:hi], "big") >> ((hi << 3) - end)) & ((1 << bits) - 1)
 
 
 _TS_RANGES = ((-63, 64, 7, 0b10, 2), (-255, 256, 9, 0b110, 3), (-2047, 2048, 12, 0b1110, 4))
@@ -171,12 +181,9 @@ def encode_values_packed(values: np.ndarray) -> bytes:
     conformant subset the streaming decoder reads unchanged): byte-LUT
     leading/trailing zero counts, one repeat/cumsum bit-pack pass.
 
-    This is the DEFAULT encoder (1.4-1.6× the loop encoder per point at
-    realistic 7d-chunk sizes even under this container's slow first-touch
-    allocation; more on normal hardware, where the per-bit expansion is
-    bandwidth-cheap). Blobs are ~3-8% larger than the window-reuse loop
-    encoder ('11' headers always carry lead/len). Set
-    ``ANOFOX_GORILLA_ENCODER=loop`` to switch back at runtime.
+    This is the encoder ``compress_chunks`` uses (1.4-1.6× the loop
+    encoder per point at realistic 7d-chunk sizes). Blobs are ~3-8% larger
+    than the window-reuse loop encoder ('11' headers always carry lead/len).
     """
     v = np.asarray(values, dtype=np.float64)
     n = v.size
@@ -229,8 +236,9 @@ def encode_values_packed(values: np.ndarray) -> bytes:
 
 def encode_values(values: np.ndarray) -> bytes:
     """Gorilla XOR float compression (lossless, NaN-preserving) — python
-    bit-writer with window reuse (~3 µs/pt; see encode_values_packed for
-    the vectorized variant and why it is not the default here)."""
+    bit-writer with window reuse (~3 µs/pt). Reference implementation for
+    tests; ``compress_chunks`` writes with the vectorized
+    ``encode_values_packed``, whose blobs this decoder reads unchanged."""
     v = np.asarray(values, dtype=np.float64)
     bits = v.view(np.uint64)
     n = v.size
@@ -329,19 +337,6 @@ def encode_timestamps_packed(ts: np.ndarray) -> bytes:
     return _pack_segments(seg_vals, seg_w)
 
 
-import os as _os  # noqa: E402
-
-#: default encoders; ANOFOX_GORILLA_ENCODER=loop selects the scalar pair
-if _os.environ.get("ANOFOX_GORILLA_ENCODER", "packed") == "loop":
-    default_encode_values, default_encode_timestamps = (
-        encode_values, encode_timestamps,
-    )
-else:
-    default_encode_values, default_encode_timestamps = (
-        encode_values_packed, encode_timestamps_packed,
-    )
-
-
 # ------------------------------------------------------------- Spark layer
 
 #: on-disk chunk-blob header: magic + format version + timestamp unit.
@@ -427,7 +422,7 @@ def compress_chunks(
         enc_values = encode_values_chimp
         val_magic = _CHIMP_MAGIC
     elif codec == "gorilla":
-        enc_values = default_encode_values
+        enc_values = encode_values_packed
         val_magic = _BLOB_MAGIC
     else:
         raise ValueError(f"unknown codec {codec!r} (gorilla|chimp)")
@@ -453,7 +448,7 @@ def compress_chunks(
                 out[k].append([g[k].iloc[0]])
             out["chunk_start"].append([seg_chunk])
             out["n_points"].append([np.int32(seg_ts.size)])
-            out["ts_blob"].append([_wrap_blob(default_encode_timestamps(seg_ts))])
+            out["ts_blob"].append([_wrap_blob(encode_timestamps_packed(seg_ts))])
             out["val_blob"].append(
                 [val_magic + _UNIT_CODES["us"] + enc_values(seg_vals)]
             )
@@ -463,12 +458,55 @@ def compress_chunks(
     return batched_series_apply(chunked, keys_l, ts_col, encode_series, out_schema)
 
 
+def _decode_chunk(ts_blob: bytes, val_blob: bytes, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """One chunk row → (µs timestamps, values). Validates both headers and
+    dispatches the value codec on the blob's own magic."""
+    ts_raw, unit = _unwrap_blob(ts_blob)
+    val_raw, _ = _unwrap_blob(val_blob)
+    ts = decode_timestamps(ts_raw, n)
+    if unit == "s":
+        ts = ts * 1_000_000
+    if _blob_codec(val_blob) == "chimp":
+        from anofox_forecast_spark.compression.chimp import decode_values_chimp
+
+        return ts, decode_values_chimp(val_raw, n)
+    return ts, decode_values(val_raw, n)
+
+
+def _decode_batches(batches, keys_l: list[str], cap: int):
+    """Chunk-row frames → point frames. Rows are cut where the running
+    point count passes a multiple of ``cap`` (no cut if ``cap`` <= 0), so an
+    output frame holds fewer than ``cap`` points plus one chunk, however
+    long the chunks are."""
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        n = pdf["n_points"].to_numpy(dtype=np.int64)
+        cuts = np.flatnonzero(np.diff((np.cumsum(n) - n) // cap)) + 1 if cap > 0 else []
+        for lo, hi in zip([0, *cuts], [*cuts, len(pdf)]):
+            part = pdf.iloc[lo:hi]
+            ts, vals = zip(*(
+                _decode_chunk(bytes(tb), bytes(vb), int(k))
+                for tb, vb, k in zip(part["ts_blob"], part["val_blob"], n[lo:hi])
+            ))
+            rows = np.repeat(np.arange(hi - lo), n[lo:hi])
+            out = {k: part[k].iloc[rows].reset_index(drop=True) for k in keys_l}
+            out["ts"] = np.concatenate(ts).astype("datetime64[us]")
+            out["value"] = np.concatenate(vals)
+            yield pd.DataFrame(out)
+
+
 def decompress_chunks(df, keys: Sequence[str]):
     """Inverse of ``compress_chunks``: explode blobs back to points.
 
     Output: (keys…, ts: timestamp, value: double).
+
+    Every chunk row decodes on its own, so this is one narrow
+    ``mapInPandas`` over the chunk frame — no Exchange, no Sort. Each Arrow
+    batch of chunk rows becomes output frames of about
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` points: keys repeat by
+    row index, timestamps and values concatenate across the chunks.
     """
-    import pandas as pd
     from pyspark.sql.types import (
         DoubleType,
         StructField,
@@ -484,35 +522,10 @@ def decompress_chunks(df, keys: Sequence[str]):
          StructField("value", DoubleType())]
     )
 
-    def decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for _, r in pdf.iterrows():
-            n = int(r["n_points"])
-            ts_raw, unit = _unwrap_blob(bytes(r["ts_blob"]))
-            val_blob = bytes(r["val_blob"])
-            val_raw, _ = _unwrap_blob(val_blob)
-            ts = decode_timestamps(ts_raw, n)
-            if _blob_codec(val_blob) == "chimp":
-                from anofox_forecast_spark.compression.chimp import (
-                    decode_values_chimp,
-                )
+    cap = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
-                vals = decode_values_chimp(val_raw, n)
-            else:
-                vals = decode_values(val_raw, n)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        **{k: [r[k]] * n for k in keys_l},
-                        "ts": pd.to_datetime(ts, unit=unit),
-                        "value": vals,
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(
-            {f.name: pd.Series(dtype="object") for f in out_schema.fields}
-        )
+    def decode(batches):
+        return _decode_batches(batches, keys_l, cap)
 
-    from anofox_forecast_spark.models.harness import _grouped_apply
-
-    return _grouped_apply(df, keys_l, decode, out_schema)
+    return df.select(*keys_l, "n_points", "ts_blob", "val_blob").mapInPandas(
+        decode, schema=out_schema)

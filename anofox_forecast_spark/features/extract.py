@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from anofox_forecast_spark.features.np_features import DEFAULT_FEATURES
+from anofox_forecast_spark.models.harness import kernel_partitions
 
 
 def extract_features(
@@ -66,9 +67,8 @@ def extract_features(
         if carry is not None and len(carry):
             yield _batch(carry, keys_l, value_col, cat, names)
 
-    sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism * 2, 8)
-    prepared = df.repartition(target, *keys_l).sortWithinPartitions(*keys_l, ts_col)
+    prepared = (df.repartition(kernel_partitions(df), *keys_l)
+                .sortWithinPartitions(*keys_l, ts_col))
     return prepared.mapInPandas(run, schema=out_schema)
 
 

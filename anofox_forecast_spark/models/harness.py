@@ -13,6 +13,20 @@ the job; use ``forecast_status`` to surface per-series errors.
 Skew note: series length after tier rollup is bounded (≤ span/tier buckets),
 so a hot host costs the same as any other series here; skew is handled at
 the rollup stage, not the model stage.
+
+One-wave rule: every batched or grouped Python stage repartitions to
+``kernel_partitions(df)`` = ``sc.defaultParallelism``: one task per core,
+one wave, no floor. A Python stage pays a fixed cost per task, so this wins
+where that cost is a visible share of the stage (``local[4]``, shared 4-core
+x86 machine, 4 vs the old 8 partitions, alternating): an identity
+``mapInPandas`` over 13k rows took 0.68 vs 1.24 s (0.21-0.27 s with no
+Python stage), and 1-5 s CV/STL/PELT stages over ~270 series ran 8-24 %
+faster in 29 of 30 pairs. Where kernel time dominates only the hash balance
+moves, and a second wave did not improve it: a 55-85 s ``cross_validate``
+(ets+holt_winters+optimized_theta, ~270 gap-filled hourly series) had
+medians of 61-63 s at 4 and 70-73 s at 8, 4 winning 10 of 14 pairs. The
+count is read when the plan is built; on a cluster ``defaultParallelism``
+is 2 until executors register (``spark.default.parallelism`` overrides it).
 """
 
 from __future__ import annotations
@@ -39,6 +53,12 @@ from anofox_forecast_spark.models.registry import get_model
 ModelSpec = Mapping[str, Mapping] | Sequence[str]
 
 
+def kernel_partitions(df: DataFrame) -> int:
+    """Partition count for a Python kernel stage: one task per core, so the
+    stage runs in one task wave (module docstring, one-wave rule)."""
+    return df.sparkSession.sparkContext.defaultParallelism
+
+
 def _grouped_apply(df: DataFrame, keys: list[str], fn, schema) -> DataFrame:
     """applyInPandas with a CPU-oriented explicit repartition.
 
@@ -46,11 +66,13 @@ def _grouped_apply(df: DataFrame, keys: list[str], fn, schema) -> DataFrame:
     coalesce a small shuffle (few MB of series data) down to 1-2 partitions
     and serialize thousands of kernel fits. An EXPLICIT repartition(n, keys)
     is exempt from AQE coalescing and hash-partitions by the same keys the
-    groupBy needs, so no extra shuffle is introduced.
+    groupBy needs, so no extra shuffle is introduced. n is one task per
+    core (``kernel_partitions``): an extra wave of Python tasks added
+    0.3-0.6 s of wall time per stage, and did not speed up a kernel-bound
+    stage either (module docstring, one-wave rule).
     """
-    sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism * 2, 8)
-    return df.repartition(target, *keys).groupBy(*keys).applyInPandas(fn, schema=schema)
+    return (df.repartition(kernel_partitions(df), *keys)
+            .groupBy(*keys).applyInPandas(fn, schema=schema))
 
 
 def _last_key_mask(pdf: pd.DataFrame, keys_l: list[str]) -> np.ndarray:
@@ -112,9 +134,8 @@ def batched_series_apply(df: DataFrame, keys, ts_col, per_series, out_schema) ->
             if out is not None:
                 yield out
 
-    sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism * 2, 8)
-    prepared = df.repartition(target, *keys_l).sortWithinPartitions(*keys_l, ts_col)
+    prepared = (df.repartition(kernel_partitions(df), *keys_l)
+                .sortWithinPartitions(*keys_l, ts_col))
     return prepared.mapInPandas(run, schema=out_schema)
 
 
@@ -170,7 +191,6 @@ def forecast(
     keys_l = list(keys)
 
     resolved = [(name, get_model(name), params) for name, params in specs.items()]
-    empty = {f.name: [] for f in out_schema.fields}
 
     def one_series(g: pd.DataFrame, out: dict) -> None:
         if len(g) > max_points_per_series:
@@ -192,41 +212,7 @@ def forecast(
             out["lo"].append(res.lo)
             out["hi"].append(res.hi)
 
-    def run(batches):
-        # mapInPandas over key-partitioned, key+ts-sorted data: MANY series
-        # per Arrow batch (one pandas frame per ~10k rows instead of one per
-        # series) — grouped-map per-series dispatch otherwise dominates for
-        # short post-rollup series. A series split across batch boundaries
-        # is carried into the next batch (partitions are key-contiguous).
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            # hold back the trailing group — it may continue in the next batch
-            if len(pdf) == 0:
-                continue
-            mask = _last_key_mask(pdf, keys_l)
-            carry = pdf.iloc[mask.nonzero()[0]]
-            body = pdf.iloc[(~mask).nonzero()[0]]
-            if len(body):
-                out = {f.name: [] for f in out_schema.fields}
-                for _, g in body.groupby(keys_l, sort=False, dropna=False):
-                    one_series(g, out)
-                if out["model"]:
-                    yield pd.DataFrame({k: np.concatenate(v) for k, v in out.items()})
-        if carry is not None and len(carry):
-            out = {f.name: [] for f in out_schema.fields}
-            for _, g in carry.groupby(keys_l, sort=False, dropna=False):
-                one_series(g, out)
-            if out["model"]:
-                yield pd.DataFrame({k: np.concatenate(v) for k, v in out.items()})
-        if False:
-            yield pd.DataFrame(empty)
-
-    sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism * 2, 8)
-    prepared = df.repartition(target, *keys_l).sortWithinPartitions(*keys_l, ts_col)
-    return prepared.mapInPandas(run, schema=out_schema)
+    return batched_series_apply(df, keys_l, ts_col, one_series, out_schema)
 
 
 def fitted_values(

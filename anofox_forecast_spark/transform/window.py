@@ -99,6 +99,8 @@ def ewm_mean(
     """
     from pyspark.sql.types import DoubleType, StructField, StructType
 
+    from anofox_forecast_spark.models.harness import _last_key_mask, kernel_partitions
+
     out_col = out_col or f"{value_col}_ewm"
     keys_l = list(keys)
     out_schema = StructType(list(df.schema.fields) + [StructField(out_col, DoubleType())])
@@ -110,8 +112,6 @@ def ewm_mean(
                 pdf = pd.concat([carry, pdf], ignore_index=True)
             if len(pdf) == 0:
                 continue
-            from anofox_forecast_spark.models.harness import _last_key_mask
-
             mask = _last_key_mask(pdf, keys_l)
             carry = pdf.iloc[mask.nonzero()[0]]
             body = pdf.iloc[(~mask).nonzero()[0]]
@@ -120,9 +120,8 @@ def ewm_mean(
         if carry is not None and len(carry):
             yield _ewm_batch(carry, keys_l, value_col, out_col, alpha)
 
-    sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism * 2, 8)
-    prepared = df.repartition(target, *keys_l).sortWithinPartitions(*keys_l, ts_col)
+    prepared = (df.repartition(kernel_partitions(df), *keys_l)
+                .sortWithinPartitions(*keys_l, ts_col))
     return prepared.mapInPandas(run, schema=out_schema)
 
 

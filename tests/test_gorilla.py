@@ -240,3 +240,153 @@ def test_chimp_chunks_roundtrip(spark):
                         suffixes=("", "_rt"))
     assert len(merged) == len(orig)
     assert (merged["value"] == merged["value_rt"]).all()
+
+
+# ------------------------------------------------ batched chunk decoder
+
+
+def _ts_rows(df):
+    return df.orderBy("sid", "ts").toPandas()
+
+
+def test_mixed_codec_chunk_table_roundtrip(spark):
+    """A union of Gorilla and Chimp chunk rows, decoded in one Arrow batch,
+    round-trips bit-exact: the decoder dispatches per blob, not per table."""
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    ts = pd.date_range("2024-01-01", periods=400, freq="h")
+    rows = [(s, t.to_pydatetime(), float(v))
+            for s in ("a", "b", "c")
+            for t, v in zip(ts, np.round(rng.normal(50, 9, ts.size), 2))]
+    df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
+    gor = compress_chunks(df.filter("sid != 'b'"), ["sid"], "ts", "y", chunk_freq="7d")
+    chm = compress_chunks(df.filter("sid = 'b'"), ["sid"], "ts", "y", chunk_freq="7d",
+                          codec="chimp")
+    chunks = gor.unionByName(chm).coalesce(1)
+    magics = {bytes(r.val_blob[:4]) for r in chunks.select("val_blob").collect()}
+    assert magics == {b"GORv", b"CHMv"}
+    back = _ts_rows(decompress_chunks(chunks, ["sid"]))
+    orig = _ts_rows(df)
+    assert len(back) == len(orig)
+    assert (back["sid"] == orig["sid"]).all()
+    assert (back["ts"] == orig["ts"]).all()
+    assert np.array_equal(back["value"].to_numpy().view(np.uint64),
+                          orig["y"].to_numpy().view(np.uint64))
+
+
+def test_seconds_unit_blob_matches_microsecond_twin(spark):
+    """A hand-built 's'-unit timestamp blob decodes to the same timestamps
+    as the 'u'-unit blob of the same instants in microseconds."""
+    from anofox_forecast_spark.compression.gorilla import (
+        _wrap_blob,
+        encode_values_packed,
+    )
+
+    secs = np.array([1_704_067_200 + 3600 * i for i in range(20)] + [1_704_200_000],
+                    dtype=np.int64)
+    vals = np.linspace(0.0, 5.0, secs.size)
+    val_blob = _wrap_blob(encode_values_packed(vals))
+    rows = [
+        ("s", int(secs.size), _wrap_blob(encode_timestamps(secs), "s"), val_blob),
+        ("us", int(secs.size), _wrap_blob(encode_timestamps(secs * 1_000_000), "us"),
+         val_blob),
+    ]
+    chunks = spark.createDataFrame(
+        rows, "sid string, n_points int, ts_blob binary, val_blob binary")
+    back = decompress_chunks(chunks, ["sid"]).toPandas()
+    by_unit = {sid: g.sort_values("ts") for sid, g in back.groupby("sid")}
+    assert len(by_unit["s"]) == secs.size
+    assert (by_unit["s"]["ts"].to_numpy() == by_unit["us"]["ts"].to_numpy()).all()
+    assert by_unit["s"]["ts"].iloc[0].timestamp() == secs[0]
+
+
+@pytest.mark.parametrize("blob_col", ["ts_blob", "val_blob"])
+def test_truncated_blob_raises(spark, blob_col):
+    """Dropping the last byte of either blob must fail the decode, never
+    return fewer or garbage points."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("a", t0 + dt.timedelta(minutes=7 * i + i % 3), i * 1.5 + 0.1)
+            for i in range(60)]
+    df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
+    chunks = compress_chunks(df, ["sid"], "ts", "y", chunk_freq="7d")
+    cut = chunks.withColumn(blob_col, F.expr(f"substr({blob_col}, 1, length({blob_col}) - 1)"))
+    with pytest.raises(Exception, match="IndexError"):
+        decompress_chunks(cut, ["sid"]).collect()
+
+    raw = bytes(chunks.collect()[0][blob_col])[5:-1]
+    decode = decode_timestamps if blob_col == "ts_blob" else decode_values
+    with pytest.raises(IndexError):
+        decode(raw, len(rows))
+
+
+def test_null_key_series_roundtrip(spark):
+    """A NULL-key series is a real series: it compresses to its own chunks
+    and decodes back with a NULL key."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(sid, t0 + dt.timedelta(hours=i), float(i % 13) + (0.5 if sid else 0.25))
+            for sid in (None, "a") for i in range(200)]
+    df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
+    chunks = compress_chunks(df, ["sid"], "ts", "y", chunk_freq="7d")
+    back = decompress_chunks(chunks, ["sid"])
+    assert back.filter("sid IS NULL").count() == 200
+    got = sorted((r.sid or "", r.ts, r.value) for r in back.collect())
+    want = sorted((s or "", t, v) for s, t, v in rows)
+    assert got == want
+
+
+def _long_chunks(spark, minutes=3000):
+    """Two series of minute data in 1d chunks of up to 1,440 points each."""
+    import pandas as pd
+
+    rng = np.random.default_rng(9)
+    ts = pd.date_range("2024-01-01", periods=minutes, freq="min")
+    rows = [(s, t.to_pydatetime(), float(v))
+            for s in ("a", "b")
+            for t, v in zip(ts, np.round(rng.normal(10, 2, ts.size), 3))]
+    df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
+    return df, compress_chunks(df, ["sid"], "ts", "y", chunk_freq="1d")
+
+
+def test_decoder_frames_are_capped_by_points(spark):
+    """Output frames hold fewer than cap points plus one chunk, and the
+    capped frames concatenate to the uncapped decode."""
+    import pandas as pd
+
+    from anofox_forecast_spark.compression.gorilla import _decode_batches
+
+    _, chunks = _long_chunks(spark)
+    pdf = chunks.select("sid", "n_points", "ts_blob", "val_blob").toPandas()
+    longest = int(pdf["n_points"].max())
+    assert len(pdf) >= 4 and longest > 1000
+    whole = list(_decode_batches([pdf], ["sid"], 0))
+    assert len(whole) == 1
+    capped = list(_decode_batches([pdf], ["sid"], 1000))
+    assert len(capped) >= len(pdf) // 2
+    assert all(len(f) < 1000 + longest for f in capped)
+    pd.testing.assert_frame_equal(pd.concat(capped, ignore_index=True), whole[0])
+
+
+def test_small_arrow_batches_roundtrip_long_chunks(spark):
+    """With a small maxRecordsPerBatch, chunks far longer than the batch
+    size still round-trip bit-exact."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        df, chunks = _long_chunks(spark)
+        back = _ts_rows(decompress_chunks(chunks, ["sid"]))
+    finally:
+        spark.conf.set(key, old)
+    orig = _ts_rows(df)
+    assert len(back) == len(orig)
+    assert (back["sid"] == orig["sid"]).all()
+    assert (back["ts"] == orig["ts"]).all()
+    assert np.array_equal(back["value"].to_numpy().view(np.uint64),
+                          orig["y"].to_numpy().view(np.uint64))

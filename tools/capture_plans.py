@@ -516,6 +516,22 @@ def main() -> None:
         ["Generate", "Project"],
     ))
 
+    # 28. Gorilla chunk decode is narrow: every chunk row decodes on its
+    # own, so one MapInPandas over the chunk frame — no repartition, no
+    # sort (the chunk frame is materialized first so its own compress
+    # Exchange is not part of this plan)
+    from anofox_forecast_spark.compression.gorilla import decompress_chunks
+
+    ch_rows = spark.createDataFrame(ch.limit(200).collect(), ch.schema)
+    plan28 = grab(decompress_chunks(ch_rows, ["lang", "host"]))
+    assert "Exchange" not in plan28, "chunk decode must not shuffle"
+    assert "Sort" not in plan28, "chunk decode must not sort"
+    sections.append((
+        "Gorilla chunk decompression (one narrow MapInPandas, no Exchange/Sort)",
+        plan28,
+        ["MapInPandas"],
+    ))
+
     lines = [
         "# PLANS — physical-plan evidence (`.explain('formatted')`)",
         "",
