@@ -96,8 +96,9 @@ def batched_series_apply(df: DataFrame, keys, ts_col, per_series, out_schema) ->
 
     ``per_series(g: pd.DataFrame, out: dict[str, list])`` appends column
     blocks (numpy arrays / lists) for one series. This is the shared
-    low-overhead pattern for every per-series kernel (forecast, codec,
-    features): one pandas frame per ~10k rows instead of one per series.
+    low-overhead pattern for every per-series kernel (forecast, gap-fill,
+    codec, features, EWM): one pandas frame per ~10k rows instead of one
+    per series.
     """
     keys_l = list(keys)
 

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from anofox_forecast_spark.core.gapfill import fill_gaps, interpolate_linear, locf
 from anofox_forecast_spark.models.harness import forecast
 from anofox_forecast_spark.models._numerics import z_for_level
-from anofox_forecast_spark.rollup.tiers import bucket_col, cascade_rollup
+from anofox_forecast_spark.rollup.tiers import bucket_col, cascade_rollup, raw_measures
 
 Z95 = z_for_level(0.95)  # A&S two-sided 95% z — same constant in oracle SQL
 
@@ -92,7 +92,7 @@ def q_tier_cascade_1d(spark, sf_dir):
     ev = _events(spark, sf_dir)
     t1h = ev.groupBy(
         "event_type", bucket_col("ts", "1h").alias("bucket_start")
-    ).agg(F.count("*").alias("crawl_count"), F.sum("value").alias("text_bytes"))
+    ).agg(*raw_measures("value"))  # value stands in for the text size
     t1d = cascade_rollup(t1h, "1d", keys=["event_type"])
     return t1d.select(
         "event_type",

@@ -18,7 +18,8 @@ log — semantics identical):
   merge needs). Affected partitions = distinct bucket_dates of the
   partials; existing rows of those partitions are unioned with the
   partials and re-aggregated, then written back with dynamic partition
-  overwrite (untouched dates are never rewritten or read).
+  overwrite (untouched dates are never rewritten or read). The mode is a
+  per-write option; the session's ``partitionOverwriteMode`` is not touched.
 - Late / out-of-order data: handled by construction — a late row maps to
   its (old) bucket and merges into it; re-rolled bucket == from-scratch
   bucket (tested invariant).
@@ -52,34 +53,31 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from anofox_forecast_spark.rollup.tiers import bucket_col
+from anofox_forecast_spark.rollup.tiers import (
+    merged_measures,
+    project_pages,
+    text_bytes_avg,
+    tier_partials,
+)
+
+#: series key of the tier table (the ``project_pages`` keys)
+KEYS = ("lang", "host")
 
 
 class IncrementalRollup:
     """A continuous-aggregate tier table maintained incrementally."""
 
-    MEASURES = ("crawl_count", "text_bytes")
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_path: str,
-        tier: str,
-        keys: Sequence[str] = ("lang", "host"),
-    ) -> None:
+    def __init__(self, spark: SparkSession, base_path: str, tier: str) -> None:
         self.spark = spark
         self.tier = tier
-        self.keys = list(keys)
         self.path = os.path.join(base_path, f"tier={tier}")
         self.batches_path = os.path.join(base_path, "_state", f"batches_{tier}")
         self.lineage_path = os.path.join(base_path, "lineage")
         self.metrics_path = os.path.join(base_path, "metrics")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # ------------------------------------------------------------ state
 
@@ -118,29 +116,9 @@ class IncrementalRollup:
 
     # ------------------------------------------------------------ core
 
-    def _partials(self, batch: DataFrame, text_len_col: str = "text") -> DataFrame:
-        from anofox_forecast_spark.sources.pages import host_of
-
-        cols = batch.columns
-        sel = []
-        for k in self.keys:
-            if k == "host" and "host" not in cols:
-                sel.append(host_of(F.col("url")).alias("host"))
-            else:
-                sel.append(F.col(k))
-        return (
-            batch.select(
-                *sel,
-                bucket_col("warc_ts", self.tier).alias("bucket_start"),
-                F.length(text_len_col).alias("__len"),
-            )
-            .groupBy(*self.keys, "bucket_start")
-            .agg(
-                F.count("*").alias("crawl_count"),
-                F.sum("__len").alias("text_bytes"),
-            )
-            .withColumn("bucket_date", F.to_date("bucket_start"))
-        )
+    def _partials(self, batch: DataFrame) -> DataFrame:
+        return (tier_partials(project_pages(batch), self.tier)
+                .withColumn("bucket_date", F.to_date("bucket_start")))
 
     #: replay-guard depth: a partition remembers the last N batch ids that
     #: merged into it, so a crashed batch's replay is still recognized even
@@ -153,9 +131,7 @@ class IncrementalRollup:
         for aux in ("__last_batch", "__applied_log"):
             if aux in df.columns:
                 df = df.drop(aux)
-        return df.withColumn(
-            "text_bytes_avg", F.col("text_bytes") / F.col("crawl_count")
-        )
+        return df.select("*", text_bytes_avg())
 
     def ingest(self, batch: DataFrame, batch_id: str | None = None) -> dict:
         """Merge one raw pages batch into the tier table. Idempotent per
@@ -214,16 +190,13 @@ class IncrementalRollup:
             mdates = ",".join(f"'{d}'" for d in merge_dates)
             existing = scoped.filter(F.expr(f"bucket_date IN ({mdates})"))
             merged = (
-                existing.select(*self.keys, "bucket_start", "crawl_count",
+                existing.select(*KEYS, "bucket_start", "crawl_count",
                                 "text_bytes", "bucket_date")
                 .unionByName(
                     partials.filter(F.expr(f"bucket_date IN ({mdates})"))
                 )
-                .groupBy(*self.keys, "bucket_start", "bucket_date")
-                .agg(
-                    F.sum("crawl_count").alias("crawl_count"),
-                    F.sum("text_bytes").alias("text_bytes"),
-                )
+                .groupBy(*KEYS, "bucket_start", "bucket_date")
+                .agg(*merged_measures())
             )
         else:
             merged = partials
@@ -262,6 +235,7 @@ class IncrementalRollup:
             )
             .repartition("bucket_date")
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket_date")
             .parquet(self.path)
         )

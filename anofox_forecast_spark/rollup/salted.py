@@ -19,7 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from anofox_forecast_spark.rollup.tiers import bucket_col
+from anofox_forecast_spark.rollup.tiers import (
+    bucket_col,
+    merged_measures,
+    raw_measures,
+    text_bytes_avg,
+)
 
 
 def salted_rollup(
@@ -27,7 +32,8 @@ def salted_rollup(
     tier: str = "1h",
     salt_buckets: int = 16,
 ) -> DataFrame:
-    """Skew-hardened twin of ``rollup_projected`` (same output schema)."""
+    """Skew-hardened twin of ``rollup_projected``: same output schema and
+    rows, with the tier measures of ``rollup.tiers`` at both levels."""
     salted = slim.select(
         "lang",
         "host",
@@ -37,15 +43,9 @@ def salted_rollup(
             F.xxhash64("warc_ts", F.monotonically_increasing_id()), F.lit(salt_buckets)
         ).alias("__salt"),
     )
-    partial = salted.groupBy("lang", "host", "bucket_start", "__salt").agg(
-        F.count("*").alias("__n"),
-        F.sum("text_len").alias("__bytes"),
-    )
+    partial = salted.groupBy("lang", "host", "bucket_start", "__salt").agg(*raw_measures())
     return (
         partial.groupBy("lang", "host", "bucket_start")
-        .agg(
-            F.sum("__n").alias("crawl_count"),
-            F.sum("__bytes").alias("text_bytes"),
-            (F.sum("__bytes") / F.sum("__n")).alias("text_bytes_avg"),
-        )
+        .agg(*merged_measures())
+        .select("*", text_bytes_avg())
     )

@@ -17,6 +17,18 @@ as plain Catalyst hash aggregates:
   makes the tier stack cheap at 10^12 rows (the raw table is scanned once).
   Sums re-aggregate exactly; avg is recomputed as sum/count (kept as both).
 
+The tier measures are defined here and only here; the salted, incremental
+and streaming rollups group differently but call the same helpers:
+
+- ``project_pages``: page text size ``text_len`` in UTF-8 bytes
+  (``octet_length``: the string's byte length, read without decoding it as
+  ``length`` does).
+- ``raw_measures``: pages → ``crawl_count = count(*)``,
+  ``text_bytes = sum(text_len)``.
+- ``merged_measures``: partial tier rows → the same two columns, summed.
+- ``text_bytes_avg``: ``text_bytes / crawl_count``, derived from the sums
+  after every (re-)aggregation, never averaged itself.
+
 Skew: groupBy(lang, host, bucket) spreads a hot host across its buckets, so
 the aggregate itself is skew-tolerant; grouped-map forecasting over rolled-up
 series uses bounded series length per key (see models.harness).
@@ -58,52 +70,56 @@ def bucket_col(ts: Column | str, freq: str) -> Column:
     raise ValueError(f"bucket_col: unsupported calendar multiple {freq!r}")
 
 
+def raw_measures(len_col: str = "text_len") -> list[Column]:
+    """Tier measures aggregated from page rows carrying a ``text_len``."""
+    return [F.count("*").alias("crawl_count"), F.sum(len_col).alias("text_bytes")]
+
+
+def merged_measures() -> list[Column]:
+    """Tier measures re-aggregated from partial tier rows."""
+    return [F.sum("crawl_count").alias("crawl_count"),
+            F.sum("text_bytes").alias("text_bytes")]
+
+
+def text_bytes_avg() -> Column:
+    """Mean text size per page of a tier row."""
+    return (F.col("text_bytes") / F.col("crawl_count")).alias("text_bytes_avg")
+
+
 def rollup_pages(pages: DataFrame, tier: str = "1h") -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → tier table.
 
     Output: (lang, host, bucket_start, crawl_count, text_bytes,
-    text_bytes_avg). ``length(text)`` is chars == bytes for ASCII synth data;
-    byte-exactness of text itself is carried separately via sha2 lineage.
+    text_bytes_avg).
     """
-    return (
-        pages.select(
-            "lang",
-            host_of(F.col("url")).alias("host"),
-            bucket_col("warc_ts", tier).alias("bucket_start"),
-            F.length("text").alias("__text_len"),
-        )
-        .groupBy("lang", "host", "bucket_start")
-        .agg(
-            F.count("*").alias("crawl_count"),
-            F.sum("__text_len").alias("text_bytes"),
-            (F.sum("__text_len") / F.count("*")).alias("text_bytes_avg"),
-        )
-    )
+    return rollup_projected(project_pages(pages), tier)
 
 
 def project_pages(pages: DataFrame) -> DataFrame:
     """Column-prune pages to the rollup inputs: (lang, host, warc_ts,
-    text_len). At 100 TB this is the difference between shuffling/caching
-    terabytes of html/text payload and a few GB of keys+lengths — do it
-    BEFORE any persist or shuffle."""
+    text_len), with text_len in UTF-8 bytes. At 100 TB this is the
+    difference between shuffling/caching terabytes of html/text payload and
+    a few GB of keys+lengths — do it BEFORE any persist or shuffle."""
     return pages.select(
         "lang",
         host_of(F.col("url")).alias("host"),
         "warc_ts",
-        F.length("text").alias("text_len"),
+        F.octet_length("text").alias("text_len"),
+    )
+
+
+def tier_partials(slim: DataFrame, tier: str = "1h") -> DataFrame:
+    """(lang, host, bucket_start, crawl_count, text_bytes) over a
+    ``project_pages`` frame: the tier rollup without its derived average."""
+    return (
+        slim.groupBy("lang", "host", bucket_col("warc_ts", tier).alias("bucket_start"))
+        .agg(*raw_measures())
     )
 
 
 def rollup_projected(slim: DataFrame, tier: str = "1h") -> DataFrame:
     """Tier rollup over a ``project_pages`` frame."""
-    return (
-        slim.groupBy("lang", "host", bucket_col("warc_ts", tier).alias("bucket_start"))
-        .agg(
-            F.count("*").alias("crawl_count"),
-            F.sum("text_len").alias("text_bytes"),
-            (F.sum("text_len") / F.count("*")).alias("text_bytes_avg"),
-        )
-    )
+    return tier_partials(slim, tier).select("*", text_bytes_avg())
 
 
 def cascade_rollup(tier_df: DataFrame, to_tier: str, keys: Sequence[str] = ("lang", "host")) -> DataFrame:
@@ -116,11 +132,8 @@ def cascade_rollup(tier_df: DataFrame, to_tier: str, keys: Sequence[str] = ("lan
             "text_bytes",
         )
         .groupBy(*keys, "bucket_start")
-        .agg(
-            F.sum("crawl_count").alias("crawl_count"),
-            F.sum("text_bytes").alias("text_bytes"),
-            (F.sum("text_bytes") / F.sum("crawl_count")).alias("text_bytes_avg"),
-        )
+        .agg(*merged_measures())
+        .select("*", text_bytes_avg())
     )
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from anofox_forecast_spark.core.frequency import parse_frequency
-from anofox_forecast_spark.sources.pages import host_of
+from anofox_forecast_spark.rollup.tiers import project_pages, raw_measures, text_bytes_avg
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -33,30 +33,21 @@ def streaming_rollup(
 ) -> DataFrame:
     """Tumbling event-time window aggregate over a pages stream.
 
-    Output schema matches rollup_pages: (lang, host, bucket_start,
-    crawl_count, text_bytes, text_bytes_avg).
+    Output: the ``rollup_pages`` tier table (lang, host, bucket_start,
+    crawl_count, text_bytes, text_bytes_avg), with the measures of
+    ``rollup.tiers`` grouped by window instead of bucket.
     """
     f = parse_frequency(tier)
     if f.kind != "duration":
         raise ValueError("streaming tiers require duration frequencies")
     win = F.window(F.col("warc_ts"), f.window_duration())
     return (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .select(
-            "lang",
-            host_of(F.col("url")).alias("host"),
-            F.col("warc_ts"),
-            F.length("text").alias("__len"),
-        )
+        project_pages(pages_stream.withWatermark("warc_ts", watermark))
         .groupBy("lang", "host", win)
-        .agg(
-            F.count("*").alias("crawl_count"),
-            F.sum("__len").alias("text_bytes"),
-            (F.sum("__len") / F.count("*")).alias("text_bytes_avg"),
-        )
+        .agg(*raw_measures())
         .select(
             "lang", "host",
             F.col("window.start").alias("bucket_start"),
-            "crawl_count", "text_bytes", "text_bytes_avg",
+            "crawl_count", "text_bytes", text_bytes_avg(),
         )
     )

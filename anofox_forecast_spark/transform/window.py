@@ -92,50 +92,23 @@ def ewm_mean(
     alpha: float,
     out_col: str | None = None,
 ) -> DataFrame:
-    """Reference EWM recursion per series (ref window.rs:227-244).
-
-    mapInPandas over key-sorted partitions (same batched pattern as the
-    forecast harness — no per-series Arrow exchange).
+    """Reference EWM recursion per series (ref window.rs:227-244), in the
+    shared batched per-series pattern (``models.harness.batched_series_apply``).
     """
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from anofox_forecast_spark.models.harness import _last_key_mask, kernel_partitions
+    from anofox_forecast_spark.models.harness import batched_series_apply
 
     out_col = out_col or f"{value_col}_ewm"
-    keys_l = list(keys)
+    cols = df.columns
     out_schema = StructType(list(df.schema.fields) + [StructField(out_col, DoubleType())])
 
-    def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            mask = _last_key_mask(pdf, keys_l)
-            carry = pdf.iloc[mask.nonzero()[0]]
-            body = pdf.iloc[(~mask).nonzero()[0]]
-            if len(body):
-                yield _ewm_batch(body, keys_l, value_col, out_col, alpha)
-        if carry is not None and len(carry):
-            yield _ewm_batch(carry, keys_l, value_col, out_col, alpha)
+    def per_series(g: pd.DataFrame, out: dict) -> None:
+        for c in cols:
+            out[c].append(g[c].to_numpy())
+        out[out_col].append(ewm_mean_np(g[value_col].to_numpy(dtype=np.float64), alpha))
 
-    prepared = (df.repartition(kernel_partitions(df), *keys_l)
-                .sortWithinPartitions(*keys_l, ts_col))
-    return prepared.mapInPandas(run, schema=out_schema)
-
-
-def _ewm_batch(body: pd.DataFrame, keys_l, value_col, out_col, alpha) -> pd.DataFrame:
-    outs = np.empty(len(body))
-    pos = 0
-    for _, g in body.groupby(keys_l, sort=False, dropna=False):
-        y = g[value_col].to_numpy(dtype=np.float64)
-        e = ewm_mean_np(y, alpha)
-        outs[pos : pos + y.size] = e
-        pos += y.size
-    body = body.copy()
-    body[out_col] = outs
-    return body
+    return batched_series_apply(df, keys, ts_col, per_series, out_schema)
 
 
 def ewm_mean_np(y: np.ndarray, alpha: float) -> np.ndarray:

@@ -149,6 +149,41 @@ def test_extract_features_spark(spark):
     assert abs(pdf.loc["a", "abs_energy"] - (ya**2).sum()) < 1e-6
 
 
+
+def test_null_key_series_survive_batch_splits(spark):
+    """A NULL-key series is a real series: with Arrow batches far smaller
+    than one series, extract_features still returns exactly one row for it
+    and ewm_mean keeps every one of its rows."""
+    import datetime as dt
+
+    from anofox_forecast_spark.features import extract_features
+    from anofox_forecast_spark.transform import ewm_mean
+    from anofox_forecast_spark.transform.window import ewm_mean_np
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(sid, t0 + dt.timedelta(hours=i), float(i % 7) + (sid is None))
+            for sid in ("a", None, "b") for i in range(40)]
+    df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        feats = extract_features(df, ["sid"], "ts", "y", features=["mean", "length"]).toPandas()
+        ewm = ewm_mean(df, ["sid"], "ts", "y", alpha=0.5).toPandas()
+    finally:
+        spark.conf.set(key, old)
+    assert len(feats) == 3
+    null_feats = feats[feats["sid"].isna()]
+    y_null = np.array([r[2] for r in rows if r[0] is None])
+    assert len(null_feats) == 1
+    assert null_feats["length"].iloc[0] == 40
+    assert abs(null_feats["mean"].iloc[0] - y_null.mean()) < 1e-12
+    assert len(ewm) == len(rows)
+    null_ewm = ewm[ewm["sid"].isna()].sort_values("ts")
+    assert len(null_ewm) == 40
+    assert np.allclose(null_ewm["y_ewm"].to_numpy(), ewm_mean_np(y_null, 0.5))
+
+
 def test_rolling_expanding_ewm_spark(spark):
     import datetime as dt
 

@@ -16,7 +16,8 @@ def _checksum(df, cols):
     return df.agg(F.bit_xor(F.xxhash64(*cols))).collect()[0][0]
 
 
-def test_incremental_equals_from_scratch(spark, tmp_path):
+def test_incremental_equals_from_scratch(spark, tmp_path, non_ascii_pages):
+    non_ascii, check_non_ascii = non_ascii_pages
     pages = synthesize_pages(spark, n_pages=8000, n_hosts=10, weeks=2).cache()
     # split by hash into three arrival batches, deliberately NOT time-ordered
     # (each batch spans the whole range → every batch has "late" rows)
@@ -28,15 +29,17 @@ def test_incremental_equals_from_scratch(spark, tmp_path):
     r1 = inc.ingest(b1, "batch-1")
     r2 = inc.ingest(b2, "batch-2")
     r3 = inc.ingest(b3, "batch-3")
-    assert not r1["skipped"] and not r2["skipped"] and not r3["skipped"]
+    r4 = inc.ingest(non_ascii, "batch-4")  # merges into batch 1-3 dates
+    assert not any(r["skipped"] for r in (r1, r2, r3, r4))
 
     got = inc.read().select("lang", "host", "bucket_start", "crawl_count", "text_bytes")
-    want = rollup_pages(pages, "1h").select(
+    want = rollup_pages(pages.unionByName(non_ascii), "1h").select(
         "lang", "host", "bucket_start", "crawl_count", "text_bytes"
     )
     assert got.count() == want.count()
     cols = ["lang", "host", "bucket_start", "crawl_count", "text_bytes"]
     assert _checksum(got, cols) == _checksum(want, cols)
+    check_non_ascii(got)
 
 
 def test_ingest_idempotent(spark, tmp_path):
@@ -49,6 +52,26 @@ def test_ingest_idempotent(spark, tmp_path):
     after = inc.read().agg(F.sum("crawl_count")).collect()[0][0]
     assert before == after == pages.count()
 
+
+
+def test_ingest_leaves_session_overwrite_mode_alone(spark, tmp_path):
+    """Dynamic partition overwrite is an option of the tier write, not a
+    session setting: the session keeps static mode, and a second batch
+    over other dates still keeps the first batch's partitions."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        pages = synthesize_pages(spark, n_pages=2000, n_hosts=5, weeks=2).cache()
+        first_week = F.col("warc_ts") < F.lit("2024-01-08").cast("timestamp")
+        inc = IncrementalRollup(spark, str(tmp_path / "agg"), "1d")
+        inc.ingest(pages.filter(first_week), "b1")
+        inc.ingest(pages.filter(~first_week), "b2")
+        assert spark.conf.get(key) == "static"
+        total = inc.read().agg(F.sum("crawl_count")).collect()[0][0]
+    finally:
+        spark.conf.set(key, old)
+    assert total == pages.count()
 
 def test_retention_drops_old_partitions(spark, tmp_path):
     pages = synthesize_pages(spark, n_pages=4000, n_hosts=5, weeks=3).cache()

@@ -82,16 +82,19 @@ def test_pages_text_byte_identity(spark):
     assert bad == 0
 
 
-def test_salted_rollup_equals_plain(spark):
+def test_salted_rollup_equals_plain(spark, non_ascii_pages):
     from anofox_forecast_spark.rollup.salted import salted_rollup
     from anofox_forecast_spark.rollup.tiers import project_pages, rollup_projected
 
-    pages = synthesize_pages(spark, n_pages=6000, n_hosts=5, weeks=1)
-    slim = project_pages(pages)
-    plain = rollup_projected(slim, "1h")
-    salted = salted_rollup(slim, "1h", salt_buckets=8)
-    cols = ["lang", "host", "bucket_start", "crawl_count", "text_bytes"]
-    assert plain.count() == salted.count()
-    a = plain.agg(F.bit_xor(F.xxhash64(*cols))).collect()[0][0]
-    b = salted.agg(F.bit_xor(F.xxhash64(*cols))).collect()[0][0]
-    assert a == b
+    non_ascii, check_non_ascii = non_ascii_pages
+    for pages in (synthesize_pages(spark, n_pages=6000, n_hosts=5, weeks=1), non_ascii):
+        slim = project_pages(pages)
+        plain = rollup_projected(slim, "1h")
+        salted = salted_rollup(slim, "1h", salt_buckets=8)
+        cols = ["lang", "host", "bucket_start", "crawl_count", "text_bytes"]
+        assert plain.count() == salted.count()
+        a = plain.agg(F.bit_xor(F.xxhash64(*cols))).collect()[0][0]
+        b = salted.agg(F.bit_xor(F.xxhash64(*cols))).collect()[0][0]
+        assert a == b
+    check_non_ascii(plain)
+    check_non_ascii(salted)

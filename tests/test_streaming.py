@@ -10,8 +10,9 @@ from anofox_forecast_spark.streaming import streaming_rollup
 from anofox_forecast_spark.streaming.rollup_stream import PAGES_DDL
 
 
-def test_streaming_rollup_matches_batch(spark, tmp_path):
-    pages = synthesize_pages(spark, n_pages=3000, n_hosts=5, weeks=1)
+def test_streaming_rollup_matches_batch(spark, tmp_path, non_ascii_pages):
+    non_ascii, check_non_ascii = non_ascii_pages
+    pages = synthesize_pages(spark, n_pages=3000, n_hosts=5, weeks=1).unionByName(non_ascii)
     src = str(tmp_path / "pages_stream")
     pages.write.parquet(src)
 
@@ -35,6 +36,7 @@ def test_streaming_rollup_matches_batch(spark, tmp_path):
     ga = got.agg(F.bit_xor(F.xxhash64(*cols))).collect()[0][0]
     wa = want.agg(F.bit_xor(F.xxhash64(*cols))).collect()[0][0]
     assert ga == wa
+    check_non_ascii(got)
 
 
 def test_stateful_ses_level_matches_batch_kernel(spark, tmp_path):
