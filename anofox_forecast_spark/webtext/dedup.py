@@ -898,7 +898,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iters: int = 50,
-    method: str = "label",
 ) -> DataFrame:
     """Near-dup pairs → canonical duplicate GROUPS: (id, component) where
     component = min id reachable in the pair graph.
@@ -907,56 +906,60 @@ def connected_components(
     lists (minhash/simhash/ngram/embedding) must collapse into groups so
     one survivor per group can be kept.
 
-    ``method='label'`` (default): min-label propagation — each iteration
-    every node takes the min label among itself and its neighbors;
-    converges in graph-DIAMETER iterations (near-dup components are
-    cliquey, diameter ~2-4, so this is the cheap path for dedup graphs).
-    Per iteration: one join + one groupBy shuffle over the EDGE list and a
-    lazy localCheckpoint to truncate lineage (else the plan doubles per
-    iteration); the bounded driver action (the convergence count) runs
-    every SECOND iteration, so two rounds share one job barrier.
+    Min-label propagation with pointer jumping: each iteration every node
+    takes the min of its label, its neighbors' labels and its label's own
+    label, so label reach doubles per round and a path of diameter d
+    converges in O(log d) rounds (near-dup components are cliquey,
+    diameter ~2-4, and need a handful). Per iteration: one exchange of
+    the node-sized label lookups (the edge list is cached partitioned by
+    source and never re-shuffled), one groupBy exchange of the
+    edge-sized label offers, and a lazy localCheckpoint to truncate
+    lineage (else the plan doubles per iteration); the bounded driver
+    action (the convergence count) runs every SECOND iteration, so two
+    rounds share one job barrier.
 
-    ``method='star'``: the alternating large-star/small-star algorithm
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public paper): converges in O(log n) rounds on ANY graph,
-    including long chains/paths where label propagation needs diameter
-    rounds — the swap for graphs that are not cliquey (e.g. chained
-    near-dup transitivity at loose thresholds).
+    Loop sizing is per frame: every exchange of the loop runs at
+    ``max(1, min(spark.sql.shuffle.partitions, n_edges // 50_000 + 1))``
+    partitions through explicit repartitions of the loop's own frames.
+    Session conf is read, never set, so queries sharing the session are
+    unaffected.
 
     Only ids appearing in ≥1 pair are labeled (singletons are trivially
     their own component). No reference counterpart (driver-prompt
     training-pipeline operator).
     """
-    if method == "star":
-        return _cc_alternating(pairs, src, dst, max_iters)
-    if method != "label":
-        raise ValueError(f"unknown method {method!r} (label|star)")
-    edges = pairs.select(
+    both_ways = pairs.select(
         F.col(src).alias("s"), F.col(dst).alias("d")
     ).union(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d"))).persist()
-    # try/finally so the edge cache is released on EVERY exit path —
+    edges = both_ways
+    # try/finally so the edge caches are released on EVERY exit path —
     # including the non-convergence raise (ADVICE r4: the error path
     # leaked the persisted edges)
-    spark = pairs.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         # SCALE-ADAPTIVE loop partitioning (guide §2: derive partitioning
         # from input size, don't inherit a constant): dedup pair lists are
         # usually tiny relative to the corpus (33k edges in the bench's
-        # semantic stage), and every one of the ~14 rounds pays 3-4
-        # exchanges whose task count otherwise comes from the session-wide
-        # shuffle setting — measured 8.1 s → 5.0 s for the identical loop
-        # at 33k edges just by sizing the loop's exchanges to the data.
-        # Target ~50k edges per partition (tens of ms of join work per
-        # task — a first cut at 1M/partition collapsed a 410k-edge graph
-        # onto ONE partition and measured SLOWER at 8 cores than the
-        # session default, 12.3 s vs 7.1 s: the loop serialized), CAPPED
-        # at the session setting so big edge lists keep their full
-        # parallelism — behavior at cluster scale is unchanged. Restored
-        # in the finally: below.
-        n_edges = edges.count()
-        n_parts = max(1, min(int(old_parts), n_edges // 50_000 + 1))
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        # semantic stage), and every round's exchanges would otherwise
+        # take their task count from the session-wide shuffle setting —
+        # measured 8.1 s → 5.0 s for the identical loop at 33k edges just
+        # by sizing the loop's exchanges to the data. Target ~50k edges
+        # per partition (tens of ms of work per task — a first cut at
+        # 1M/partition collapsed a 410k-edge graph onto ONE partition and
+        # measured SLOWER at 8 cores than the session default, 12.3 s vs
+        # 7.1 s: the loop serialized), CAPPED at the session setting so
+        # big edge lists keep their full parallelism — behavior at
+        # cluster scale is unchanged.
+        session_parts = int(
+            pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n_parts = max(1, min(session_parts, both_ways.count() // 50_000 + 1))
+        # Each frame repartitioned to n_parts feeds ONE window or
+        # aggregate, which keeps that partitioning. A join would not: when
+        # both of its inputs are shuffles, the planner re-plans them at
+        # the session count (localCheckpoint output carries no
+        # partitioning, so every loop join input would be a shuffle).
+        # The planner reads the cached partitioning of the edges, so no
+        # round re-shuffles them.
+        edges = both_ways.repartition(n_parts, "s").persist()
         # LAZY checkpoints: the convergence count is the only action per
         # iteration and it materializes the new label table as a side
         # effect — ONE job per iteration instead of two (eager checkpoint
@@ -967,39 +970,39 @@ def connected_components(
             .withColumn("label", F.col("id"))
             .localCheckpoint(eager=False)
         )
+        no_label = F.lit(None).cast("long")
         for _it in range(max_iters):
-            propagated = (
-                edges.join(labels.withColumnRenamed("id", "s"), "s")
-                .select(F.col("d").alias("id"), "label",
-                        F.lit(None).cast("long").alias("__old"))
-            )
-            # pointer-jumping term (r6): also offer every node its
-            # label's OWN label — labels stay reachable (label(id) is
-            # reachable from id, so label(label(id)) is too), and label
-            # reach DOUBLES per round instead of moving one hop, turning
-            # diameter rounds into O(log diameter) rounds (measured on
-            # the bench's chain-shaped cosine-cell graph: 17 → 14 rounds
-            # at depth ≲ 400; the gap widens with diameter). Fewer rounds
-            # means fewer of the per-round driver barriers VERDICT r5
-            # flagged as the scale watch-item at 100-TB edge lists; the
-            # jump join itself touches only the node-sized label table.
-            jumped = (
-                labels.alias("x")
-                .join(labels.select(F.col("id").alias("label"),
-                                    F.col("label").alias("__l2")).alias("y"),
-                      "label")
-                .select(F.col("x.id").alias("id"),
-                        F.col("__l2").alias("label"),
-                        F.lit(None).cast("long").alias("__old"))
+            # every node is offered its neighbors' labels (edge s→d offers
+            # label(s) to d) and its label's own label — pointer jumping
+            # (r6): labels stay reachable (label(id) is reachable from id,
+            # so label(label(id)) is too), and label reach DOUBLES per
+            # round instead of moving one hop, turning diameter rounds
+            # into O(log diameter) rounds (measured on the bench's
+            # chain-shaped cosine-cell graph: 17 → 14 rounds at depth
+            # ≲ 400). Both offers are lookups of label(k): the label row
+            # of k carries it, the asking rows carry NULL, and a window
+            # min over k hands it to them.
+            asks = (
+                labels.select(F.col("id").alias("k"), no_label.alias("to"), "label")
+                .unionByName(labels.select(F.col("label").alias("k"),
+                                           F.col("id").alias("to"),
+                                           no_label.alias("label")))
+                .repartition(n_parts, "k")
+            ).unionByName(edges.select(F.col("s").alias("k"), F.col("d").alias("to"),
+                                       no_label.alias("label")))
+            offers = (
+                asks.select("to", F.min("label").over(Window.partitionBy("k"))
+                            .alias("label"))
+                .filter(F.col("to").isNotNull())
+                .select(F.col("to").alias("id"), "label", no_label.alias("__old"))
             )
             # the previous label rides the SAME aggregation as a second
-            # min (null on propagated rows, so min == the old label) —
+            # min (null on offered rows, so min == the old label) —
             # the convergence count then reads new vs old off one frame
-            # instead of a third join per iteration
+            # instead of a join per iteration
             new_labels = (
-                labels.withColumn("__old", F.col("label"))
-                .unionByName(propagated)
-                .unionByName(jumped)
+                labels.withColumn("__old", F.col("label")).unionByName(offers)
+                .repartition(n_parts, "id")
                 .groupBy("id")
                 .agg(F.min("label").alias("label"), F.min("__old").alias("__old"))
                 .localCheckpoint(eager=False)
@@ -1018,6 +1021,9 @@ def connected_components(
             if _it % 2 == 0 and _it != max_iters - 1:
                 continue
             changed = new_labels.filter(F.col("label") < F.col("__old")).count()
+            # the first count filled the partitioned edge cache from the
+            # unpartitioned one, which is no longer read
+            both_ways.unpersist()
             if changed == 0:
                 break
         else:
@@ -1028,102 +1034,8 @@ def connected_components(
         # edge cache is safe to drop before returning
         return labels.select("id", F.col("label").alias("component"))
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        both_ways.unpersist()
         edges.unpersist()
-
-
-def _cc_alternating(
-    pairs: DataFrame, src: str, dst: str, max_iters: int
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.
-    SoCC'14). Each round transforms the undirected edge set:
-
-    - large-star: every node u links each LARGER neighbor (v > u) to
-      m(u) = min(Γ(u) ∪ {u});
-    - small-star: every node u links each smaller-or-equal neighbor and
-      itself to m(u).
-
-    Both preserve connectivity; alternating them contracts every
-    component into a star centered at its minimum in O(log n) rounds.
-    Per phase: one groupBy (neighbor min) + one co-partitioned join +
-    one distinct — three shuffles over an edge list that SHRINKS toward
-    one edge per non-center node. Convergence = canonical edge set
-    stable (count + order-insensitive xxhash checksum in one action).
-    """
-    ids = (
-        pairs.select(F.col(src).alias("id"))
-        .union(pairs.select(F.col(dst).alias("id")))
-        .distinct()
-    )
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    def checksum(e: DataFrame):
-        row = (
-            e.select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))
-            .distinct()
-            .agg(F.count("*").alias("n"), F.bit_xor(F.xxhash64("a", "b")).alias("h"))
-            .collect()[0]
-        )
-        return row["n"], row["h"]
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        m = (
-            e.groupBy("u")
-            .agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        )
-        joined = e.join(m, "u")
-        if large:
-            out = joined.filter(F.col("v") > F.col("u")).select(
-                F.col("v").alias("u"), F.col("m").alias("v"))
-        else:
-            out = joined.filter(F.col("v") <= F.col("u")).select(
-                F.col("v").alias("u"), F.col("m").alias("v"))
-            out = out.unionByName(m.select(F.col("u"), F.col("m").alias("v")))
-        # re-symmetrize for the next phase's neighbor scans
-        sym = out.filter(F.col("u") != F.col("v"))
-        return (
-            sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-
-    prev = checksum(edges)
-    # same scale-adaptive loop partitioning as the label path (guide §2):
-    # star rounds run 6 exchanges each, and the edge list SHRINKS toward
-    # one edge per node — size the loop's exchanges to the measured edge
-    # count (the initial checksum already counted it; ~50k edges per
-    # partition), capped at the session setting so cluster-scale
-    # behavior is unchanged
-    spark = pairs.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        n_parts = max(1, min(int(old_parts), prev[0] // 50_000 + 1))
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        for _ in range(max_iters):
-            edges = star(star(edges, large=True), large=False)
-            cur = checksum(edges)
-            if cur == prev:
-                break
-            prev = cur
-        else:
-            raise RuntimeError(
-                f"connected_components(star): no convergence in {max_iters} rounds"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    # converged: each component is a star centered at its minimum —
-    # a node's component is its smallest neighbor (or itself for centers)
-    labels = edges.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("component"))
-    return (
-        ids.join(labels.withColumnRenamed("u", "id"), "id", "left")
-        .withColumn("component", F.coalesce("component", F.col("id")))
-    )
 
 
 def canonical_docs(

@@ -136,6 +136,15 @@ def lsh_cosine_topk(
         # disjoint buckets → near-zero recall with no error (ADVICE r4);
         # hyperplane_buckets stamps its parameters on the bucket(s) column
         bcol = "buckets" if "buckets" in cb.columns else "bucket"
+        # an index from before the packed int64 keys ("table:sig"
+        # strings) passes the parameter check but matches no probed key,
+        # so the top-k comes back empty with no error
+        key_type = cb.schema[bcol].dataType.simpleString()
+        want_type = "array<bigint>" if bcol == "buckets" else "bigint"
+        if key_type != want_type:
+            raise ValueError(
+                f"corpus_index {bcol!r} column is {key_type}, expected "
+                f"{want_type} packed keys — rebuild with hyperplane_buckets")
         got = dict(cb.schema[bcol].metadata or {})
         want = {"n_planes": n_planes, "n_tables": n_tables,
                 "dim": dim, "seed": seed}
@@ -200,6 +209,7 @@ def _query_buckets_local(q_pdf, n_planes: int, n_tables: int, dim: int,
     encoding, same 1-bit multiprobe flips) over a collected query batch —
     one numpy matmul instead of a Spark job. Returns a pandas frame
     (q_id, q_vec, bucket), one row per probed bucket."""
+    _check_key_width(n_planes, n_tables)
     rng = np.random.default_rng(seed)
     flat = rng.normal(size=(n_tables, n_planes, dim)).reshape(
         n_tables * n_planes, dim)
@@ -228,6 +238,16 @@ def _query_buckets_local(q_pdf, n_planes: int, n_tables: int, dim: int,
     })
     out["q_vec"] = rows["q_vec"].to_numpy() if len(rows) else []
     return out
+
+
+def _check_key_width(n_planes: int, n_tables: int) -> None:
+    """Packed keys ``(table << n_planes) | sig`` must fit a signed int64;
+    wider ones wrap in numpy, so keys of different tables can collide
+    with no error."""
+    bits = n_planes + (n_tables - 1).bit_length()
+    if bits > 63:
+        raise ValueError(f"n_planes={n_planes} with n_tables={n_tables} "
+                         f"needs {bits} bits; packed bucket keys hold 63")
 
 
 def _topk_finish(scored: DataFrame, k: int, dedup: bool = True) -> DataFrame:
@@ -512,7 +532,9 @@ def hyperplane_buckets(
     than the matmul (measured in bench.py's wx_ann stage; same reason IVF
     assigns cells in numpy). ``probe=1`` additionally emits, per table,
     the n_planes 1-bit-flipped neighbor buckets (query-side multiprobe).
+    Raises ValueError when ``n_planes + bit_length(n_tables - 1) > 63``.
     """
+    _check_key_width(n_planes, n_tables)
     rng = np.random.default_rng(seed)
     planes = rng.normal(size=(n_tables, n_planes, dim))
     flat = planes.reshape(n_tables * n_planes, dim)

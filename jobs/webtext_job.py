@@ -24,7 +24,7 @@ and the post-threshold survivor shuffle + cross-table dedup is actually
 measured (VERDICT r4: the previous iid corpus produced emb_pairs=0 at
 both core counts — the stage's scaling number covered only candidate
 generation). The components stage runs min-label propagation on the
-(persisted) minhash pair output — the per-iteration join+groupBy chain
+(persisted) minhash pair output — the per-iteration window+groupBy chain
 whose driver-side convergence count is the likeliest degradation at
 big edge lists.
 
@@ -125,14 +125,6 @@ def main() -> None:
 
     def stage_components():
         return checksum_count(connected_components(state["pairs"]))
-
-    def stage_components_star():
-        # the alternating large-star/small-star algorithm on the SAME
-        # materialized pair list as the label-prop stage (VERDICT r5
-        # "next round" #2: star had no scaling evidence) — O(log n)
-        # rounds on any graph shape; candidate large-graph default
-        return checksum_count(
-            connected_components(state["pairs"], method="star"))
 
     def stage_simhash():
         return checksum_count(simhash_near_dups(docs, "doc_id", "text", max_hamming=3))
@@ -294,13 +286,10 @@ def main() -> None:
         def want(name):
             return todo is None or name in todo
 
-        if want("minhash_lsh") or want("components") or want("components_star"):
+        if want("minhash_lsh") or want("components"):
             counts["minhash_pairs"] = timed("minhash_lsh", stage_minhash)
             if want("components"):
                 counts["component_rows"] = timed("components", stage_components)
-            if want("components_star"):
-                counts["component_star_rows"] = timed(
-                    "components_star", stage_components_star)
             state.pop("pairs").unpersist()
         if want("simhash_k3"):
             counts["simhash_pairs"] = timed("simhash_k3", stage_simhash)

@@ -126,9 +126,27 @@ def test_iter_bucket_groups_carry():
     assert list(_iter_bucket_groups(iter([pd.DataFrame({"bucket": [], "id": []})]))) == []
 
 
+def _union_find_components(edges):
+    """Reference labels: id -> min id of its component (union by min root)."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
 def test_connected_components(spark):
     """Pairs -> duplicate groups: chain (diameter 4, needs iterations),
-    a separate 2-clique, and symmetric input order."""
+    a separate 2-clique, and symmetric input order; a 120-edge path
+    within 12 rounds (pointer jumping); a seeded random graph against a
+    union-find reference."""
     from anofox_forecast_spark.webtext.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -139,6 +157,20 @@ def test_connected_components(spark):
         connected_components(pairs).orderBy("id").toPandas().itertuples(index=False)
     )
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+
+    # 121-node path: diameter 120, more than max_iters one-hop rounds
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(120)], "id_a long, id_b long"
+    )
+    got = connected_components(chain, max_iters=12).toPandas()
+    assert (got["component"] == 0).all() and len(got) == 121
+
+    rng = np.random.default_rng(3)
+    edges = [(int(a), int(b)) for a, b in rng.integers(0, 60, size=(80, 2))
+             if a != b]
+    rdf = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = dict(connected_components(rdf).toPandas().itertuples(index=False))
+    assert got == _union_find_components(edges)
 
 
 def test_minhash_estimator_unbiased(spark):
@@ -582,13 +614,17 @@ def test_asof_join_semantics(spark):
     assert out[("b", 3)] is None        # right row at ts=4 is in the future
 
 
-def test_webtext_ops_leave_cache_empty(spark):
+def test_webtext_ops_leave_cache_empty(spark, monkeypatch):
     """The signature-table materializations must not accumulate catalog
     cache entries across calls (ADVICE/VERDICT r4: persist() without
     unpersist leaked one cached table per call). minhash/simhash now use
     eager localCheckpoint (catalog-free, ContextCleaner-released);
     connected_components releases its edge cache in a finally block —
-    including on the non-convergence error path."""
+    including on the non-convergence error path — and sizes its loop
+    without setting session conf, which other queries sharing the
+    session would see."""
+    from pyspark.sql.conf import RuntimeConfig
+
     from anofox_forecast_spark.webtext.dedup import connected_components
 
     spark.catalog.clearCache()
@@ -597,8 +633,18 @@ def test_webtext_ops_leave_cache_empty(spark):
     minhash_lsh_candidates(docs, "doc_id", "text", n_hashes=32, bands=8).count()
     simhash_near_dups(docs, "doc_id", "text", max_hamming=3).count()
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.2)
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    conf_sets = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        conf_sets.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
     connected_components(pairs).count()
     assert cache_mgr.isEmpty(), "webtext op left a cached table behind"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
     # error path: a chain of diameter 4 cannot converge in 1 iteration
     chain = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
@@ -608,6 +654,8 @@ def test_webtext_ops_leave_cache_empty(spark):
     with pytest.raises(RuntimeError, match="no convergence"):
         connected_components(chain, max_iters=1)
     assert cache_mgr.isEmpty(), "non-convergence path leaked the edge cache"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert conf_sets == [], "connected_components set session conf"
 
 
 def test_lsh_index_param_mismatch_raises(spark):
@@ -633,6 +681,54 @@ def test_lsh_index_param_mismatch_raises(spark):
     ok = lsh_cosine_topk(emb, queries, k=3, n_planes=4, n_tables=2, dim=8,
                          seed=1, corpus_index=idx)
     assert ok.count() >= 0
+    # an index with the pre-int64 "table:sig" string keys and correct
+    # parameter metadata matches no probed key: rejected, not empty
+    meta = idx.schema["bucket"].metadata
+    stale = idx.withColumn(
+        "bucket",
+        F.concat_ws(":", F.shiftright("bucket", 4).cast("string"),
+                    F.col("bucket").bitwiseAND(15).cast("string")),
+    ).withMetadata("bucket", meta)
+    with pytest.raises(ValueError, match="packed keys"):
+        lsh_cosine_topk(emb, queries, k=3, n_planes=4, n_tables=2, dim=8,
+                        seed=1, corpus_index=stale)
+    grouped = hyperplane_buckets(emb, "vec_id", "embedding", "c",
+                                 n_planes=4, n_tables=2, dim=8, seed=1,
+                                 with_vec=True, grouped=True)
+    stale = grouped.withColumn(
+        "buckets", F.transform("buckets", lambda b: b.cast("string"))
+    ).withMetadata("buckets", grouped.schema["buckets"].metadata)
+    with pytest.raises(ValueError, match="packed keys"):
+        lsh_cosine_topk(emb, queries, k=3, n_planes=4, n_tables=2, dim=8,
+                        seed=1, corpus_index=stale)
+
+
+def test_packed_bucket_key_overflow_raises(spark):
+    """``(table << n_planes) | sig`` must fit 63 bits: wider parameters
+    raise instead of wrapping into colliding keys."""
+    import pandas as pd
+    import pytest
+
+    from anofox_forecast_spark.webtext.similarity import (
+        _query_buckets_local,
+        hyperplane_buckets,
+    )
+
+    emb = spark.createDataFrame([(0, [1.0, 0.0])],
+                                "vec_id long, embedding array<double>")
+    q = pd.DataFrame({"q_id": [0], "q_vec": [[1.0, 0.0]]})
+    for n_planes, n_tables in [(60, 16), (63, 2), (64, 1)]:
+        with pytest.raises(ValueError, match="63"):
+            hyperplane_buckets(emb, "vec_id", "embedding", "c",
+                               n_planes=n_planes, n_tables=n_tables, dim=2)
+        with pytest.raises(ValueError, match="63"):
+            _query_buckets_local(q, n_planes=n_planes, n_tables=n_tables,
+                                 dim=2, seed=1, probe=0)
+    # 59 + bit_length(15) = 63 bits still fits
+    hyperplane_buckets(emb, "vec_id", "embedding", "c", n_planes=59,
+                       n_tables=16, dim=2)
+    assert len(_query_buckets_local(q, n_planes=59, n_tables=16, dim=2,
+                                    seed=1, probe=0)) == 16
 
 
 def test_repetition_stats(spark):
@@ -747,41 +843,6 @@ def test_lsh_probe_index_parity(spark):
         assert got[["query_id", "neighbor_id", "rank"]].values.tolist() == \
             base[["query_id", "neighbor_id", "rank"]].values.tolist(), \
             f"probe path (grouped={grouped}) diverged from one-shot path"
-
-
-def test_connected_components_star(spark):
-    """Alternating large-star/small-star CC: matches label propagation on
-    cliquey graphs AND handles a 120-node chain in O(log n) rounds where
-    label propagation would need ~diameter iterations."""
-    from anofox_forecast_spark.webtext.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (11, 10), (20, 21), (21, 20)],
-        "id_a long, id_b long",
-    )
-    out = dict(
-        connected_components(pairs, method="star")
-        .orderBy("id").toPandas().itertuples(index=False)
-    )
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 20: 20, 21: 20}
-
-    # 120-node path: diameter 119, label prop would exceed max_iters=12
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(120)], "id_a long, id_b long"
-    )
-    got = connected_components(chain, method="star", max_iters=12).toPandas()
-    assert (got["component"] == 0).all() and len(got) == 121
-
-    # random graph: star output == label output
-    rng = np.random.default_rng(3)
-    edges = [(int(a), int(b)) for a, b in rng.integers(0, 60, size=(80, 2))
-             if a != b]
-    rdf = spark.createDataFrame(edges, "id_a long, id_b long")
-    lab = dict(connected_components(rdf, method="label")
-               .toPandas().itertuples(index=False))
-    st = dict(connected_components(rdf, method="star")
-              .toPandas().itertuples(index=False))
-    assert lab == st
 
 
 def test_ivf_probe_index_parity(spark):
