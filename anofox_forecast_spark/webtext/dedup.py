@@ -1133,28 +1133,15 @@ def semantic_dedup(
     """
     from anofox_forecast_spark.webtext.similarity import (
         _inbucket_pair_scores,
-        _normalize_rows,
-        _spherical_kmeans,
+        _ivf_quantizer,
     )
 
-    rows = (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.col(id_col))
-        .limit(train_limit)
-        .collect()
-    )
-    train = _normalize_rows(np.array([r[1] for r in rows], dtype=np.float64))
-    cent = _spherical_kmeans(train, n_cells, seed, iters)
-
-    @F.pandas_udf("integer")
-    def cell_of(embs: pd.Series) -> pd.Series:
-        m = _normalize_rows(np.array(embs.tolist(), dtype=np.float64))
-        return pd.Series((m @ cent.T).argmax(axis=1)).astype("int32")
-
+    _, cell = _ivf_quantizer(emb, id_col, vec_col, n_cells, train_limit,
+                             seed, iters)
     bucketed = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        cell_of(F.col(vec_col)).cast("string").alias("bucket"),
+        cell.cast("string").alias("bucket"),
     )
     n_parts = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     pairs = _inbucket_pair_scores(bucketed, threshold, n_parts)

@@ -4,18 +4,41 @@
   F.aggregate/zip_with (JVM-side) after per-vector L2 normalization; the
   query side is broadcast (queries ≪ corpus at scale).
 - lsh_cosine_topk: random-hyperplane LSH — deterministic planes from a
-  seeded numpy RNG broadcast as literals, signature = bit-pack of
-  sign(v·p); candidates from signature-prefix buckets, exact cosine only
-  on candidates. This is a 100-TB path: the brute force is the
-  correctness baseline, LSH bounds the join.
+  seeded numpy RNG, signature = bit-pack of sign(v·p) per table; exact
+  cosine only on corpus vectors sharing a probed key. This is a 100-TB
+  path: the brute force is the correctness baseline, LSH bounds the scan.
 - ivf_cosine_topk: IVF (inverted-file) ANN — spherical k-means coarse
-  quantizer trained on a bounded driver-side sample, cell assignment via
-  Arrow-batched pandas UDFs, candidates from the query's n_probe nearest
-  cells only. The alternative 100-TB path when embeddings are clustered
-  (bounded cells beat data-oblivious hyperplanes on recall/candidate).
+  quantizer trained on a bounded driver-side sample, candidates from the
+  query's n_probe nearest cells only. The alternative 100-TB path when
+  embeddings are clustered (bounded cells beat data-oblivious hyperplanes
+  on recall/candidate).
+
+Both approximate paths share ONE index contract: build a corpus index,
+then probe it map-side.
+
+- The index has one row per corpus vector: ``(c_id, c_vec, buckets
+  array<bigint>)``. ``hyperplane_buckets(..., with_vec=True,
+  grouped=True)`` builds the LSH index (one packed key per table);
+  ``ivf_build_index`` builds the IVF index (a one-element array holding
+  the vector's cell). The ``buckets`` column's metadata records the index
+  kind (``lsh`` | ``ivf``) and its build parameters; a probe rejects an
+  index whose shape, key type, kind or parameters don't match the call,
+  because a mismatched index returns near-empty results with no error.
+- The probe collects the query batch to the driver, computes each
+  query's probed keys in numpy, ships them in the scorer's closure and
+  scans the index once in ``mapInArrow`` — no corpus shuffle. Every
+  corpus vector is scored in exactly one Arrow batch, so (query,
+  neighbor) pairs are unique by construction, and one rank window
+  finishes the top-k.
+- Queries ride the driver and every task's closure: batch them (hundreds
+  to a few thousand per call) and persist an index that serves many
+  batches. ``corpus_index=None`` builds the index inline for one call.
+  Corpus ids are assumed unique; a repeated query id is probed once.
 """
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 import pandas as pd
@@ -30,30 +53,6 @@ def _norm(col):
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
                        lambda acc, x: acc + x)
-
-
-def _cos_batch():
-    """Arrow-batched cosine over candidate rows: one einsum per batch.
-
-    The JVM ``aggregate`` fold in _dot is a higher-order function — it
-    never enters whole-stage codegen, so per-candidate interpretation
-    dominates once the candidate join emits millions of rows (measured
-    ~2× of the LSH ANN stage). Used on the rows-only approximate paths
-    (LSH/IVF); the DuckDB-oracled brute-force path keeps the JVM fold so
-    its float accumulation order stays pinned to the oracle's.
-    """
-
-    @F.pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series, na: pd.Series, nb: pd.Series) -> pd.Series:
-        ma = np.array(a.tolist(), dtype=np.float64)
-        mb = np.array(b.tolist(), dtype=np.float64)
-        if ma.ndim != 2 or ma.shape[0] == 0:
-            return pd.Series(np.zeros(len(a)))
-        return pd.Series(
-            np.einsum("ij,ij->i", ma, mb) / (na.to_numpy() * nb.to_numpy())
-        )
-
-    return cos
 
 
 def brute_force_cosine_topk(
@@ -102,19 +101,23 @@ def lsh_cosine_topk(
     corpus_index: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via random-hyperplane LSH bucketing.
+    Output schema == brute_force_cosine_topk.
 
-    ``corpus_index`` — a prebuilt (persisted) corpus bucket table from
-    ``hyperplane_buckets(corpus, id_col, vec_col, "c", ..., with_vec=True)``
-    with the SAME plane parameters. Passing it skips re-hashing the corpus per
-    call — the index is built once and amortized over query batches,
-    which is the deployment shape at scale (bench.py times the two
-    phases separately; VERDICT r3 "what's wrong" #3).
+    ``corpus_index`` — a prebuilt (persisted) LSH index from
+    ``hyperplane_buckets(corpus, id_col, vec_col, "c", ...,
+    with_vec=True, grouped=True)`` with the SAME plane parameters (see
+    the module docstring for the index contract). Building it once and
+    probing many query batches is the deployment shape at scale (bench.py
+    times the two phases separately); ``None`` builds it inline. An
+    exploded index (``with_vec=True`` without ``grouped=True``) and an
+    index with other planes or pre-int64 string keys raise ValueError.
 
-    n_tables independent signatures; candidates = bucket collisions in any
-    table; exact cosine computed only on candidates. ``multiprobe=1`` also
-    probes, for each QUERY, every bucket whose signature differs in one
-    bit — multiplying effective tables by (n_planes+1) while the corpus
-    index stays one row per (vector, table).
+    n_tables independent signatures; candidates = corpus vectors sharing
+    a key with the query in any table; exact cosine computed only on
+    candidates. ``multiprobe=1`` also probes, for each QUERY, every
+    bucket whose signature differs in one bit — multiplying effective
+    tables by (n_planes+1) while the corpus index stays one key per
+    (vector, table).
 
     Tuning for scale: collision rate per table ≈ (1−θ/π)^n_planes, bucket
     population ≈ n/2^n_planes. Grow n_planes with corpus size to bound
@@ -124,151 +127,183 @@ def lsh_cosine_topk(
     0.86 there and ≥0.9 on clustered embeddings
     (tests/test_webtext.py::test_lsh_measured_recall).
     """
-
-    cb = corpus_index if corpus_index is not None else hyperplane_buckets(
-        corpus, id_col, vec_col, "c",
-        n_planes=n_planes, n_tables=n_tables, dim=dim, seed=seed, with_vec=True)
-    if "c_vec" not in cb.columns:
-        raise ValueError("corpus_index must be built with with_vec=True "
-                         "(in-bucket scoring needs the vectors)")
-    if corpus_index is not None:
-        # a prebuilt index hashed with different planes puts queries in
-        # disjoint buckets → near-zero recall with no error (ADVICE r4);
-        # hyperplane_buckets stamps its parameters on the bucket(s) column
-        bcol = "buckets" if "buckets" in cb.columns else "bucket"
-        # an index from before the packed int64 keys ("table:sig"
-        # strings) passes the parameter check but matches no probed key,
-        # so the top-k comes back empty with no error
-        key_type = cb.schema[bcol].dataType.simpleString()
-        want_type = "array<bigint>" if bcol == "buckets" else "bigint"
-        if key_type != want_type:
-            raise ValueError(
-                f"corpus_index {bcol!r} column is {key_type}, expected "
-                f"{want_type} packed keys — rebuild with hyperplane_buckets")
-        got = dict(cb.schema[bcol].metadata or {})
-        want = {"n_planes": n_planes, "n_tables": n_tables,
-                "dim": dim, "seed": seed}
-        if {k: got.get(k) for k in want} != want:
-            raise ValueError(
-                "corpus_index plane parameters don't match this call "
-                f"(index={got or 'missing — rebuild with hyperplane_buckets'}, "
-                f"call={want})"
-            )
-    if corpus_index is not None:
-        # BROADCAST-PROBE path (r5): with a prebuilt index the probe used
-        # to union queries into the corpus bucket table and re-shuffle ALL
-        # of it (n·tables rows × dim doubles ≈ 820 MB at 100k vecs) per
-        # call — an r5 plane sweep showed probe time flat (~4 s) from 8 to
-        # 12 planes, i.e. SHUFFLE-bound, not candidate-bound as assumed.
-        # The deployment shape is tiny query batches against a big
-        # standing index, so instead: collect the query-side bucket table
-        # (bounded: |queries|·tables·(planes+1) rows — document/limit the
-        # batch size at scale), ship it in the UDF closure, and scan the
-        # persisted index MAP-SIDE — per Arrow batch, group rows by
-        # bucket, one normalized matmul against that bucket's queries,
-        # emit per-batch per-query top-k. Global top-k ⊆ union of
-        # per-batch top-k, so no recall is lost; zero corpus shuffle.
-        # query buckets computed DRIVER-SIDE in numpy (identical plane
-        # construction): the query batch is collected for the closure
-        # anyway, and routing it through a pandas_udf stage cost a whole
-        # Spark job per probe call
-        q_pdf = queries.select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-        ).toPandas()
-        qb_pdf = _query_buckets_local(
-            q_pdf, n_planes=n_planes, n_tables=n_tables, dim=dim,
-            seed=seed, probe=multiprobe)
-        return _broadcast_probe_topk(cb, qb_pdf, k)
-    qb = hyperplane_buckets(queries, id_col, vec_col, "q",
-                            n_planes=n_planes, n_tables=n_tables, dim=dim,
-                            seed=seed, probe=multiprobe, with_vec=True)
-    # IN-BUCKET scoring (r4), one-shot path (no standing index): queries
-    # meet corpus members inside their shared buckets and each bucket
-    # scores with one normalized matmul, emitting only its per-query
-    # top-k (global top-k ⊆ union of per-bucket top-k, so no recall is
-    # lost). The r3 shape joined the two 64-double vectors onto every
-    # candidate PAIR (~14M pairs for 256 queries at 100k vecs → ~14 GB
-    # Arrow traffic, memory-bandwidth bound: measured 1.3× speedup from
-    # 2→8 cores); now vectors move once per bucket membership and the
-    # post-score shuffle is three scalars per surviving candidate.
-    both = cb.select(
-        F.col("c_id").alias("id"), F.col("c_vec").alias("vec"),
-        "bucket", F.lit(False).alias("is_q"),
-    ).unionByName(qb.select(
-        F.col("q_id").alias("id"), F.col("q_vec").alias("vec"),
-        "bucket", F.lit(True).alias("is_q"),
-    ))
-    n_parts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return _inbucket_topk(both, k, n_parts)
+    index = corpus_index if corpus_index is not None else hyperplane_buckets(
+        corpus, id_col, vec_col, "c", n_planes=n_planes, n_tables=n_tables,
+        dim=dim, seed=seed, with_vec=True, grouped=True)
+    _check_index(index, _lsh_meta(n_planes, n_tables, dim, seed),
+                 "hyperplane_buckets(..., with_vec=True, grouped=True)")
+    return _probe_topk(
+        index, queries, id_col, vec_col, k,
+        lambda q: _query_buckets_local(q, n_planes=n_planes, n_tables=n_tables,
+                                       dim=dim, seed=seed, probe=multiprobe))
 
 
-def _query_buckets_local(q_pdf, n_planes: int, n_tables: int, dim: int,
-                         seed: int, probe: int):
-    """Driver-side twin of hyperplane_buckets' packed int bucket keys
-    (same seeded plane construction, same ``(table << n_planes) | sig``
-    encoding, same 1-bit multiprobe flips) over a collected query batch —
-    one numpy matmul instead of a Spark job. Returns a pandas frame
-    (q_id, q_vec, bucket), one row per probed bucket."""
-    _check_key_width(n_planes, n_tables)
-    rng = np.random.default_rng(seed)
-    flat = rng.normal(size=(n_tables, n_planes, dim)).reshape(
-        n_tables * n_planes, dim)
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-    table_off = np.arange(n_tables, dtype=np.int64) << n_planes
-    if len(q_pdf):
-        m = np.array(q_pdf["q_vec"].tolist(), dtype=np.float64)
-        bits = (m @ flat.T) >= 0.0
-        sigs = bits.reshape(-1, n_tables, n_planes) @ weights   # B × T
-        base = table_off + sigs
-        if probe >= 1:
-            flips = base[:, :, None] ^ (1 << np.arange(n_planes,
-                                                       dtype=np.int64))
-            allb = np.concatenate([base[:, :, None], flips],
-                                  axis=2).reshape(m.shape[0], -1)
-        else:
-            allb = base
-        ids = np.repeat(np.arange(m.shape[0]), allb.shape[1])
-        recs = allb.ravel()
-    else:
-        ids, recs = [], np.empty(0, dtype=np.int64)
-    rows = q_pdf.iloc[ids].reset_index(drop=True) if len(ids) else q_pdf.iloc[:0]
-    out = pd.DataFrame({
-        "q_id": rows["q_id"].to_numpy() if len(rows) else [],
-        "bucket": recs,
-    })
-    out["q_vec"] = rows["q_vec"].to_numpy() if len(rows) else []
-    return out
-
-
-def _check_key_width(n_planes: int, n_tables: int) -> None:
-    """Packed keys ``(table << n_planes) | sig`` must fit a signed int64;
-    wider ones wrap in numpy, so keys of different tables can collide
-    with no error."""
+def _hyperplanes(n_planes: int, n_tables: int, dim: int, seed: int) -> np.ndarray:
+    """The seeded (n_tables·n_planes) × dim plane matrix shared by the
+    index and query sides. Packed keys ``(table << n_planes) | sig`` must
+    fit a signed int64 — wider ones wrap in numpy, so keys of different
+    tables could collide with no error — so wider parameters raise."""
     bits = n_planes + (n_tables - 1).bit_length()
     if bits > 63:
         raise ValueError(f"n_planes={n_planes} with n_tables={n_tables} "
                          f"needs {bits} bits; packed bucket keys hold 63")
+    rng = np.random.default_rng(seed)
+    return rng.normal(size=(n_tables, n_planes, dim)).reshape(
+        n_tables * n_planes, dim)
 
 
-def _topk_finish(scored: DataFrame, k: int, dedup: bool = True) -> DataFrame:
-    """(q_id, c_id, cosine) candidate rows → per-query top-k with rank:
-    pair dedup (same pair scored in several buckets/batches) + rank
-    window. A single-aggregate formulation (collect_list + array_sort +
-    per-neighbor HOF dedup) was tried in r6 and REVERTED: the O(k²)
-    interpreted higher-order dedup per query measured ~25% slower than
-    these two small exchanges at 256 queries × 40k candidate rows, so
-    the two-exchange shape stands.
+def _packed_keys(m: np.ndarray, planes: np.ndarray, n_planes: int,
+                 n_tables: int, probe: int = 0) -> np.ndarray:
+    """B × dim vectors → B × n_tables int64 keys ``(table << n_planes) |
+    signature``, all T·P signature bits from ONE matmul. ``probe=1``
+    appends, per table, the n_planes keys one signature bit away (a
+    1-bit flip is an XOR on the low bits of the key):
+    B × n_tables·(n_planes+1)."""
+    bit = 1 << np.arange(n_planes, dtype=np.int64)
+    sigs = ((m @ planes.T) >= 0.0).reshape(-1, n_tables, n_planes) @ bit
+    base = (np.arange(n_tables, dtype=np.int64) << n_planes) + sigs
+    if probe < 1:
+        return base
+    return np.concatenate([base[:, :, None], base[:, :, None] ^ bit],
+                          axis=2).reshape(m.shape[0], -1)
 
-    ``dedup=False`` skips the pair-dedup exchange when the CALLER
-    guarantees (q_id, c_id) rows are already unique — true for the
-    grouped standing-index probe, where each candidate vector lives in
-    exactly one scan batch so a pair is scored at most once; dropping an
-    identity dropDuplicates removes one of the two finish exchanges.
+
+def _query_buckets_local(q: np.ndarray, n_planes: int, n_tables: int,
+                         dim: int, seed: int, probe: int) -> np.ndarray:
+    """Driver-side probed keys of a collected query batch (B × dim):
+    the same planes and key packing as hyperplane_buckets, with optional
+    1-bit multiprobe — one numpy matmul instead of a Spark job."""
+    return _packed_keys(q, _hyperplanes(n_planes, n_tables, dim, seed),
+                        n_planes, n_tables, probe)
+
+
+def _lsh_meta(n_planes: int, n_tables: int, dim: int, seed: int) -> dict:
+    return {"kind": "lsh", "n_planes": n_planes, "n_tables": n_tables,
+            "dim": dim, "seed": seed}
+
+
+def _check_index(index: DataFrame, want: dict, build: str) -> dict:
+    """Validate ``index`` against the ANN index contract and the call's
+    build parameters ``want``; returns the ``buckets`` metadata."""
+    fields = {f.name: f for f in index.schema.fields}
+    keys = fields.get("buckets")
+    if keys is None or "c_id" not in fields or "c_vec" not in fields:
+        raise ValueError(
+            "corpus_index must have one row per vector with columns c_id, "
+            f"c_vec and a 'buckets' key array (got {index.columns}) — "
+            f"build it with {build}")
+    key_type = keys.dataType.simpleString()
+    if key_type != "array<bigint>":
+        # an index from before the packed int64 keys ("table:sig"
+        # strings) matches no probed key: an empty top-k with no error
+        raise ValueError(
+            f"corpus_index 'buckets' column is {key_type}, expected "
+            f"array<bigint> packed keys — rebuild with {build}")
+    meta = dict(keys.metadata or {})
+    got = {key: meta.get(key) for key in want}
+    if got != want:
+        # e.g. other planes hash queries into disjoint buckets: near-zero
+        # recall with no error
+        raise ValueError(
+            f"corpus_index parameters don't match this call (index={got}, "
+            f"call={want}) — rebuild with {build}")
+    return meta
+
+
+def _probe_topk(index: DataFrame, queries: DataFrame, id_col: str,
+                vec_col: str, k: int, keys_of) -> DataFrame:
+    """Map-side ANN probe of a contract index: collect the queries,
+    ``keys_of(Q)`` → each query's probed keys (B × m int64), then scan
+    the index once in mapInArrow, scoring each Arrow batch against the
+    closure-shipped queries, and finish with one rank window over the
+    per-batch survivors.
+
+    The scorer is ONE dense masked matmul + one vectorized partition per
+    Arrow batch — a first cut that grouped each batch by bucket and
+    looped queries per group spent its time in pandas groupby + tiny
+    matmuls. mapInArrow, not mapInPandas: vectors decode straight from
+    the list values buffer (no ``Series.tolist``) and int64 keys go
+    straight to numpy; the probe-membership lookup is one searchsorted
+    over the sorted probed-key array.
     """
     from pyspark.sql import Window
 
-    if dedup:
-        scored = scored.dropDuplicates(["q_id", "c_id"])
+    q_pdf = queries.select(
+        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
+    ).toPandas().drop_duplicates("q_id")
+    q_ids = q_pdf["q_id"].to_numpy(dtype=np.int64)
+    n_q = q_ids.size
+    if n_q:
+        Q = np.array(q_pdf["q_vec"].tolist(), dtype=np.float64)
+        q_keys = np.asarray(keys_of(Q), dtype=np.int64)
+    else:
+        Q = np.zeros((0, 0))
+        q_keys = np.zeros((0, 0), dtype=np.int64)
+    qn = np.linalg.norm(Q, axis=1)
+    qn[qn == 0] = 1.0
+    Qn = Q / qn[:, None]
+    # probed-key table: SORTED distinct keys, plus a CSR-style (offsets,
+    # counts, concat) layout of the query rows probing each key
+    flat_keys = q_keys.ravel()
+    flat_rows = np.repeat(np.arange(n_q, dtype=np.int64), q_keys.shape[1])
+    order = np.argsort(flat_keys, kind="stable")
+    pb_keys, qr_offsets, qr_counts = np.unique(
+        flat_keys[order], return_index=True, return_counts=True)
+    qr_concat = flat_rows[order]
+
+    def score(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0 or pb_keys.size == 0:
+                continue
+            c_ids = batch.column(0).to_numpy()
+            C = (batch.column(1).flatten().to_numpy(zero_copy_only=False)
+                 .astype(np.float64).reshape(n, -1))
+            bcol = batch.column(2)
+            vals = (bcol.flatten().to_numpy(zero_copy_only=False)
+                    .astype(np.int64, copy=False))
+            ent_rows = np.repeat(np.arange(n), np.asarray(bcol.value_lengths()))
+            pos = np.minimum(np.searchsorted(pb_keys, vals), pb_keys.size - 1)
+            hit = pb_keys[pos] == vals
+            if not hit.any():
+                continue
+            # validity mask: (query, candidate) allowed iff some key of the
+            # candidate is one the query probes, minus self-matches; the
+            # (query-row, candidate) pairs expand with repeat/cumsum —
+            # total ≈ Σ |queries(key)| over matching keys, small because
+            # probes spread thinly over keys
+            bidx = pos[hit]
+            counts = qr_counts[bidx]
+            starts = np.cumsum(counts) - counts
+            at = np.arange(int(counts.sum()), dtype=np.int64)
+            rows = qr_concat[at + np.repeat(qr_offsets[bidx] - starts, counts)]
+            M = np.zeros((n_q, n), dtype=bool)
+            M[rows, np.repeat(ent_rows[hit], counts)] = True
+            M &= c_ids[None, :] != q_ids[:, None]
+            if not M.any():
+                continue
+            cn = np.linalg.norm(C, axis=1)
+            cn[cn == 0] = 1.0
+            S = Qn @ (C / cn[:, None]).T
+            S[~M] = -2.0  # below any cosine
+            # per-batch cut: keep every candidate scoring at least the
+            # query's k-th best in this batch — ties included, so the
+            # final (cosine desc, c_id asc) window sees every tied
+            # candidate, not whichever came first in batch order. The
+            # global top-k is a subset of the union of these cuts.
+            kth = min(k, n)
+            kv = np.partition(S, n - kth, axis=1)[:, n - kth]
+            r, c = np.nonzero(M & (S >= kv[:, None]))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q_ids[r], type=pa.int64()),
+                 pa.array(c_ids[c], type=pa.int64()),
+                 pa.array(S[r, c], type=pa.float64())],
+                names=["q_id", "c_id", "cosine"])
+
+    scored = index.select("c_id", "c_vec", "buckets").mapInArrow(
+        score, "q_id long, c_id long, cosine double")
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -282,221 +317,6 @@ def _topk_finish(scored: DataFrame, k: int, dedup: bool = True) -> DataFrame:
     )
 
 
-def _broadcast_probe_topk(index_df: DataFrame, qb_pdf, k: int,
-                          unique_rows: bool = False) -> DataFrame:
-    """Map-side ANN probe: scan the standing corpus bucket index once,
-    score each Arrow batch's rows against the (closure-shipped) query
-    bucket table, emit per-batch per-query top-k, finish with one tiny
-    window over ≤ batches·queries·k candidate rows.
-
-    The index never shuffles; a broadcast semi-join on the probed bucket
-    set prunes non-candidate index rows JVM-side before they enter Arrow
-    (effective once n_planes makes buckets sparser than the probe set).
-    """
-    from pyspark.sql import Window
-
-    # dedup queries: one row per query, plus bucket -> query-row-indices.
-    # The scorer is ONE dense masked matmul + ONE vectorized argpartition
-    # per Arrow batch — a first cut that grouped each batch by bucket and
-    # looped queries per group spent its time in pandas groupby + tiny
-    # matmuls (measured 2-6× SLOWER than the shuffle path it replaces;
-    # more planes → more tiny groups → worse).
-    qid_arr = qb_pdf["q_id"].to_numpy()
-    uq_ids, uq_idx = np.unique(qid_arr, return_inverse=True)
-    Q = np.zeros((uq_ids.size, len(qb_pdf["q_vec"].iloc[0]) if len(qb_pdf) else 0))
-    for pos, row in zip(uq_idx, qb_pdf["q_vec"].to_numpy()):
-        Q[pos] = row
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = 1.0
-    Qn = Q / qn[:, None]
-    bucket_to_qrows: dict = {
-        int(b): np.unique(uq_idx[g.index.to_numpy()])
-        for b, g in qb_pdf.reset_index(drop=True).groupby("bucket")
-    }
-    # flattened probed-bucket table for the vectorized mask build below:
-    # SORTED int64 bucket keys (probe lookup = one searchsorted over the
-    # whole batch, no per-string Python dict hits — r6 int-key follow-up
-    # to the mapInArrow scorer), plus a CSR-style (offsets, concat)
-    # layout of each probed bucket's query rows
-    items = sorted(bucket_to_qrows.items())
-    pb_keys = np.array([b for b, _ in items], dtype=np.int64)
-    if items:
-        qr_counts = np.fromiter(
-            (len(v) for _, v in items), dtype=np.int64, count=len(items))
-        qr_offsets = np.zeros(qr_counts.size, dtype=np.int64)
-        np.cumsum(qr_counts[:-1], out=qr_offsets[1:])
-        qr_concat = (np.concatenate([v for _, v in items])
-                     if qr_counts.sum() else np.empty(0, dtype=np.int64))
-    n_q = uq_ids.size
-    kk = k
-
-    def score(batches):
-        # mapInArrow (r6): the pandas scorer spent ~0.3 s/probe turning
-        # Arrow list columns into Python lists (`Series.tolist`) before
-        # numpy could touch them — interleaved A/B at 100k index rows
-        # measured 1.1-1.2 s (pandas) vs 0.7-0.9 s (arrow). Here vectors
-        # decode zero-copy-ish (ListArray values buffer → reshape) and
-        # int64 bucket keys go straight to numpy — the probe-membership
-        # lookup is one searchsorted over the sorted probed-key array
-        # (the string version dictionary-encoded the column and walked a
-        # Python dict per distinct string).
-        import pyarrow as pa
-
-        for batch in batches:
-            nrows = batch.num_rows
-            if nrows == 0:
-                continue
-            names = batch.schema.names
-            vec_col = batch.column(names.index("c_vec"))
-            C_all = (vec_col.flatten().to_numpy(zero_copy_only=False)
-                     .astype(np.float64).reshape(nrows, -1))
-            if "buckets" in names:
-                # grouped index: one row per vector, bucket ARRAY — ids
-                # are already unique; flatten (row, bucket) entries
-                uc_ids = batch.column(names.index("c_id")).to_numpy()
-                C = C_all
-                bcol = batch.column(names.index("buckets"))
-                lens = np.asarray(bcol.value_lengths())
-                ent_rows = np.repeat(np.arange(nrows), lens)
-                flat = bcol.flatten()
-                c_inv = ent_rows
-            else:
-                # exploded index: a candidate appears once per TABLE
-                # membership — dedup to one score-matrix column per
-                # distinct id, else duplicate columns crowd distinct
-                # candidates out of the per-batch top-k (measured:
-                # recall 1.0 → 0.925 at 12 planes)
-                ci = batch.column(names.index("c_id")).to_numpy()
-                uc_ids, first_idx, c_inv = np.unique(
-                    ci, return_index=True, return_inverse=True)
-                C = C_all[first_idx]
-                flat = batch.column(names.index("bucket"))
-            cn = np.linalg.norm(C, axis=1)
-            cn[cn == 0] = 1.0
-            # validity mask: (query, candidate) allowed iff some index
-            # entry of the candidate sits in a bucket the query probes,
-            # minus self-matches. Fully vectorized (r6): the previous
-            # version looped np.ix_ over every DISTINCT bucket in the
-            # batch (~tens of thousands at 16 tables), which dominated
-            # the probe stage; here each entry maps to its probed-bucket
-            # code through the dictionary, and the (query-row,
-            # candidate-col) pairs are expanded with repeat/cumsum —
-            # total pairs ≈ Σ |qrows(bucket)| over matching entries,
-            # which is small because probes spread thinly over buckets.
-            M = np.zeros((n_q, uc_ids.size), dtype=bool)
-            vals = (flat.to_numpy(zero_copy_only=False)
-                    .astype(np.int64, copy=False))
-            if pb_keys.size:
-                pos = np.minimum(np.searchsorted(pb_keys, vals),
-                                 pb_keys.size - 1)
-                hit = pb_keys[pos] == vals
-            else:
-                hit = np.zeros(vals.size, dtype=bool)
-            if hit.any():
-                bidx = pos[hit]
-                cols = c_inv[hit]
-                counts = qr_counts[bidx]
-                tot = int(counts.sum())
-                if tot:
-                    starts2 = np.zeros(counts.size, dtype=np.int64)
-                    np.cumsum(counts[:-1], out=starts2[1:])
-                    pos = (np.arange(tot, dtype=np.int64)
-                           - np.repeat(starts2, counts))
-                    rows = qr_concat[np.repeat(qr_offsets[bidx], counts) + pos]
-                    M[rows, np.repeat(cols, counts)] = True
-            M &= uc_ids[None, :] != uq_ids[:, None]
-            if not M.any():
-                continue
-            S = Qn @ (C / cn[:, None]).T
-            S[~M] = -2.0  # below any cosine
-            kth = min(kk, uc_ids.size)
-            top = np.argpartition(-S, kth - 1, axis=1)[:, :kth]
-            rows = np.repeat(np.arange(n_q), kth)
-            cols = top.ravel()
-            sc = S[rows, cols]
-            keep = sc > -1.5
-            if not keep.any():
-                continue
-            yield pa.RecordBatch.from_pydict({
-                "q_id": pa.array(uq_ids[rows[keep]], type=pa.int64()),
-                "c_id": pa.array(uc_ids[cols[keep]], type=pa.int64()),
-                "cosine": pa.array(sc[keep], type=pa.float64()),
-            })
-
-    spark = index_df.sparkSession
-    if "buckets" in index_df.columns:
-        # grouped index: vectors ride once per vector — scan as-is (a
-        # bucket-overlap prune would rebuild the probed set as a huge
-        # literal; the scan is already n_tables× smaller than exploded)
-        pruned = index_df.select("c_id", "c_vec", "buckets")
-    else:
-        probed = spark.createDataFrame(
-            pd.DataFrame({"bucket": pb_keys}), "bucket long")
-        pruned = index_df.join(
-            F.broadcast(probed), "bucket", "left_semi"
-        ).select("c_id", "c_vec", "bucket")
-    scored = pruned.mapInArrow(score, "q_id long, c_id long, cosine double")
-    # one-row-per-vector index (grouped LSH array index, IVF cell index):
-    # a candidate is scored in exactly one batch ⇒ (q_id, c_id) already
-    # unique — skip the dedup exchange. Exploded index: a candidate rides
-    # once per table membership across batches, so pair dedup is
-    # load-bearing there.
-    unique = unique_rows or "buckets" in index_df.columns
-    return _topk_finish(scored, k, dedup=not unique)
-
-
-def _inbucket_topk(both: DataFrame, k: int, n_partitions: int) -> DataFrame:
-    """(bucket, id, vec, is_q) → global top-k per query.
-
-    Each bucket scores its queries against its corpus members with one
-    normalized float64 matmul and emits only its per-query top-k
-    (deterministic tie-break: cosine desc, id asc) — the global top-k is
-    a subset of the union of per-bucket top-k, so no recall is lost.
-    Duplicate (q, c) pairs from different buckets carry bit-identical
-    cosines and collapse in one dropDuplicates before the final window.
-    Shared by hyperplane-LSH (bucket = packed (table, signature) int)
-    and IVF (bucket = cell id).
-    """
-    from pyspark.sql import Window
-
-    kk = k
-
-    def score(batches):
-        for g in _iter_bucket_groups(batches):
-            qm = g["is_q"].to_numpy()
-            if not qm.any() or qm.all():
-                continue
-            qi = g.loc[qm, "id"].to_numpy()
-            ci = g.loc[~qm, "id"].to_numpy()
-            Q = np.array(g.loc[qm, "vec"].tolist(), dtype=np.float64)
-            C = np.array(g.loc[~qm, "vec"].tolist(), dtype=np.float64)
-            qn = np.sqrt((Q * Q).sum(axis=1)); qn[qn == 0] = 1.0
-            cn = np.sqrt((C * C).sum(axis=1)); cn[cn == 0] = 1.0
-            S = (Q / qn[:, None]) @ (C / cn[:, None]).T
-            out_q, out_c, out_s = [], [], []
-            for r in range(len(qi)):
-                mask = ci != qi[r]
-                if not mask.any():
-                    continue
-                cs, cids = S[r][mask], ci[mask]
-                order = np.lexsort((cids, -cs))[:kk]  # deterministic ties
-                out_q.append(np.full(order.size, qi[r]))
-                out_c.append(cids[order])
-                out_s.append(cs[order])
-            if out_q:
-                yield pd.DataFrame({
-                    "q_id": np.concatenate(out_q),
-                    "c_id": np.concatenate(out_c),
-                    "cosine": np.concatenate(out_s),
-                })
-
-    rep = both.repartition(n_partitions, "bucket").sortWithinPartitions("bucket")
-    scored = rep.mapInPandas(score, "q_id long, c_id long, cosine double")
-    # pair dedup + per-query rank in one aggregate (see _topk_finish);
-    # same pair across buckets carries an identical score by construction
-    return _topk_finish(scored, k)
-
-
 def hyperplane_buckets(
     df: DataFrame,
     id_col: str,
@@ -506,67 +326,40 @@ def hyperplane_buckets(
     n_tables: int = 16,
     dim: int = 64,
     seed: int = 42,
-    probe: int = 0,
     with_vec: bool = False,
     grouped: bool = False,
 ) -> DataFrame:
-    """One row per (vector, bucket): columns {prefix}_id, bucket
-    (int64 ``(table << n_planes) | signature`` — r6 moved off the
-    "table:signature" strings so keys hash/compare as fixed 8-byte ints
-    and signature construction vectorizes; the encoding is bijective, so
-    candidate sets are unchanged). IDS ONLY — callers join vectors back
-    after candidate-pair dedup so the wide payload never rides the
-    bucket explode/shuffle.
+    """Random-hyperplane bucket keys: int64 ``(table << n_planes) |
+    signature``, one per table (the encoding is bijective, so keys
+    hash/compare as fixed 8-byte ints and signature construction
+    vectorizes).
 
-    ``grouped=True`` (requires with_vec) skips the explode and returns
-    ONE row per vector with a ``buckets`` ARRAY — the standing-index
-    shape for the broadcast-probe ANN path: the vector payload is stored
-    and Arrow-transferred once instead of once per table (n_tables×
-    smaller scans; measured 2.5× probe speedup at 16 tables).
+    ``grouped=True`` (requires with_vec) returns ONE row per vector,
+    ``({prefix}_id, {prefix}_vec, buckets array<bigint>)`` — with
+    ``prefix="c"`` this is the LSH corpus index of the ANN index contract
+    (module docstring) that lsh_cosine_topk probes: the vector payload is
+    stored and Arrow-transferred once instead of once per table. Without
+    it, one row per (vector, table): ``({prefix}_id[, {prefix}_vec],
+    bucket)`` — the exploded shape the in-bucket pair scorer of
+    dedup.embedding_near_dups shuffles by bucket. The plane parameters
+    and ``kind=lsh`` ride as metadata on ``buckets``.
 
     Deterministic hyperplanes from a seeded numpy RNG. All T·P signature
     dot products are ONE Arrow-batched numpy matmul (B×dim @ dim×T·P) in
     a pandas UDF — the first cut inlined each plane as a 64-literal
     zip_with/aggregate fold, and at 16 tables × 8-16 planes the resulting
     128-256-fold expression tree made signature computation ~50× slower
-    than the matmul (measured in bench.py's wx_ann stage; same reason IVF
-    assigns cells in numpy). ``probe=1`` additionally emits, per table,
-    the n_planes 1-bit-flipped neighbor buckets (query-side multiprobe).
-    Raises ValueError when ``n_planes + bit_length(n_tables - 1) > 63``.
+    than the matmul (same reason IVF assigns cells in numpy). Raises
+    ValueError when ``n_planes + bit_length(n_tables - 1) > 63``.
     """
-    _check_key_width(n_planes, n_tables)
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(size=(n_tables, n_planes, dim))
-    flat = planes.reshape(n_tables * n_planes, dim)
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-    table_off = np.arange(n_tables, dtype=np.int64) << n_planes
-    flip_bits = 1 << np.arange(n_planes, dtype=np.int64)
-    # plane parameters ride as column metadata on `bucket` so a prebuilt
-    # index can be validated against the query side's parameters — a
-    # mismatch hashes queries into disjoint buckets and silently returns
-    # near-zero recall (ADVICE r4). Metadata survives select/persist.
-    bucket_meta = {"n_planes": n_planes, "n_tables": n_tables,
-                   "dim": dim, "seed": seed}
+    planes = _hyperplanes(n_planes, n_tables, dim, seed)
 
     @F.pandas_udf("array<long>")
     def buckets_of(embs: pd.Series) -> pd.Series:
         m = np.array(embs.tolist(), dtype=np.float64)
         if m.ndim != 2 or m.shape[0] == 0:
             return pd.Series([[] for _ in range(len(embs))])
-        bits = (m @ flat.T) >= 0.0                      # B × (T·P)
-        # int keys let the whole bucket-id construction stay in numpy
-        # (the string version looped Python per row building T·(P+1)
-        # f-strings); a 1-bit signature flip is an XOR on the low P bits
-        # of the packed key, so multiprobe vectorizes too
-        sigs = bits.reshape(-1, n_tables, n_planes) @ weights   # B × T
-        base = table_off + sigs                                 # B × T
-        if probe >= 1:
-            allb = np.concatenate(
-                [base[:, :, None], base[:, :, None] ^ flip_bits],
-                axis=2).reshape(m.shape[0], -1)
-        else:
-            allb = base
-        return pd.Series(list(allb))
+        return pd.Series(list(_packed_keys(m, planes, n_planes, n_tables)))
 
     if grouped:
         if not with_vec:
@@ -575,7 +368,10 @@ def hyperplane_buckets(
             F.col(id_col).alias(f"{prefix}_id"),
             F.col(vec_col).alias(f"{prefix}_vec"),
             buckets_of(F.col(vec_col)).alias("buckets"),
-        ).withMetadata("buckets", bucket_meta)
+        # plane parameters ride as column metadata so a prebuilt index can
+        # be validated against the query side's (see _check_index);
+        # metadata survives select/persist
+        ).withMetadata("buckets", _lsh_meta(n_planes, n_tables, dim, seed))
     cols = [
         F.col(id_col).alias(f"{prefix}_id"),
         F.explode(buckets_of(F.col(vec_col))).alias("bucket"),
@@ -584,9 +380,7 @@ def hyperplane_buckets(
         # carried for IN-BUCKET scoring (one copy per bucket membership,
         # NOT one per candidate pair — see _inbucket_pair_scores)
         cols.insert(1, F.col(vec_col).alias(f"{prefix}_vec"))
-    # withMetadata, not alias(metadata=...): alias metadata is dropped on
-    # a Generate (explode) output
-    return df.select(*cols).withMetadata("bucket", bucket_meta)
+    return df.select(*cols)
 
 
 def _iter_bucket_groups(batches):
@@ -678,23 +472,21 @@ def _normalize_rows(m: np.ndarray) -> np.ndarray:
     return m / n
 
 
-def ivf_build_index(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    train_limit: int = 10_000,
-    seed: int = 42,
-    iters: int = 10,
-) -> DataFrame:
-    """Standing IVF index: (c_id, c_vec, bucket=cell id as int64), one
-    row per vector, centroids + training parameters stamped as metadata on
-    ``bucket`` so the probe side can assign query cells driver-side and
-    validate compatibility — the IVF twin of the grouped hyperplane
-    index (build once, probe many query batches with zero corpus
-    shuffle)."""
+
+
+def _ivf_quantizer(df: DataFrame, id_col: str, vec_col: str, n_cells: int,
+                   train_limit: int, seed: int, iters: int):
+    """Spherical-k-means coarse quantizer shared by ivf_build_index and
+    dedup.semantic_dedup → (centroids, cell column).
+
+    Training reads a BOUNDED deterministic sample (orderBy(id)
+    .limit(train_limit), one documented collect — swap for df.sample at
+    100 TB, the quantizer only needs a sketch of the distribution); the
+    cell of every row is one Arrow-batched pandas UDF pass (numpy matmul
+    per batch, centroids ride the closure — n_cells·dim doubles, KBs).
+    """
     rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
+        df.select(F.col(id_col), F.col(vec_col))
         .orderBy(F.col(id_col))
         .limit(train_limit)
         .collect()
@@ -707,8 +499,26 @@ def ivf_build_index(
         m = _normalize_rows(np.array(embs.tolist(), dtype=np.float64))
         return pd.Series((m @ cent.T).argmax(axis=1)).astype("int32")
 
-    import json
+    return cent, cell_of(F.col(vec_col))
 
+
+def ivf_build_index(
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_cells: int = 16,
+    train_limit: int = 10_000,
+    seed: int = 42,
+    iters: int = 10,
+) -> DataFrame:
+    """IVF corpus index of the ANN index contract (module docstring):
+    ``(c_id, c_vec, buckets)`` with ``buckets`` = ``[cell id]``, one row
+    per vector. ``kind=ivf``, the training parameters and the centroids
+    ride as metadata on ``buckets``, so the probe side assigns query
+    cells driver-side and validates compatibility — build once, probe
+    many query batches with zero corpus shuffle."""
+    cent, cell = _ivf_quantizer(corpus, id_col, vec_col, n_cells,
+                                train_limit, seed, iters)
     # centroids ride as a JSON string: Spark column Metadata supports
     # scalars and flat arrays only, not nested double arrays
     meta = {"kind": "ivf", "n_cells": n_cells, "train_limit": train_limit,
@@ -717,8 +527,8 @@ def ivf_build_index(
     return corpus.select(
         F.col(id_col).alias("c_id"),
         F.col(vec_col).alias("c_vec"),
-        cell_of(F.col(vec_col)).cast("long").alias("bucket"),
-    ).withMetadata("bucket", meta)
+        F.array(cell.cast("long")).alias("buckets"),
+    ).withMetadata("buckets", meta)
 
 
 def ivf_cosine_topk(
@@ -738,92 +548,26 @@ def ivf_cosine_topk(
     cells, probe only the query's n_probe nearest cells, exact cosine on
     the candidates. Output schema == brute_force_cosine_topk.
 
-    Scale shape: training reads a BOUNDED deterministic sample
-    (orderBy(id).limit(train_limit) — swap for df.sample at 100 TB, the
-    quantizer only needs a sketch of the distribution); cell assignment is
-    one Arrow-batched pandas UDF pass (numpy matmul per batch, centroids
-    ride the closure — n_cells·dim doubles, KBs); the candidate join keys
-    on cell id, so fan-out per query ≈ n_probe·n/n_cells rows instead of
-    n. Grow n_cells ∝ √n (IVF heuristic) to keep cells bounded.
+    Candidate fan-out per query ≈ n_probe·n/n_cells rows instead of n.
+    Grow n_cells ∝ √n (IVF heuristic) to keep cells bounded.
 
     ``corpus_index`` — a prebuilt (persisted) index from
-    ``ivf_build_index``: skips quantizer training AND corpus cell
-    assignment per call, assigns query probe cells driver-side from the
-    centroids stamped on the index metadata, and scores via the same
-    map-side broadcast-probe scan as the LSH path (zero corpus shuffle
-    per query batch).
+    ``ivf_build_index`` with the same training parameters: skips
+    quantizer training AND corpus cell assignment per call; ``None``
+    builds it inline. Query probe cells are assigned driver-side from
+    the centroids stamped on the index metadata. An index with other
+    parameters, or one with a scalar ``bucket`` cell column (the shape
+    before the index contract), raises ValueError.
     """
-    if corpus_index is not None:
-        meta = dict(corpus_index.schema["bucket"].metadata or {})
-        if meta.get("kind") != "ivf":
-            raise ValueError(
-                "corpus_index is not an IVF index — build it with "
-                "ivf_build_index (metadata missing/kind mismatch)")
-        want = {"n_cells": n_cells, "train_limit": train_limit,
-                "seed": seed, "iters": iters}
-        got = {kk: meta.get(kk) for kk in want}
-        if got != want:
-            raise ValueError(
-                f"ivf index parameters don't match this call "
-                f"(index={got}, call={want})")
-        import json
-
-        cent = np.array(json.loads(meta["centroids"]), dtype=np.float64)
-        n_probe_eff = min(n_probe, cent.shape[0])
-        q_pdf = queries.select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-        ).toPandas()
-        if len(q_pdf):
-            Qm = _normalize_rows(np.array(q_pdf["q_vec"].tolist(),
-                                          dtype=np.float64))
-            top = np.argsort(-(Qm @ cent.T), axis=1)[:, :n_probe_eff]
-            idx = np.repeat(np.arange(len(q_pdf)), n_probe_eff)
-            qb_pdf = q_pdf.iloc[idx].reset_index(drop=True)
-            qb_pdf["bucket"] = top.ravel().astype(np.int64)
-        else:
-            qb_pdf = q_pdf.assign(bucket=pd.Series(dtype=np.int64))
-        # the IVF index is one row per vector (one cell each), so scored
-        # (q, c) pairs are unique — the finish can skip the dedup exchange
-        return _broadcast_probe_topk(corpus_index, qb_pdf, k,
-                                     unique_rows=True)
-
-    rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.col(id_col))
-        .limit(train_limit)
-        .collect()
-    )
-    train = _normalize_rows(np.array([r[1] for r in rows], dtype=np.float64))
-    cent = _spherical_kmeans(train, n_cells, seed, iters)
-
-    @F.pandas_udf("integer")
-    def cell_of(embs: pd.Series) -> pd.Series:
-        m = _normalize_rows(np.array(embs.tolist(), dtype=np.float64))
-        return pd.Series((m @ cent.T).argmax(axis=1)).astype("int32")
-
+    index = corpus_index if corpus_index is not None else ivf_build_index(
+        corpus, id_col, vec_col, n_cells=n_cells, train_limit=train_limit,
+        seed=seed, iters=iters)
+    meta = _check_index(
+        index, {"kind": "ivf", "n_cells": n_cells, "train_limit": train_limit,
+                "seed": seed, "iters": iters}, "ivf_build_index")
+    cent = np.array(json.loads(meta["centroids"]), dtype=np.float64)
     n_probe_eff = min(n_probe, cent.shape[0])
-
-    @F.pandas_udf("array<integer>")
-    def probe_cells(embs: pd.Series) -> pd.Series:
-        m = _normalize_rows(np.array(embs.tolist(), dtype=np.float64))
-        top = np.argsort(-(m @ cent.T), axis=1)[:, :n_probe_eff].astype("int32")
-        return pd.Series(list(top))
-
-    # IN-CELL scoring via the shared bucket scorer (r4): the cell equi-join
-    # previously carried both 64-double vectors onto every candidate pair
-    # (n_probe/n_cells · n per query ⇒ GBs of Arrow traffic, bandwidth
-    # bound); now vectors move once per cell membership and each cell emits
-    # its per-query top-k.
-    both = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        cell_of(F.col(vec_col)).alias("bucket"),
-        F.lit(False).alias("is_q"),
-    ).unionByName(queries.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.explode(probe_cells(F.col(vec_col))).alias("bucket"),
-        F.lit(True).alias("is_q"),
-    ))
-    n_parts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return _inbucket_topk(both, k, n_parts)
+    return _probe_topk(
+        index, queries, id_col, vec_col, k,
+        lambda q: np.argsort(-(_normalize_rows(q) @ cent.T),
+                             axis=1)[:, :n_probe_eff])

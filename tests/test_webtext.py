@@ -660,7 +660,9 @@ def test_webtext_ops_leave_cache_empty(spark, monkeypatch):
 
 def test_lsh_index_param_mismatch_raises(spark):
     """A prebuilt corpus index built with different plane parameters must
-    be rejected, not silently return near-zero recall (ADVICE r4)."""
+    be rejected, not silently return near-zero recall (ADVICE r4); so
+    must an index with stale string keys and an index that is not the
+    one-row-per-vector grouped shape."""
     import pytest
 
     from anofox_forecast_spark.webtext.similarity import hyperplane_buckets
@@ -673,8 +675,8 @@ def test_lsh_index_param_mismatch_raises(spark):
     queries = emb.filter(F.col("vec_id") < 2)
     idx = hyperplane_buckets(emb, "vec_id", "embedding", "c",
                              n_planes=4, n_tables=2, dim=8, seed=1,
-                             with_vec=True)
-    with pytest.raises(ValueError, match="plane parameters"):
+                             with_vec=True, grouped=True)
+    with pytest.raises(ValueError, match="parameters don't match"):
         lsh_cosine_topk(emb, queries, k=3, n_planes=8, n_tables=2, dim=8,
                         seed=1, corpus_index=idx)
     # matching parameters pass validation and run
@@ -683,30 +685,27 @@ def test_lsh_index_param_mismatch_raises(spark):
     assert ok.count() >= 0
     # an index with the pre-int64 "table:sig" string keys and correct
     # parameter metadata matches no probed key: rejected, not empty
-    meta = idx.schema["bucket"].metadata
     stale = idx.withColumn(
-        "bucket",
-        F.concat_ws(":", F.shiftright("bucket", 4).cast("string"),
-                    F.col("bucket").bitwiseAND(15).cast("string")),
-    ).withMetadata("bucket", meta)
+        "buckets",
+        F.transform("buckets", lambda b: F.concat_ws(
+            ":", F.shiftright(b, 4).cast("string"),
+            b.bitwiseAND(15).cast("string"))),
+    ).withMetadata("buckets", idx.schema["buckets"].metadata)
     with pytest.raises(ValueError, match="packed keys"):
         lsh_cosine_topk(emb, queries, k=3, n_planes=4, n_tables=2, dim=8,
                         seed=1, corpus_index=stale)
-    grouped = hyperplane_buckets(emb, "vec_id", "embedding", "c",
-                                 n_planes=4, n_tables=2, dim=8, seed=1,
-                                 with_vec=True, grouped=True)
-    stale = grouped.withColumn(
-        "buckets", F.transform("buckets", lambda b: b.cast("string"))
-    ).withMetadata("buckets", grouped.schema["buckets"].metadata)
-    with pytest.raises(ValueError, match="packed keys"):
+    # the exploded one-row-per-(vector, table) shape is not an ANN index
+    exploded = hyperplane_buckets(emb, "vec_id", "embedding", "c",
+                                  n_planes=4, n_tables=2, dim=8, seed=1,
+                                  with_vec=True)
+    with pytest.raises(ValueError, match="grouped=True"):
         lsh_cosine_topk(emb, queries, k=3, n_planes=4, n_tables=2, dim=8,
-                        seed=1, corpus_index=stale)
+                        seed=1, corpus_index=exploded)
 
 
 def test_packed_bucket_key_overflow_raises(spark):
     """``(table << n_planes) | sig`` must fit 63 bits: wider parameters
     raise instead of wrapping into colliding keys."""
-    import pandas as pd
     import pytest
 
     from anofox_forecast_spark.webtext.similarity import (
@@ -716,7 +715,7 @@ def test_packed_bucket_key_overflow_raises(spark):
 
     emb = spark.createDataFrame([(0, [1.0, 0.0])],
                                 "vec_id long, embedding array<double>")
-    q = pd.DataFrame({"q_id": [0], "q_vec": [[1.0, 0.0]]})
+    q = np.array([[1.0, 0.0]])
     for n_planes, n_tables in [(60, 16), (63, 2), (64, 1)]:
         with pytest.raises(ValueError, match="63"):
             hyperplane_buckets(emb, "vec_id", "embedding", "c",
@@ -727,8 +726,8 @@ def test_packed_bucket_key_overflow_raises(spark):
     # 59 + bit_length(15) = 63 bits still fits
     hyperplane_buckets(emb, "vec_id", "embedding", "c", n_planes=59,
                        n_tables=16, dim=2)
-    assert len(_query_buckets_local(q, n_planes=59, n_tables=16, dim=2,
-                                    seed=1, probe=0)) == 16
+    assert _query_buckets_local(q, n_planes=59, n_tables=16, dim=2,
+                                seed=1, probe=0).shape == (1, 16)
 
 
 def test_repetition_stats(spark):
@@ -815,65 +814,132 @@ def test_semantic_dedup(spark):
     assert all(out[k]["keep"] for k in lone)
 
 
+def _ann_reference(df, q_ids, corpus_keys, query_keys, k):
+    """Test-local ANN reference: a query's candidates are the other
+    vectors holding one of its probed keys, scored with exact float64
+    cosine and ranked by (cosine desc, id asc). ``corpus_keys(V)`` gives
+    every vector's key set, ``query_keys(v)`` one query's probed keys.
+    Returns rows (query, neighbor, rank, cosine)."""
+    pdf = df.toPandas()
+    ids = pdf["vec_id"].to_numpy()
+    V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+    ckeys = corpus_keys(V)
+    out = []
+    for qid in q_ids:
+        qpos = int(np.flatnonzero(ids == qid)[0])
+        probed = query_keys(V[qpos])
+        cand = [j for j in range(len(ids))
+                if ids[j] != qid and ckeys[j] & probed]
+        ranked = sorted((-float(Vn[j] @ Vn[qpos]), int(ids[j])) for j in cand)
+        out += [(int(qid), cid, r + 1, -neg)
+                for r, (neg, cid) in enumerate(ranked[:k])]
+    return out
+
+
+def _assert_topk_matches(got, want):
+    got = got.toPandas().sort_values(["query_id", "rank"])
+    rows = got[["query_id", "neighbor_id", "rank"]].values.tolist()
+    assert rows == [list(w[:3]) for w in want]
+    assert np.allclose(got["cosine"].to_numpy(), [w[3] for w in want],
+                       atol=1e-6)
+
+
 def test_lsh_probe_index_parity(spark):
-    """The broadcast-probe path over a prebuilt (grouped or exploded)
-    index must return EXACTLY the one-shot union path's results — the
-    r5 first cut lost recall because duplicate per-table columns crowded
-    distinct candidates out of the per-batch top-k."""
+    """The LSH probe, with the index built inline or prebuilt, returns
+    exactly the candidates sharing a probed hyperplane key, ranked by
+    exact cosine — the r5 first cut lost recall because duplicate
+    per-table columns crowded distinct candidates out of the per-batch
+    top-k."""
     from anofox_forecast_spark.webtext.similarity import hyperplane_buckets
 
-    rng = np.random.default_rng(5)
-    centers = rng.normal(size=(20, 64))
-    rows = []
-    vid = 0
-    for c in range(20):
-        for _ in range(10):
-            v = centers[c] + rng.normal(0, 0.3, 64)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = df.limit(10)
-    base = lsh_cosine_topk(df, queries, k=5).toPandas() \
-        .sort_values(["query_id", "rank"]).reset_index(drop=True)
-    for grouped in (True, False):
-        idx = hyperplane_buckets(df, "vec_id", "embedding", "c",
-                                 with_vec=True, grouped=grouped)
-        got = lsh_cosine_topk(df, queries, k=5, corpus_index=idx).toPandas() \
-            .sort_values(["query_id", "rank"]).reset_index(drop=True)
-        assert got[["query_id", "neighbor_id", "rank"]].values.tolist() == \
-            base[["query_id", "neighbor_id", "rank"]].values.tolist(), \
-            f"probe path (grouped={grouped}) diverged from one-shot path"
+    n_planes, n_tables, dim, seed = 8, 16, 64, 42
+    df = _clustered_embeddings(spark)
+    queries = df.filter(F.col("vec_id") < 10)
+    planes = np.random.default_rng(seed).normal(size=(n_tables, n_planes, dim))
+    weights = 1 << np.arange(n_planes)
+
+    def sigs(v):  # per-table signature of one or more vectors
+        return ((v @ planes.reshape(-1, dim).T) >= 0).reshape(
+            -1, n_tables, n_planes) @ weights
+
+    def corpus_keys(V):
+        return [set(enumerate(s)) for s in sigs(V)]
+
+    def query_keys(v):  # own bucket + every 1-bit neighbour, per table
+        flips = [0] + [1 << b for b in range(n_planes)]
+        return {(t, s ^ f) for t, s in enumerate(sigs(v)[0]) for f in flips}
+
+    want = _ann_reference(df, range(10), corpus_keys, query_keys, 5)
+    idx = hyperplane_buckets(df, "vec_id", "embedding", "c", with_vec=True,
+                             grouped=True)
+    for corpus_index in (None, idx):
+        _assert_topk_matches(
+            lsh_cosine_topk(df, queries, k=5, corpus_index=corpus_index), want)
 
 
 def test_ivf_probe_index_parity(spark):
-    """IVF probing over a prebuilt index (driver-side cell assignment +
-    map-side scan) must return exactly the one-shot path's results, and
-    a parameter-mismatched index must be rejected."""
+    """The IVF probe, with the index built inline or prebuilt, returns
+    exactly the vectors in the query's n_probe nearest cells ranked by
+    exact cosine; an index with other training parameters or the scalar
+    ``bucket`` cell column is rejected."""
+    import json
+
     import pytest
 
     from anofox_forecast_spark.webtext.similarity import ivf_build_index
 
-    rng = np.random.default_rng(9)
-    centers = rng.normal(size=(8, 32))
-    rows = []
-    vid = 0
-    for c in range(8):
-        for _ in range(25):
-            v = centers[c] + rng.normal(0, 0.3, 32)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = df.limit(6)
-    base = ivf_cosine_topk(df, queries, k=5, n_cells=8, n_probe=3).toPandas() \
-        .sort_values(["query_id", "rank"]).reset_index(drop=True)
+    df = _clustered_embeddings(spark, seed=9, n_centers=8, per_center=25,
+                               dim=32)
+    queries = df.filter(F.col("vec_id") < 6)
     idx = ivf_build_index(df, n_cells=8)
-    got = ivf_cosine_topk(df, queries, k=5, n_cells=8, n_probe=3,
-                          corpus_index=idx).toPandas() \
-        .sort_values(["query_id", "rank"]).reset_index(drop=True)
-    assert got[["query_id", "neighbor_id", "rank"]].values.tolist() == \
-        base[["query_id", "neighbor_id", "rank"]].values.tolist()
+    cent = np.array(json.loads(idx.schema["buckets"].metadata["centroids"]))
+    want = _ann_reference(
+        df, range(6),
+        lambda V: [{int(c)} for c in (V @ cent.T).argmax(axis=1)],
+        lambda v: set(np.argsort(-(cent @ v))[:3].tolist()), 5)
+    for corpus_index in (None, idx):
+        _assert_topk_matches(
+            ivf_cosine_topk(df, queries, k=5, n_cells=8, n_probe=3,
+                            corpus_index=corpus_index), want)
     with pytest.raises(ValueError, match="parameters don't match"):
         ivf_cosine_topk(df, queries, k=5, n_cells=16, corpus_index=idx)
+    # the index shape before the contract: a scalar `bucket` cell column
+    scalar = idx.select("c_id", "c_vec", F.col("buckets")[0].alias("bucket")) \
+        .withMetadata("bucket", idx.schema["buckets"].metadata)
+    with pytest.raises(ValueError, match="ivf_build_index"):
+        ivf_cosine_topk(df, queries, k=5, n_cells=8, corpus_index=scalar)
+
+
+def test_ann_topk_ties_rank_by_id(spark):
+    """Exactly tied cosines rank by neighbour id ascending on every ANN
+    path, as in brute force: the per-batch top-k cut must keep every
+    candidate tied with the k-th score, not whichever rows come first in
+    batch order (here the batch holds ids 9, 7, 5, 3 in that order)."""
+    from anofox_forecast_spark.webtext.similarity import (
+        hyperplane_buckets,
+        ivf_build_index,
+    )
+
+    rows = [(0, [1.0, 2.0, 3.0, 4.0])] + [
+        (i, [2.0, 4.0, 6.0, 8.0]) for i in (9, 7, 5, 3)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>").coalesce(1)
+    q = df.filter(F.col("vec_id") == 0)
+    lsh = dict(n_planes=4, n_tables=2, dim=4)
+    idx = hyperplane_buckets(df, "vec_id", "embedding", "c", **lsh,
+                             with_vec=True, grouped=True)
+    paths = {
+        "brute": brute_force_cosine_topk(df, q, k=2),
+        "lsh": lsh_cosine_topk(df, q, k=2, **lsh),
+        "lsh_index": lsh_cosine_topk(df, q, k=2, **lsh, corpus_index=idx),
+        "ivf": ivf_cosine_topk(df, q, k=2, n_cells=2, n_probe=2),
+        "ivf_index": ivf_cosine_topk(df, q, k=2, n_cells=2, n_probe=2,
+                                     corpus_index=ivf_build_index(df, n_cells=2)),
+    }
+    for name, out in paths.items():
+        got = out.toPandas().sort_values("rank")["neighbor_id"].tolist()
+        assert got == [3, 5], f"{name}: {got}"
 
 
 def test_minhash_incremental_matches_full(spark, tmp_path):

@@ -155,20 +155,26 @@ def main() -> None:
     assert "CartesianProduct" not in plan10, "LSH dedup must not cross-join"
     assert "Join" not in plan10, "in-bucket scoring must not pair-join vectors"
 
-    # 11. IVF ANN: Arrow-batched cell assignment (ArrowEvalPython), then a
-    # cell equi-join — candidate fan-out bounded by n_probe·n/n_cells
+    # 11. IVF ANN: build the index (Arrow-batched cell assignment,
+    # ArrowEvalPython), then probe it map-side (MapInArrow over the index
+    # scan) — no join, no exchange before the scorer; the only exchange is
+    # the rank window over per-batch survivors
     from anofox_forecast_spark.webtext.similarity import ivf_cosine_topk
 
     ivf = ivf_cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5,
                           n_cells=16, n_probe=4)
     plan11 = grab(ivf)
     sections.append((
-        "IVF ANN (ArrowEvalPython cell assignment + in-cell MapInPandas top-k)",
+        "IVF ANN (ArrowEvalPython cell assignment + map-side MapInArrow probe)",
         plan11,
-        ["ArrowEvalPython", "MapInPandas"],
+        ["ArrowEvalPython", "MapInArrow"],
     ))
     assert "CartesianProduct" not in plan11, "IVF must not cross-join"
-    assert "Join" not in plan11, "in-cell scoring must not pair-join vectors"
+    assert "Join" not in plan11, "the index probe must not join"
+    tree11 = plan11.split("\n\n")[0].splitlines()
+    scorer = next(i for i, line in enumerate(tree11) if "MapInArrow" in line)
+    assert not any("Exchange" in line for line in tree11[scorer:]), (
+        "the index scan must reach the scorer without a shuffle")
 
     # 12. MinHash signatures (r4 rewrite): ZERO shuffles — one codegen
     # projection (word split + per-word xxhash64) feeding one Arrow-batched
