@@ -2,10 +2,11 @@
 
 Semantics from the reference (all cites into /root/reference):
 
-- ``fill_gaps``: generate spine start..=end at freq; existing ts keep value,
-  missing ts get NULL (ref NaN) — src/core/time_series.rs:871-932, spine
-  generation :966-1011, calendar month arithmetic with day clamping
-  :1014-1039 (Spark ``sequence`` with month intervals has identical clamping).
+- ``fill_gaps``: each series on its grid start..=end at freq; existing ts
+  keep their row, missing ts get NULL (ref NaN), or a carried / interpolated
+  value — src/core/time_series.rs:871-932, grid generation :966-1011,
+  calendar month arithmetic with day clamping :1014-1039 (Spark's
+  ``start + k·interval`` with month intervals has identical clamping).
 - ``locf`` (ForwardFill policy): src/core/time_series.rs:673-702.
 - ``interpolate_linear``: linear interpolation across NULL runs,
   ``l + (j+1)/(gap+1) * (r-l)`` for the j-th missing point of a run — on an
@@ -22,11 +23,13 @@ engine's canonical missing marker is NULL; ``nan_to_null`` is applied at
 ingest boundaries (the reference uses NaN in-memory,
 src/core/time_series.rs:601-605).
 
-Scale notes: the spine is built per-series from a single hash aggregate
-(min/max per key) and exploded — no driver-side collection; the left join
-back to the data shuffles both sides by (keys, ts) once, and every window
-below partitions by the series key only, so Catalyst reuses one hash
-partitioning across LOCF/NOCB/interpolation stages.
+Scale notes: ``fill_gaps`` is one sort → window → explode pass in the
+JVM: one hash exchange on the series keys, one sort by (keys, ts), one
+Window node for the start, lag and previous-value frames, one Generate — no
+spine aggregate, no join, no Python. ``interp`` adds one sort and Window in
+descending ts on the same partitioning for the next known value.
+``locf`` and ``interpolate_linear`` share these frames and the one
+interpolation expression.
 """
 
 from __future__ import annotations
@@ -48,40 +51,122 @@ def _series_window(keys: Sequence[str], ts_col: str) -> Window:
     return Window.partitionBy(*keys).orderBy(ts_col)
 
 
+def _seconds(c: Column) -> Column:
+    return c.cast("timestamp").cast("double")  # NTZ-safe under UTC
+
+
+def _neighbours(
+    v: Column, keys: Sequence[str], ts_col: str
+) -> tuple[Column, Column, Column, Column]:
+    """(v0, t0, v1, t1): the last non-NULL value strictly before the current
+    row and the first at or after it, each with its time in seconds.
+
+    The forward look runs over the series in descending ts from its start:
+    Spark re-aggregates a frame ending at unboundedFollowing for every
+    row, which is quadratic in the series length (``local[4]`` on a 4-core
+    host, 40 series of ~4.8k rows: interp fill_gaps 38 s that way, 1.3 s
+    this way)."""
+    t = F.when(v.isNotNull(), _seconds(F.col(ts_col)))
+    prev = _series_window(keys, ts_col).rowsBetween(Window.unboundedPreceding, -1)
+    nxt = Window.partitionBy(*keys).orderBy(F.col(ts_col).desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return (
+        F.last(v, ignorenulls=True).over(prev),
+        F.last(t, ignorenulls=True).over(prev),
+        F.last(v, ignorenulls=True).over(nxt),
+        F.last(t, ignorenulls=True).over(nxt),
+    )
+
+
+def _interpolated(v, t, v0, t0, v1, t1, fill_edges: bool) -> Column:
+    """``v`` where known; else v0 + (t-t0)/(t1-t0) * (v1-v0) between two
+    known neighbours; at an edge the nearer known value with
+    ``fill_edges``, else NULL. DOUBLE."""
+    edge = F.coalesce(v0, v1) if fill_edges else F.lit(None)
+    inner = v0.isNotNull() & v1.isNotNull() & (t1 != t0)
+    return F.when(v.isNotNull(), v).otherwise(
+        F.when(inner, v0 + (t - t0) / (t1 - t0) * (v1 - v0)).otherwise(edge)
+    ).cast("double")
+
+
 def fill_gaps(
     df: DataFrame,
     keys: Sequence[str],
     ts_col: str,
     value_cols: Sequence[str],
     freq: str,
-    mark_filled: bool = True,
+    method: str = "none",
+    fill_edges: bool = False,
 ) -> DataFrame:
-    """Per-series dense spine at ``freq``; missing points get NULL values.
+    """Each series on its ``freq`` grid from its first to its last
+    timestamp (ref fill_gaps, src/core/time_series.rs:871-932); ``filled``
+    marks rows absent from the input.
 
-    Matches ref fill_gaps (src/core/time_series.rs:871-932): spine runs from
-    each series' min(ts) to max(ts) inclusive. Timestamps must already be
-    aligned to the frequency grid (the rollup tiers guarantee this since
-    bucket starts come from ``window()``).
+    method: "none" leaves ``value_cols`` NULL on gap rows; "locf" gives gap
+    rows and observed NULLs the last non-NULL value before them (leading
+    NULLs stay); "interp" interpolates as ``interpolate_linear`` and
+    returns the value columns as DOUBLE. Other columns pass through on
+    observed rows and are NULL on gap rows. Columns: keys, ts, the other
+    input columns in input order, ``filled``.
+
+    One pass, no join: a window over (keys, ts) reads the series start,
+    the previous timestamp and each value's neighbours; every observed row
+    explodes the grid slots since the previous row plus its own. Slot k is
+    ``start + k·freq``, so month grids keep ``sequence``'s day clamping
+    (Jan 31 → Feb 29 → Mar 31). A NULL, off-grid or duplicate timestamp
+    raises.
     """
+    if method not in ("none", "locf", "interp"):
+        raise ValueError(f"unknown method {method!r}")
     f = parse_frequency(freq)
-    spine = (
-        df.groupBy(*keys)
-        .agg(F.min(ts_col).alias("__start"), F.max(ts_col).alias("__end"))
-        .select(
-            *keys,
-            F.explode(
-                F.expr(f"sequence(__start, __end, {f.sql_interval()})")
-            ).alias(ts_col),
-        )
+    w = _series_window(keys, ts_col)
+    ts, start, slot = F.col(ts_col), F.col("__start"), F.col("__slot")
+
+    def index(c: Column) -> Column:  # whole steps from the series start
+        if f.kind == "duration":
+            us = F.unix_micros(c.cast("timestamp")) - F.unix_micros(start.cast("timestamp"))
+            return (us / (f.seconds * 1_000_000)).cast("long")
+        return (((F.year(c) - F.year(start)) * 12 + F.month(c) - F.month(start))
+                / f.months).cast("long")
+
+    def at(k: Column) -> Column:
+        return start + F.expr(f.sql_interval()) * k
+
+    def fail(*problem: Column) -> Column:
+        return F.raise_error(F.concat(
+            F.lit("fill_gaps: "), *problem, F.lit(" in series "), F.to_json(F.struct(*keys))
+        ))
+
+    names = {"none": (), "locf": ("v0",), "interp": ("v0", "t0", "v1", "t1")}[method]
+    nbrs = [x.alias(f"__{n}_{c}") for c in value_cols
+            for n, x in zip(names, _neighbours(F.col(c), keys, ts_col))]
+    rows = df.select(
+        "*", F.first(ts).over(w).alias("__start"), F.lag(ts).over(w).alias("__lag"), *nbrs
+    ).withColumn("__k", index(ts))
+    first_slot = (  # the checks run here, before sequence() sees bad bounds
+        F.when(start.isNull(), fail(F.lit("NULL timestamp")))
+        .when(at(F.col("__k")) != ts,
+              fail(F.lit(f"timestamp off the {freq} grid: "), ts.cast("string")))
+        .when(ts == F.col("__lag"), fail(F.lit("duplicate timestamp "), ts.cast("string")))
+        .otherwise(F.coalesce(index(F.col("__lag")) + 1, F.lit(0)))
     )
-    # Tag observed rows BEFORE the join: `filled` means "row did not exist
-    # in the input", not "value is NULL" — a genuinely-NULL measure at an
-    # existing timestamp must not be mislabeled as a gap.
-    tagged = df.withColumn("__observed", F.lit(True))
-    joined = spine.join(tagged, on=[*keys, ts_col], how="left")
-    if mark_filled:
-        joined = joined.withColumn("filled", F.col("__observed").isNull())
-    return joined.drop("__observed")
+    slots = rows.withColumn("__slot", F.explode(F.sequence(first_slot, F.col("__k"))))
+    observed = slot == F.col("__k")
+
+    def value(c: str) -> Column:
+        v = F.when(observed, F.col(c))
+        if c not in value_cols or method == "none":
+            return v
+        if method == "locf":
+            return F.coalesce(v, F.col(f"__v0_{c}"))
+        nb = [F.col(f"__{n}_{c}") for n in names]
+        return _interpolated(v, _seconds(F.col(ts_col)), *nb, fill_edges=fill_edges)
+
+    rest = [c for c in df.columns if c not in (*keys, ts_col, "filled")]
+    return slots.withColumn(ts_col, at(slot)).select(
+        *keys, ts_col, *[value(c).alias(c) for c in rest], (~observed).alias("filled")
+    )
 
 
 def locf(
@@ -90,15 +175,13 @@ def locf(
     ts_col: str,
     value_cols: Sequence[str],
 ) -> DataFrame:
-    """Last-observation-carried-forward (ref ForwardFill, :673-702).
-
-    Leading NULLs (no prior observation) stay NULL, same as the reference
-    (forward fill leaves leading NaNs).
-    """
-    w = _series_window(keys, ts_col).rowsBetween(Window.unboundedPreceding, 0)
+    """Last-observation-carried-forward in place (ref ForwardFill,
+    :673-702): each NULL takes the last non-NULL value before it in its
+    series; leading NULLs stay NULL, as in the reference."""
     out = df
     for c in value_cols:
-        out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
+        v0 = _neighbours(F.col(c), keys, ts_col)[0]
+        out = out.withColumn(c, F.coalesce(F.col(c), v0))
     return out
 
 
@@ -109,36 +192,20 @@ def interpolate_linear(
     value_cols: Sequence[str],
     fill_edges: bool = False,
 ) -> DataFrame:
-    """Linear interpolation across NULL runs (ref :1063-1117).
+    """Linear interpolation across NULL runs in place (ref :1063-1117).
 
-    For a missing point at time t between last-known (t0,v0) and next-known
-    (t1,v1): v = v0 + (t-t0)/(t1-t0) * (v1-v0). On the equally-spaced spine
-    produced by ``fill_gaps`` this is exactly the reference's
-    ``l + (j+1)/(gap+1) * (r-l)``. Edges: with fill_edges, leading NULLs take
-    the first known value and trailing NULLs the last known (flat), matching
-    ref ``interpolated(fill_edges=true)`` (src/core/time_series.rs:707-724).
+    A NULL at time t between last-known (t0,v0) and next-known (t1,v1)
+    becomes v0 + (t-t0)/(t1-t0) * (v1-v0); on an equally spaced grid this
+    is the reference's ``l + (j+1)/(gap+1) * (r-l)``. With fill_edges,
+    leading NULLs take the first known value and trailing NULLs the last
+    (ref ``interpolated(fill_edges=true)``, src/core/time_series.rs:707-724).
     """
-    w_prev = _series_window(keys, ts_col).rowsBetween(Window.unboundedPreceding, 0)
-    w_next = _series_window(keys, ts_col).rowsBetween(0, Window.unboundedFollowing)
-    ts_d = F.col(ts_col).cast("timestamp").cast("double")  # NTZ-safe under UTC
     out = df
     for c in value_cols:
         v = F.col(c)
-        prev_v = F.last(v, ignorenulls=True).over(w_prev)
-        next_v = F.first(v, ignorenulls=True).over(w_next)
-        prev_t = F.last(F.when(v.isNotNull(), ts_d), ignorenulls=True).over(w_prev)
-        next_t = F.first(F.when(v.isNotNull(), ts_d), ignorenulls=True).over(w_next)
-        interp = prev_v + (ts_d - prev_t) / (next_t - prev_t) * (next_v - prev_v)
-        filled = F.when(v.isNotNull(), v).otherwise(
-            F.when(
-                prev_v.isNotNull() & next_v.isNotNull() & (next_t != prev_t), interp
-            ).otherwise(
-                F.when(F.lit(fill_edges), F.coalesce(prev_v, next_v)).otherwise(
-                    F.lit(None).cast("double")
-                )
-            )
-        )
-        out = out.withColumn(c, filled)
+        out = out.withColumn(c, _interpolated(
+            v, _seconds(F.col(ts_col)), *_neighbours(v, keys, ts_col), fill_edges=fill_edges
+        ))
     return out
 
 
@@ -301,103 +368,10 @@ def gapfill_dense(
     method: str = "locf",
     fill_edges: bool = False,
 ) -> DataFrame:
-    """Fused gap-fill: spine + fill in ONE pass (VERDICT r1 roadmap #9).
-
-    ``fill_gaps → locf/interpolate_linear`` costs a groupBy (spine), a join,
-    and a chain of window nodes over one sort. This variant does the whole
-    job with one shuffle: repartition by series key, sort by ts, then a
-    batched mapInPandas densifies each series onto the frequency grid and
-    fills with vectorized numpy (LOCF via maximum.accumulate indexing,
-    linear interpolation via np.interp). Output rows/values are identical
-    to the unfused chain (checksum-equality tested).
-
-    method: "none" (NULL gaps), "locf", or "interp". Seconds-based
-    frequencies only (tiers are seconds-based; monthly spines go through
-    fill_gaps, whose Spark `sequence` handles calendar months).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
-
-    from anofox_forecast_spark.models.harness import batched_series_apply
-
-    if method not in ("none", "locf", "interp"):
-        raise ValueError(f"unknown method {method!r}")
-    f = parse_frequency(freq)
-    if f.kind != "duration":
-        raise ValueError("gapfill_dense supports duration frequencies; use fill_gaps")
-    step_us = f.seconds * 1_000_000
-
-    keys_l = list(keys)
-    vcols = list(value_cols)
-    # value columns come back as DOUBLE (the numpy fill path is float64);
-    # gap rows are NULL (NaN normalized JVM-side below)
-    out_schema = StructType(
-        [df.schema[k] for k in keys_l]
-        + [df.schema[ts_col]]
-        + [StructField(c, DoubleType()) for c in vcols]
-        + [StructField("filled", BooleanType())]
+    """``fill_gaps`` over (keys, ts, value_cols) with DOUBLE values, NaN
+    read as missing, and LOCF by default. Output: keys, ts, value_cols,
+    ``filled``."""
+    vals = [nan_to_null(F.col(c).cast("double")).alias(c) for c in value_cols]
+    return fill_gaps(
+        df.select(*keys, ts_col, *vals), keys, ts_col, value_cols, freq, method, fill_edges
     )
-
-    def per_series(g: pd.DataFrame, out: dict) -> None:
-        ts = g[ts_col].astype("datetime64[us]").astype("int64").to_numpy()
-        # grid-alignment guard (ADVICE r2): an off-grid or duplicate
-        # timestamp would silently floor onto the previous slot /
-        # overwrite — diverging from the fill_gaps chain this function
-        # claims checksum-equality with. Fail loudly instead.
-        off = (ts - ts[0]) % step_us
-        if off.any():
-            key_repr = tuple(g[k].iloc[0] for k in keys_l)
-            raise ValueError(
-                f"gapfill_dense: series {key_repr} has timestamps off the "
-                f"{step_us}µs grid (first at index {int(np.flatnonzero(off)[0])}); "
-                "use fill_gaps for unaligned input"
-            )
-        n_dense = int((ts[-1] - ts[0]) // step_us) + 1
-        grid = ts[0] + step_us * np.arange(n_dense)
-        pos = (ts - ts[0]) // step_us  # observed rows' slots (validated above)
-        if pos.size > 1:
-            dpos = np.diff(pos)
-            # Distinguish duplicates from merely-unsorted input (ADVICE r3):
-            # the harness sorts within partitions, but a direct caller may
-            # not, and a misleading "duplicate" message misdirects debugging.
-            if (dpos == 0).any():
-                key_repr = tuple(g[k].iloc[0] for k in keys_l)
-                raise ValueError(
-                    f"gapfill_dense: series {key_repr} has duplicate timestamps"
-                )
-            if (dpos < 0).any():
-                key_repr = tuple(g[k].iloc[0] for k in keys_l)
-                raise ValueError(
-                    f"gapfill_dense: series {key_repr} has out-of-order "
-                    "timestamps (input must be sorted ascending per series)"
-                )
-        observed = np.zeros(n_dense, dtype=bool)
-        observed[pos] = True
-        for k in keys_l:
-            out[k].append(np.repeat(g[k].iloc[0], n_dense))
-        out[ts_col].append(grid.astype("datetime64[us]"))
-        out["filled"].append(~observed)
-        for c in vcols:
-            v = np.full(n_dense, np.nan)
-            v[pos] = g[c].to_numpy(dtype=np.float64)
-            if method == "locf":
-                idx = np.where(~np.isnan(v), np.arange(n_dense), -1)
-                idx = np.maximum.accumulate(idx)
-                v = np.where(idx >= 0, v[np.maximum(idx, 0)], np.nan)
-            elif method == "interp":
-                valid = ~np.isnan(v)
-                if valid.any():
-                    xi = np.flatnonzero(valid)
-                    v_new = np.interp(np.arange(n_dense), xi, v[xi])
-                    if not fill_edges:  # np.interp clamps edges flat — undo
-                        v_new[: xi[0]] = np.nan
-                        v_new[xi[-1] + 1:] = np.nan
-                    v = np.where(valid, v, v_new)
-            out[c].append(v)
-
-    out = batched_series_apply(df, keys_l, ts_col, per_series, out_schema)
-    for c in vcols:
-        out = out.withColumn(c, nan_to_null(F.col(c)))
-    return out

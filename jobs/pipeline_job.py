@@ -4,7 +4,7 @@
         jobs/pipeline_job.py --pages 1000000 --hosts 500 --weeks 8
 
 Stages (each timed; one JSON line on stdout):
-  synthesize → 1h rollup → 1d cascade → 7d cascade → gap-fill+LOCF+interp
+  synthesize → 1h rollup → 1d cascade → 7d cascade → one-pass gap-fill (LOCF)
   → grouped-map forecast (seasonal_naive, ses, theta) → Gorilla compress.
 
 Designed so the identical job runs at two parallelism levels (N and 4N
@@ -51,7 +51,7 @@ def main() -> None:
 
     from anofox_forecast_spark.bench_util import checksum_count
     from anofox_forecast_spark.compression.gorilla import compress_chunks
-    from anofox_forecast_spark.core.gapfill import fill_gaps, interpolate_linear, locf
+    from anofox_forecast_spark.core.gapfill import fill_gaps
     from anofox_forecast_spark.models.harness import forecast
     from anofox_forecast_spark.rollup.tiers import (
         cascade_rollup,
@@ -96,10 +96,8 @@ def main() -> None:
         "lang", "host", "bucket_start", F.col("crawl_count").cast("double").alias("y"))
 
     def gapfill_job():
-        f = fill_gaps(series_1h, ["lang", "host"], "bucket_start", ["y"], "1h")
-        f = locf(f, ["lang", "host"], "bucket_start", ["y"])
-        return checksum_count(
-            interpolate_linear(f, ["lang", "host"], "bucket_start", ["y"]))
+        return checksum_count(fill_gaps(
+            series_1h, ["lang", "host"], "bucket_start", ["y"], "1h", method="locf"))
 
     def forecast_job():
         return checksum_count(

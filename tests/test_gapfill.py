@@ -3,13 +3,22 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
+import sys
 
-from anofox_forecast_spark.core import (
+import duckdb
+import pytest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from anofox_forecast_spark.core import (  # noqa: E402
     fill_gaps,
     infer_frequency,
     interpolate_linear,
     locf,
 )
+from anofox_forecast_spark.core.gapfill import gapfill_dense  # noqa: E402
+from tools.check_oracle import norm_rows  # noqa: E402
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -59,6 +68,20 @@ def test_fill_gaps_monthly(spark):
         " interval 1 month) x"
     ).collect()[0].x
     assert clamp[1].day == 29
+    # a month-end series gets exactly Spark's sequence grid: every slot is
+    # start + k months, clamped (Jan 31 → Feb 29 → Mar 31 → Apr 30)
+    month_end = spark.sql(
+        "select 'a' sid, to_timestamp(x) ts, 1.0 y from "
+        "values ('2024-01-31'), ('2024-04-30') as t(x)"
+    )
+    out = fill_gaps(month_end, ["sid"], "ts", ["y"], "1mo").orderBy("ts").collect()
+    want = spark.sql(
+        "select sequence(to_timestamp('2024-01-31'), to_timestamp('2024-04-30'),"
+        " interval 1 month) x"
+    ).collect()[0].x
+    assert [r.ts for r in out] == want
+    assert [(r.ts.month, r.ts.day) for r in out] == [(1, 31), (2, 29), (3, 31), (4, 30)]
+    assert [r.filled for r in out] == [False, True, True, False]
 
 
 def test_locf(spark):
@@ -148,27 +171,118 @@ def test_infer_frequency_monthly_snaps_calendar_months(spark):
     assert monthly.freq_months == 1 and monthly.modal_ratio > 0.9
 
 
-def test_gapfill_dense_matches_unfused_chain(spark):
-    """Fused spine+fill (one mapInPandas) == fill_gaps→locf/interp chain."""
-    from anofox_forecast_spark.core.gapfill import gapfill_dense
+def test_fill_gaps_null_key_series_keeps_values(spark):
+    """A series whose key is NULL is one series like any other."""
+    t0, t2 = _hours(0, 2)
+    df = _mk(spark, [(None, t0, 1.0), (None, t2, 3.0)])
+    out = fill_gaps(df, ["sid"], "ts", ["y"], "1h").orderBy("ts").collect()
+    assert [(r.sid, r.ts.hour, r.y, r.filled) for r in out] == [
+        (None, 0, 1.0, False), (None, 1, None, True), (None, 2, 3.0, False)]
 
-    ts = _hours(0, 1, 4, 5, 9)
-    df = _mk(spark, [("a", t, float(i * i)) for i, t in enumerate(ts)]
-             + [("b", ts[0], 7.0), ("b", ts[2], None), ("b", ts[4], 3.0)])
 
-    for method, chain in (
-        ("locf", lambda d: locf(d, ["sid"], "ts", ["y"])),
-        ("interp", lambda d: interpolate_linear(d, ["sid"], "ts", ["y"])),
-        ("none", lambda d: d),
-    ):
-        want = chain(fill_gaps(df, ["sid"], "ts", ["y"], "1h")) \
-            .select("sid", "ts", "y", "filled").orderBy("sid", "ts").collect()
-        got = gapfill_dense(df, ["sid"], "ts", ["y"], "1h", method=method) \
-            .select("sid", "ts", "y", "filled").orderBy("sid", "ts").collect()
-        assert len(got) == len(want), method
-        for g, w in zip(got, want):
-            assert (g.sid, g.ts, g.filled) == (w.sid, w.ts, w.filled), method
-            if w.y is None:
-                assert g.y is None, (method, g)
-            else:
-                assert g.y is not None and abs(g.y - w.y) < 1e-9, (method, g, w)
+_BAD_TIMESTAMPS = {
+    "off_grid": ([0, 1.5, 3], "off the 1h grid: 2024-01-01 01:30:00"),
+    "duplicate": ([0, 2, 2], "duplicate timestamp 2024-01-01 02:00:00"),
+    "null": ([0, None, 2], "NULL timestamp"),
+}
+
+
+@pytest.mark.parametrize("fill", [fill_gaps, gapfill_dense], ids=lambda f: f.__name__)
+@pytest.mark.parametrize("case", list(_BAD_TIMESTAMPS))
+def test_fill_gaps_bad_timestamp_raises(spark, case, fill):
+    """An off-grid, duplicate or NULL timestamp fails the query, naming the
+    problem and the series, instead of dropping or repeating rows."""
+    hours, message = _BAD_TIMESTAMPS[case]
+    rows = [("a", None if h is None else T0 + dt.timedelta(hours=h), 1.0) for h in hours]
+    with pytest.raises(Exception, match=message + r'.* in series \{"sid":"a"\}'):
+        fill(_mk(spark, rows), ["sid"], "ts", ["y"], "1h").collect()
+
+
+def _gap_fill_reference(rows, step, method, fill_edges):
+    """Pure-Python gap-fill: per series, the grid from first to last ts at
+    ``step``; values by method as documented on ``fill_gaps``."""
+    series: dict = {}
+    for sid, t, y in rows:
+        series.setdefault(sid, {})[t] = y
+    out = []
+    for sid, obs in series.items():
+        grid = [min(obs)]
+        while grid[-1] < max(obs):
+            grid.append(grid[-1] + step)
+        vals = [obs.get(t) for t in grid]
+        known = [(t, v) for t, v in zip(grid, vals) if v is not None]
+        for t, v in zip(grid, vals):
+            before = [kv for kv in known if kv[0] < t]
+            after = [kv for kv in known if kv[0] > t]
+            if v is None and method == "locf" and before:
+                v = before[-1][1]
+            elif v is None and method == "interp":
+                if before and after:
+                    (t0, v0), (t1, v1) = before[-1], after[0]
+                    v = v0 + (t - t0).total_seconds() / (t1 - t0).total_seconds() * (v1 - v0)
+                elif fill_edges and (before or after):
+                    v = (before[-1] if before else after[0])[1]
+            out.append((sid, t, v, t not in obs))
+    return out
+
+
+def test_fill_gaps_matches_python_reference(spark):
+    """fill_gaps and gapfill_dense == a pure-Python gap-fill for every
+    method × fill_edges: series with gaps, a NULL-key series, NULL values
+    on observed rows, leading and trailing NULLs."""
+    h = _hours(*range(10))
+    rows = (
+        [("a", t, float(i * i)) for i, t in enumerate(_hours(0, 1, 4, 5, 9))]
+        + [("b", h[0], 7.0), ("b", h[4], None), ("b", h[9], 3.0)]
+        + [("c", h[0], None), ("c", h[1], None), ("c", h[3], 7.0), ("c", h[6], 4.0),
+           ("c", h[8], None)]
+        + [(None, h[2], 1.0), (None, h[4], None), (None, h[5], 3.0)]
+    )
+    df = _mk(spark, rows)
+    key = lambda r: (r[0] or "", r[1])  # noqa: E731
+    for method in ("none", "locf", "interp"):
+        for fill_edges in (False, True):
+            want = sorted(_gap_fill_reference(rows, dt.timedelta(hours=1), method,
+                                              fill_edges), key=key)
+            for fill in (fill_gaps, gapfill_dense):
+                got = sorted(
+                    (tuple(r) for r in fill(df, ["sid"], "ts", ["y"], "1h", method=method,
+                                            fill_edges=fill_edges).collect()),
+                    key=key)
+                case = (fill.__name__, method, fill_edges)
+                assert [(g[0], g[1], g[3]) for g in got] == [(w[0], w[1], w[3]) for w in want], case
+                for g, w in zip(got, want):
+                    assert (g[2] is None) == (w[2] is None), (case, g, w)
+                    if w[2] is not None:
+                        assert g[2] == pytest.approx(w[2], rel=1e-12), (case, g, w)
+
+
+GAPFILL_QUERIES = ("gapfill_spine_1h", "gapfill_locf_1h", "gapfill_interp_1h",
+                   "gapfill_dense_1h", "forecast_snaive_1h")
+
+
+def test_gapfill_driver_queries_match_duckdb_oracle(spark):
+    """The gap-fill queries of plans/driver_queries.py against their DuckDB
+    ``oracle_sql()`` twins on the sf0.001 tables, compared as
+    tools/check_oracle.py does (column names, row count, order-insensitive
+    normalized rows)."""
+    import __spark_entry__ as entry
+    from anofox_forecast_spark.sources.tables import DEFAULT_SF_DIR, TABLES
+
+    sf_dir = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(path):
+            con.execute(f"create view {t} as select * from read_parquet('{path}')")
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    for name in GAPFILL_QUERIES:
+        sdf = queries[name](spark, sf_dir)
+        scols = [c.lower() for c in sdf.columns]
+        srows = [tuple(r) for r in sdf.collect()]
+        rel = con.sql(oracles[name])
+        dcols = [c.lower() for c in rel.columns]
+        drows = rel.fetchall()
+        assert sorted(scols) == sorted(dcols), name
+        assert len(srows) == len(drows) > 0, name
+        assert norm_rows(scols, srows) == norm_rows(dcols, drows), name

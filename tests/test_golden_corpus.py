@@ -10,6 +10,9 @@ reference's looser tiers (validation/README.md MAD table).
 Also asserts identities that hold BY DEFINITION (independent of goldens):
 naive == last value, seasonal_naive == last cycle, historic_average ==
 mean, random_walk_drift line, ses flat at the SES level.
+
+tools/make_goldens.py writes tests/golden/corpus_forecasts.json; rerun it
+only when kernel semantics change on purpose.
 """
 
 from __future__ import annotations

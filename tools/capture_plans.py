@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from anofox_forecast_spark.core.gapfill import fill_gaps, locf  # noqa: E402
+from anofox_forecast_spark.core.gapfill import fill_gaps  # noqa: E402
 from anofox_forecast_spark.models.harness import forecast  # noqa: E402
 from anofox_forecast_spark.rollup.tiers import (  # noqa: E402
     cascade_rollup,
@@ -68,16 +68,25 @@ def main() -> None:
         ["HashAggregate"],
     ))
 
-    # 4. gap-fill spine join + LOCF windows share one partitioning
-    filled = fill_gaps(
-        t1h.select("lang", "host", "bucket_start",
-                   F.col("crawl_count").cast("double").alias("y")),
-        ["lang", "host"], "bucket_start", ["y"], "1h")
-    sections.append((
-        "Gap-fill spine left join + LOCF window",
-        grab(locf(filled, ["lang", "host"], "bucket_start", ["y"])),
-        ["Window", "Join", "Exchange"],  # AQE picks BroadcastHashJoin (small spine) over SMJ
-    ))
+    # 4. and 7. gap-fill is one pass over the cached series: ONE Exchange on
+    # the series keys -> sort -> Window -> one Generate (explode); no spine
+    # aggregate, no join, no Python
+    y1h = t1h.select("lang", "host", "bucket_start",
+                     F.col("crawl_count").cast("double").alias("y")).persist()
+
+    def gapfill_section(title: str, **kw) -> tuple[str, str, list[str]]:
+        plan = grab(fill_gaps(y1h, ["lang", "host"], "bucket_start", ["y"], "1h", **kw))
+        for node in ("Join", "MapInPandas", "ArrowEvalPython"):
+            assert node not in plan, f"gap-fill must not plan a {node}"
+        tree = plan.split("\n\n")[0].splitlines()
+        cached = next(i for i, line in enumerate(tree) if "InMemoryTableScan" in line)
+        assert sum("Exchange" in line for line in tree[:cached]) == 1, (
+            "gap-fill must shuffle exactly once (on the series keys)")
+        return title, plan, ["Window", "Generate", "Exchange"]
+
+    sections.append(gapfill_section(
+        "Gap-fill + LOCF (one pass: Exchange on keys -> sort -> Window -> Generate)",
+        method="locf"))
 
     # 5. broadcast join for per-series stats (scale transform)
     sections.append((
@@ -100,19 +109,11 @@ def main() -> None:
         ["MapInPandas", "Exchange", "Sort"],
     ))
 
-    # 7. fused gap-fill: ONE exchange + sort feeding a single MapInPandas
-    # (replaces spine-agg + join + window chain)
-    from anofox_forecast_spark.core.gapfill import gapfill_dense
-
-    gd = gapfill_dense(
-        t1h.select("lang", "host", "bucket_start",
-                   F.col("crawl_count").cast("double").alias("y")),
-        ["lang", "host"], "bucket_start", ["y"], "1h", method="locf")
-    sections.append((
-        "Fused gap-fill (one repartition -> sort -> MapInPandas, no join/window)",
-        grab(gd),
-        ["MapInPandas", "Exchange", "Sort"],
-    ))
+    # 7. the same pass interpolating, edges filled: the next known value
+    # comes from a second sort + Window in descending ts, still no Exchange
+    sections.append(gapfill_section(
+        "Gap-fill + linear interpolation, fill_edges (the same pass, plus a descending-ts Window)",
+        method="interp", fill_edges=True))
 
     # 8. calendar annotations: holiday dim broadcast, fact side not shuffled
     from anofox_forecast_spark.core.calendar import holiday_dim, with_calendar_annotations
