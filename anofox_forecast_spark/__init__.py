@@ -22,3 +22,7 @@ reference (which is Rust — only its *semantics* are reproduced).
 """
 
 __version__ = "0.1.0"
+
+from anofox_forecast_spark import _worker
+
+_worker.install()

@@ -21,7 +21,12 @@ where that cost is a visible share of the stage (``local[4]``, shared 4-core
 x86 machine, 4 vs the old 8 partitions, alternating): an identity
 ``mapInPandas`` over 13k rows took 0.68 vs 1.24 s (0.21-0.27 s with no
 Python stage), and 1-5 s CV/STL/PELT stages over ~270 series ran 8-24 %
-faster in 29 of 30 pairs. Where kernel time dominates only the hash balance
+faster in 29 of 30 pairs. Most of that per-task cost was each task
+re-reading the worker's zip-archive directories (~0.2 s, ``_worker``).
+With those reads gone the same identity stage, importing the package as
+engine UDFs do, takes 0.22-0.26 vs 0.30-0.35 s at 4 vs 8 partitions
+(0.12-0.16 s with no Python stage; two runs, medians of 7,
+BENCH/PYTHON_TASK_COST.md). Where kernel time dominates only the hash balance
 moves, and a second wave did not improve it: a 55-85 s ``cross_validate``
 (ets+holt_winters+optimized_theta, ~270 gap-filled hourly series) had
 medians of 61-63 s at 4 and 70-73 s at 8, 4 winning 10 of 14 pairs. The

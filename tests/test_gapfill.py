@@ -6,7 +6,6 @@ import datetime as dt
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -18,7 +17,6 @@ from anofox_forecast_spark.core import (  # noqa: E402
     locf,
 )
 from anofox_forecast_spark.core.gapfill import gapfill_dense  # noqa: E402
-from tools.check_oracle import norm_rows  # noqa: E402
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -255,34 +253,3 @@ def test_fill_gaps_matches_python_reference(spark):
                     assert (g[2] is None) == (w[2] is None), (case, g, w)
                     if w[2] is not None:
                         assert g[2] == pytest.approx(w[2], rel=1e-12), (case, g, w)
-
-
-GAPFILL_QUERIES = ("gapfill_spine_1h", "gapfill_locf_1h", "gapfill_interp_1h",
-                   "gapfill_dense_1h", "forecast_snaive_1h")
-
-
-def test_gapfill_driver_queries_match_duckdb_oracle(spark):
-    """The gap-fill queries of plans/driver_queries.py against their DuckDB
-    ``oracle_sql()`` twins on the sf0.001 tables, compared as
-    tools/check_oracle.py does (column names, row count, order-insensitive
-    normalized rows)."""
-    import __spark_entry__ as entry
-    from anofox_forecast_spark.sources.tables import DEFAULT_SF_DIR, TABLES
-
-    sf_dir = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(f"create view {t} as select * from read_parquet('{path}')")
-    queries, oracles = entry.queries(), entry.oracle_sql()
-    for name in GAPFILL_QUERIES:
-        sdf = queries[name](spark, sf_dir)
-        scols = [c.lower() for c in sdf.columns]
-        srows = [tuple(r) for r in sdf.collect()]
-        rel = con.sql(oracles[name])
-        dcols = [c.lower() for c in rel.columns]
-        drows = rel.fetchall()
-        assert sorted(scols) == sorted(dcols), name
-        assert len(srows) == len(drows) > 0, name
-        assert norm_rows(scols, srows) == norm_rows(dcols, drows), name
