@@ -9,7 +9,7 @@ Arrow-vectorized pandas UDFs:
   recompute (north rule)
 - gap-fill: spine generation, LOCF, linear interpolation
   (ref ``src/core/time_series.rs:871-932,1063-1117`` semantics)
-- grouped-map forecasting kernels (seasonal-naive, SES, Holt, Holt-Winters,
+- batched per-series forecasting kernels (seasonal-naive, SES, Holt, Holt-Winters,
   ETS, Theta, intermittent family…) matching the reference's numerical
   contracts (ref ``src/models/``)
 - Gorilla XOR float compression + delta-of-delta timestamp packing inside

@@ -16,8 +16,9 @@ Semantics from ref src/changepoint/pelt.rs and cost.rs (fresh numpy impl):
     CUSUM: max |cum deviation from segment mean| (cost.rs:189-207)
     Periodicity: unexplained variance after top-3 frequencies (cost.rs:217)
 
-The Spark surface runs the DP per series inside the grouped map —
-sequential per series, parallel across series (SURVEY §2.10).
+The Spark surface runs the DP per series inside the harness's batched
+per-series stage (``batched_series_apply``) — sequential per series,
+parallel across series (SURVEY §2.10).
 """
 
 from __future__ import annotations
@@ -203,10 +204,9 @@ def pelt_detect_spark(
     min_segment_length: int = 2,
 ):
     """Per-series PELT: returns (keys…, changepoint_index, changepoint_ts)."""
-    import pandas as pd
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    from anofox_forecast_spark.models.harness import _grouped_apply
+    from anofox_forecast_spark.models.harness import batched_series_apply
 
     keys_l = list(keys)
     out_schema = StructType(
@@ -214,20 +214,15 @@ def pelt_detect_spark(
         + [StructField("changepoint_index", IntegerType()), df.schema[ts_col]]
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        y = pdf[value_col].to_numpy(dtype=np.float64)
-        r = pelt_detect(y, penalty, cost_fn, min_segment_length)
-        rows = {k: [] for k in keys_l}
-        rows["changepoint_index"] = []
-        rows[ts_col] = []
-        for c in r.changepoints:
-            for k in keys_l:
-                rows[k].append(pdf[k].iloc[0])
-            rows["changepoint_index"].append(np.int32(c))
-            rows[ts_col].append(pdf[ts_col].iloc[c])
-        return pd.DataFrame(rows) if rows["changepoint_index"] else pd.DataFrame(
-            {f.name: pd.Series(dtype="object") for f in out_schema.fields}
-        )
+    def per_series(g, out: dict) -> None:
+        y = g[value_col].to_numpy(dtype=np.float64)
+        cps = np.array(pelt_detect(y, penalty, cost_fn, min_segment_length).changepoints,
+                       dtype=np.int32)
+        if not cps.size:
+            return
+        for k in keys_l:
+            out[k].append(np.repeat(g[k].iloc[0], cps.size))
+        out["changepoint_index"].append(cps)
+        out[ts_col].append(g[ts_col].to_numpy()[cps])
 
-    return _grouped_apply(df, keys_l, fn, out_schema)
+    return batched_series_apply(df, keys_l, ts_col, per_series, out_schema)

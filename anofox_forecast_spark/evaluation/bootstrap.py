@@ -3,9 +3,10 @@
 Residual bootstrap: synthetic series = fitted + resampled residuals
 (iid, or block resampling preserving autocorrelation) → refit → collect
 the forecast distribution → quantile intervals. Defaults: 1000 samples,
-seedable; seed is derived per series from a hash of the key so the whole
-job is deterministic yet series-independent (engine addition — the
-reference takes an explicit seed per call).
+seedable; seed is derived per series from the JVM ``xxhash64`` of the key
+columns (mod 2^32), which is the same in every process and for NULL keys,
+so the whole job is deterministic yet series-independent (engine addition
+— the reference takes an explicit seed per call).
 """
 
 from __future__ import annotations
@@ -16,10 +17,13 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
-from anofox_forecast_spark.models.harness import _grouped_apply
+from anofox_forecast_spark.models.harness import batched_series_apply
 from anofox_forecast_spark.models.registry import get_model
+
+_SEED = "__bootstrap_seed"
 
 
 def bootstrap_intervals_np(
@@ -88,27 +92,22 @@ def bootstrap_intervals(
            StructField("hi", DoubleType())]
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        y = pdf[y_col].to_numpy(dtype=np.float64)
-        key_vals = {k: pdf[k].iloc[0] for k in keys_l}
-        seed = abs(hash(tuple(key_vals.values()))) % (2**32)
+    def per_series(g: pd.DataFrame, out: dict) -> None:
+        y = g[y_col].to_numpy(dtype=np.float64)
+        seed = int(g[_SEED].iloc[0]) % (2**32)
         try:
             r = bootstrap_intervals_np(
                 y, kernel, horizon, season_length, level,
                 n_samples, block_size, seed, **params,
             )
         except Exception:
-            return pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema.fields})
-        return pd.DataFrame(
-            {
-                **{k: np.repeat(v, horizon) for k, v in key_vals.items()},
-                "model": model,
-                "step": np.arange(1, horizon + 1, dtype=np.int32),
-                "yhat": r["yhat"],
-                "lo": r["lo"],
-                "hi": r["hi"],
-            }
-        )
+            return
+        for k in keys_l:
+            out[k].append(np.repeat(g[k].iloc[0], horizon))
+        out["model"].append(np.repeat(model, horizon))
+        out["step"].append(np.arange(1, horizon + 1, dtype=np.int32))
+        for c in ("yhat", "lo", "hi"):
+            out[c].append(np.asarray(r[c], dtype=np.float64))
 
-    return _grouped_apply(df, keys_l, fn, out_schema)
+    seeded = df.select(*keys_l, ts_col, y_col, F.xxhash64(*keys_l).alias(_SEED))
+    return batched_series_apply(seeded, keys_l, ts_col, per_series, out_schema)

@@ -7,9 +7,10 @@ against y[origin:origin+horizon). Output: one row per (series, model,
 fold) with the fold's metrics (the mean/std aggregation is a trivial
 groupBy on top).
 
-Runs the whole fold loop inside one grouped map per series — each fold's
-fit is a short-array numpy kernel call, so the fold loop stays in-process
-(same reasoning as the AutoETS candidate loop, SURVEY §3.2).
+Runs the whole fold loop per series inside the harness's batched
+per-series stage (``batched_series_apply``) — each fold's fit is a
+short-array numpy kernel call, so the fold loop stays in-process (same
+reasoning as the AutoETS candidate loop, SURVEY §3.2).
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
 from anofox_forecast_spark.evaluation.metrics import accuracy_metrics_np
-from anofox_forecast_spark.models.harness import _grouped_apply, _normalize_models
+from anofox_forecast_spark.models.harness import _normalize_models, batched_series_apply
 from anofox_forecast_spark.models.registry import get_model
 
 _METRIC_COLS = ("mae", "mse", "rmse", "mape", "smape", "mase", "r_squared")
@@ -57,15 +58,12 @@ def cross_validate(
         + [StructField(c, DoubleType()) for c in _METRIC_COLS]
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        y = pdf[y_col].to_numpy(dtype=np.float64)
-        n = y.size
-        rows: list[dict] = []
-        key_vals = {k: pdf[k].iloc[0] for k in keys_l}
+    def per_series(g: pd.DataFrame, out: dict) -> None:
+        y = g[y_col].to_numpy(dtype=np.float64)
+        names, folds, origins, metrics = [], [], [], []
         fold = 0
         origin = initial_train
-        while origin + horizon <= n and fold < max_folds:
+        while origin + horizon <= y.size and fold < max_folds:
             start = 0 if strategy == "expanding" else max(0, origin - (window or initial_train))
             train = y[start:origin]
             actual = y[origin : origin + horizon]
@@ -75,22 +73,20 @@ def cross_validate(
                 except Exception:
                     continue
                 m = accuracy_metrics_np(actual, res.yhat, season_length)
-                rows.append(
-                    {
-                        **key_vals,
-                        "model": name,
-                        "fold": np.int32(fold),
-                        "origin_index": np.int32(origin),
-                        **{c: (np.nan if m[c] is None else m[c]) for c in _METRIC_COLS},
-                    }
-                )
+                names.append(name)
+                folds.append(fold)
+                origins.append(origin)
+                metrics.append([np.nan if m[c] is None else m[c] for c in _METRIC_COLS])
             fold += 1
             origin += step_size
-        if not rows:
-            return pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema.fields})
-        out = pd.DataFrame(rows)
-        for c in _METRIC_COLS:
-            out[c] = out[c].astype("Float64")
-        return out
+        if not names:
+            return
+        for k in keys_l:
+            out[k].append(np.repeat(g[k].iloc[0], len(names)))
+        out["model"].append(np.array(names))
+        out["fold"].append(np.array(folds, dtype=np.int32))
+        out["origin_index"].append(np.array(origins, dtype=np.int32))
+        for c, col in zip(_METRIC_COLS, np.array(metrics, dtype=np.float64).T):
+            out[c].append(col)
 
-    return _grouped_apply(df, keys_l, fn, out_schema)
+    return batched_series_apply(df, keys_l, ts_col, per_series, out_schema)

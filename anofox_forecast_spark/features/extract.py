@@ -1,9 +1,10 @@
-"""Spark feature extraction: one grouped map → one wide row per series.
+"""Spark feature extraction: one batched per-series stage → one wide row
+per series.
 
 ``extract_features(df, keys, ts_col, value_col)`` runs the numpy catalog
-(features.np_features) per series through the forecast harness's
-``batched_series_apply`` (one batched mapInPandas; NULL keys are series
-too). A feature job at 100 TB is: shuffle once by series key, then
+(features.np_features) per series through the harness's
+``batched_series_apply`` (one batched mapInPandas, many series per Arrow
+batch; NULL keys are series too). A feature job at 100 TB is: shuffle once by series key, then
 embarrassingly parallel numpy per series.
 
 SQL-expressible features (SURVEY §2.7 classes a/b) can alternatively run

@@ -4,7 +4,7 @@ Mirrors the reference's feature modules function-for-function (all cites
 into /root/reference/src/features/): basic.rs, distribution.rs,
 autocorrelation.rs, entropy.rs, complexity.rs, trend.rs, counting.rs,
 change.rs. Each function takes ``y: np.ndarray`` (one series, time order)
-and returns a float. These run inside the grouped-map extractor
+and returns a float. These run inside the batched per-series extractor
 (features.extract) — numpy per series, never per-row Python at the Spark
 layer. NaN marks "undefined" exactly where the reference returns NaN.
 """

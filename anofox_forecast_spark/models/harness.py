@@ -1,10 +1,14 @@
-"""Grouped-map forecasting harness — the Spark side of every model.
+"""Batched per-series harness — the Spark side of every model.
 
-One ``applyInPandas`` per call: the input long frame is shuffled once by the
-series key; each group arrives as a pandas frame; all requested model kernels
-run over the group's numpy array; results return as Arrow batches. This is
-the SURVEY §2.2 "Spark primitive for ALL models": no per-row Python, no
-driver-side loops, cross-series parallelism = partition parallelism.
+Every per-series Python kernel in the engine (forecasts, fitted values,
+cross-validation, bootstrap intervals, STL, PELT, Box-Cox λ, features, EWM,
+exogenous regressors, Gorilla encode) runs through ``batched_series_apply``:
+the input long frame is shuffled once by the series key and sorted by key
+and time, then one ``mapInPandas`` hands many series to Python per Arrow
+batch; the kernels run over each series' numpy array and results return as
+Arrow batches. This is the SURVEY §2.2 "Spark primitive for ALL models": no
+per-row Python, no per-series Arrow round trip, no driver-side loops,
+cross-series parallelism = partition parallelism.
 
 Failure policy (ref returns Result per call — src/error.rs): a series that
 raises (e.g. InsufficientData) emits zero forecast rows instead of failing
@@ -14,7 +18,7 @@ Skew note: series length after tier rollup is bounded (≤ span/tier buckets),
 so a hot host costs the same as any other series here; skew is handled at
 the rollup stage, not the model stage.
 
-One-wave rule: every batched or grouped Python stage repartitions to
+One-wave rule: the batched Python stage repartitions to
 ``kernel_partitions(df)`` = ``sc.defaultParallelism``: one task per core,
 one wave, no floor. A Python stage pays a fixed cost per task, so this wins
 where that cost is a visible share of the stage (``local[4]``, shared 4-core
@@ -42,7 +46,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -64,24 +67,8 @@ def kernel_partitions(df: DataFrame) -> int:
     return df.sparkSession.sparkContext.defaultParallelism
 
 
-def _grouped_apply(df: DataFrame, keys: list[str], fn, schema) -> DataFrame:
-    """applyInPandas with a CPU-oriented explicit repartition.
-
-    The model stage is CPU-bound Python, not shuffle-bound: AQE would
-    coalesce a small shuffle (few MB of series data) down to 1-2 partitions
-    and serialize thousands of kernel fits. An EXPLICIT repartition(n, keys)
-    is exempt from AQE coalescing and hash-partitions by the same keys the
-    groupBy needs, so no extra shuffle is introduced. n is one task per
-    core (``kernel_partitions``): an extra wave of Python tasks added
-    0.3-0.6 s of wall time per stage, and did not speed up a kernel-bound
-    stage either (module docstring, one-wave rule).
-    """
-    return (df.repartition(kernel_partitions(df), *keys)
-            .groupBy(*keys).applyInPandas(fn, schema=schema))
-
-
-def _last_key_mask(pdf: pd.DataFrame, keys_l: list[str]) -> np.ndarray:
-    """Rows belonging to the trailing (possibly batch-spanning) group.
+def _key_mask(pdf: pd.DataFrame, keys_l: list[str], ref: pd.DataFrame) -> np.ndarray:
+    """Rows of ``pdf`` whose keys equal those of the last row of ``ref``.
 
     Null-safe: a NaN/None key must match itself, otherwise a null-key group
     is never held back and splits across Arrow batches.
@@ -89,7 +76,7 @@ def _last_key_mask(pdf: pd.DataFrame, keys_l: list[str]) -> np.ndarray:
     mask = np.ones(len(pdf), dtype=bool)
     for k in keys_l:
         col = pdf[k]
-        v = col.iloc[-1]
+        v = ref[k].iloc[-1]
         m = col.isna() if pd.isna(v) else (col == v)
         mask &= m.to_numpy()
     return mask
@@ -99,11 +86,13 @@ def batched_series_apply(df: DataFrame, keys, ts_col, per_series, out_schema) ->
     """mapInPandas over key-partitioned, key+ts-sorted data: many series per
     Arrow batch with carry-over for groups split across batch boundaries.
 
-    ``per_series(g: pd.DataFrame, out: dict[str, list])`` appends column
-    blocks (numpy arrays / lists) for one series. This is the shared
-    low-overhead pattern for every per-series kernel (forecast, gap-fill,
-    codec, features, EWM): one pandas frame per ~10k rows instead of one
-    per series.
+    ``per_series(g: pd.DataFrame, out: dict[str, list])`` appends one block
+    per output column for one series, which arrives in ``ts_col`` order.
+    Every block of a column is a numpy array, or every block is a list: a
+    column is flattened by the type of its first block. ``ts_col=None``
+    sorts by the keys alone, for kernels whose result does not depend on
+    row order. This is the one per-series Python stage of the engine: one
+    pandas frame per ~10k rows instead of one per series.
     """
     keys_l = list(keys)
 
@@ -122,26 +111,38 @@ def batched_series_apply(df: DataFrame, keys, ts_col, per_series, out_schema) ->
         })
 
     def run(batches):
-        carry: pd.DataFrame | None = None
+        # rows of the series still open at the last batch boundary; a series
+        # longer than a batch is concatenated once, when it ends
+        held: list[pd.DataFrame] = []
         for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
             if len(pdf) == 0:
                 continue
-            mask = _last_key_mask(pdf, keys_l)
-            carry = pdf.iloc[mask.nonzero()[0]]
-            body = pdf.iloc[(~mask).nonzero()[0]]
-            if len(body):
-                out = _flush(body)
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = _flush(carry)
+            tail = _key_mask(pdf, keys_l, pdf)
+            if tail.all():
+                if held and not _key_mask(pdf.iloc[:1], keys_l, held[-1])[0]:
+                    out = _flush(pd.concat(held) if len(held) > 1 else held[0])
+                    held = []
+                    if out is not None:
+                        yield out
+                held.append(pdf)
+                continue
+            body = pdf.iloc[(~tail).nonzero()[0]]
+            if held:
+                body = pd.concat([*held, body], ignore_index=True)
+            held = [pdf.iloc[tail.nonzero()[0]]]
+            out = _flush(body)
+            if out is not None:
+                yield out
+        if held:
+            out = _flush(pd.concat(held) if len(held) > 1 else held[0])
             if out is not None:
                 yield out
 
+    # an explicit repartition is exempt from AQE coalescing, which would fold
+    # a few MB of series into 1-2 tasks and serialize the kernel fits
+    order = [*keys_l, ts_col] if ts_col is not None else keys_l
     prepared = (df.repartition(kernel_partitions(df), *keys_l)
-                .sortWithinPartitions(*keys_l, ts_col))
+                .sortWithinPartitions(*order))
     return prepared.mapInPandas(run, schema=out_schema)
 
 
@@ -180,10 +181,6 @@ def forecast(
     ``max_points_per_series`` truncates pathological series to their most
     recent points (documented guard, SURVEY §7.3 grouped-map skew).
     """
-    specs = _normalize_models(models)
-    for name in specs:
-        get_model(name)  # validate on driver before launching
-
     key_fields = [df.schema[k] for k in keys]
     out_schema = StructType(
         [*key_fields,
@@ -196,7 +193,9 @@ def forecast(
     )
     keys_l = list(keys)
 
-    resolved = [(name, get_model(name), params) for name, params in specs.items()]
+    # resolved on the driver: an unknown model fails before launching
+    resolved = [(name, get_model(name), params)
+                for name, params in _normalize_models(models).items()]
 
     def one_series(g: pd.DataFrame, out: dict) -> None:
         if len(g) > max_points_per_series:
@@ -235,9 +234,8 @@ def fitted_values(
     Output: (keys…, ts, y, model, fitted, residual). NaN fitted values (e.g.
     the first ``m`` seasonal-naive slots) come back as NULL.
     """
-    specs = _normalize_models(models)
-    for name in specs:
-        get_model(name)
+    resolved = [(name, get_model(name), params)
+                for name, params in _normalize_models(models).items()]
 
     key_fields = [df.schema[k] for k in keys]
     out_schema = StructType(
@@ -250,34 +248,22 @@ def fitted_values(
     )
     keys_l = list(keys)
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        y = pdf[y_col].to_numpy(dtype=np.float64)
-        key_vals = {k: pdf[k].iloc[0] for k in keys_l}
-        frames = []
-        for name, params in specs.items():
-            kernel = get_model(name)
+    def per_series(g: pd.DataFrame, out: dict) -> None:
+        y = g[y_col].to_numpy(dtype=np.float64)
+        ts = g[ts_col].to_numpy()
+        for name, kernel, params in resolved:
             try:
                 res = kernel(y, 1, level, season_length, **params)
             except Exception:
                 continue
-            if res.fitted.size != len(pdf):
+            if res.fitted.size != y.size:
                 continue
-            frames.append(
-                pd.DataFrame(
-                    {
-                        **{k: [v] * len(pdf) for k, v in key_vals.items()},
-                        "ts": pdf[ts_col].to_numpy(),
-                        "y": y,
-                        "model": name,
-                        # Float64 (nullable) so NaN → NULL through Arrow
-                        "fitted": pd.Series(res.fitted).astype("Float64"),
-                        "residual": pd.Series(res.residuals).astype("Float64"),
-                    }
-                )
-            )
-        if not frames:
-            return pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema.fields})
-        return pd.concat(frames, ignore_index=True)
+            for k in keys_l:
+                out[k].append(np.repeat(g[k].iloc[0], y.size))
+            out["ts"].append(ts)
+            out["y"].append(y)
+            out["model"].append(np.repeat(name, y.size))
+            out["fitted"].append(res.fitted)
+            out["residual"].append(res.residuals)
 
-    return _grouped_apply(df, keys_l, fit, out_schema)
+    return batched_series_apply(df, keys_l, ts_col, per_series, out_schema)

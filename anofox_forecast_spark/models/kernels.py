@@ -6,7 +6,7 @@ Each kernel has the signature::
 
 where ``y`` is one series' values (float64, already gap-handled), ``h`` the
 horizon, ``level`` the confidence level for intervals, ``m`` the seasonal
-period. Kernels run *inside* Arrow-batched grouped-map UDFs — cross-series
+period. Kernels run *inside* the Arrow-batched per-series stage — cross-series
 parallelism comes from Spark partitioning, never from threads here
 (SURVEY §3.2: the reference's rayon layer is replaced by data parallelism).
 

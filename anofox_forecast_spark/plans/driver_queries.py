@@ -1139,7 +1139,7 @@ def sql_cross_validation_1d():
 
 
 def q_forecast_ets_theta_1d(spark, sf_dir):
-    """The north-star model trio through the grouped-map harness."""
+    """The north-star model trio through the batched per-series harness."""
     series = _daily_series(spark, sf_dir)
     out = forecast(series, ["event_type"], "bucket_start", "y",
                    models={"ets": {"spec": "AAA"}, "theta": {},

@@ -30,7 +30,7 @@ and streaming rollups group differently but call the same helpers:
   after every (re-)aggregation, never averaged itself.
 
 Skew: groupBy(lang, host, bucket) spreads a hot host across its buckets, so
-the aggregate itself is skew-tolerant; grouped-map forecasting over rolled-up
+the aggregate itself is skew-tolerant; per-series forecasting over rolled-up
 series uses bounded series length per key (see models.harness).
 """
 

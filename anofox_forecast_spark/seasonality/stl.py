@@ -184,36 +184,26 @@ def mstl_decompose(
 
 def stl_decompose_spark(df, keys, ts_col, y_col, period: int, robust: bool = False):
     """Per-series STL: returns input rows + (trend, seasonal, remainder)."""
-    import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from anofox_forecast_spark.models.harness import _grouped_apply
+    from anofox_forecast_spark.models.harness import batched_series_apply
 
     keys_l = list(keys)
+    parts = ("trend", "seasonal", "remainder")
     out_schema = StructType(
         [df.schema[k] for k in keys_l]
         + [df.schema[ts_col], df.schema[y_col]]
-        + [StructField(c, DoubleType()) for c in ("trend", "seasonal", "remainder")]
+        + [StructField(c, DoubleType()) for c in parts]
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        y = pdf[y_col].to_numpy(dtype=np.float64)
+    def per_series(g, out: dict) -> None:
+        y = g[y_col].to_numpy(dtype=np.float64)
         r = stl_decompose(y, period, robust=robust)
-        base = {k: pdf[k].to_numpy() for k in keys_l}
-        base[ts_col] = pdf[ts_col].to_numpy()
-        base[y_col] = y
-        if r is None:
-            base["trend"] = np.full(y.size, np.nan)
-            base["seasonal"] = np.full(y.size, np.nan)
-            base["remainder"] = np.full(y.size, np.nan)
-        else:
-            base["trend"], base["seasonal"], base["remainder"] = (
-                r.trend, r.seasonal, r.remainder,
-            )
-        out = pd.DataFrame(base)
-        for c in ("trend", "seasonal", "remainder"):
-            out[c] = out[c].astype("Float64")
-        return out
+        for k in keys_l:
+            out[k].append(g[k].to_numpy())
+        out[ts_col].append(g[ts_col].to_numpy())
+        out[y_col].append(y)
+        for c in parts:
+            out[c].append(np.full(y.size, np.nan) if r is None else getattr(r, c))
 
-    return _grouped_apply(df, keys_l, fn, out_schema)
+    return batched_series_apply(df, keys_l, ts_col, per_series, out_schema)

@@ -5,7 +5,8 @@
 - ``boxcox_lambda_per_series``: per-series MLE λ via the reference's
   two-pass grid search over [-2, 2] (401 coarse + 101 fine points),
   llf = −n/2·ln(var_pop(transformed)) + (λ−1)·Σln(x) (ref :82-147),
-  vectorized in numpy inside a grouped map.
+  vectorized in numpy inside the harness's batched per-series stage
+  (``batched_series_apply``).
 """
 
 from __future__ import annotations
@@ -76,15 +77,15 @@ def boxcox_lambda_per_series(
         [df.schema[k] for k in keys_l] + [StructField("lambda", DoubleType())]
     )
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        lam = boxcox_lambda(pdf[value_col].to_numpy(dtype=np.float64))
-        row = {k: [pdf[k].iloc[0]] for k in keys_l}
-        row["lambda"] = [lam]
-        return pd.DataFrame(row)
+    def per_series(g: pd.DataFrame, out: dict) -> None:
+        for k in keys_l:
+            out[k].append(np.repeat(g[k].iloc[0], 1))
+        out["lambda"].append(np.array([boxcox_lambda(g[value_col].to_numpy(dtype=np.float64))]))
 
-    from anofox_forecast_spark.models.harness import _grouped_apply
+    from anofox_forecast_spark.models.harness import batched_series_apply
 
-    return _grouped_apply(df, keys_l, fit, out_schema)
+    # λ does not depend on row order: sort by the keys alone
+    return batched_series_apply(df, keys_l, None, per_series, out_schema)
 
 
 def boxcox_shifted(y: np.ndarray, lam: float) -> tuple[np.ndarray, float]:

@@ -29,21 +29,14 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from anofox_forecast_spark.webtext.text_stats import _tokens
+
 END = "</w>"  # end-of-word marker (Sennrich 2016 convention)
 
 
 def _words_col(text_col: str):
-    # same punctuation-stripping tokenizer as webtext.dedup._words /
-    # the shingle + term-stats contract
-    return F.array_remove(
-        F.split(
-            F.trim(
-                F.regexp_replace(F.lower(F.col(text_col)), r"[^\p{L}\p{N} ]", " ")
-            ),
-            r" +",
-        ),
-        "",
-    )
+    # the engine's one word tokenizer (shingles, term stats, line dedup)
+    return F.array_remove(_tokens(F.col(text_col)), "")
 
 
 def word_frequencies(

@@ -27,17 +27,12 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-
-def _words(text_col: str) -> Column:
-    return F.split(
-        F.trim(F.lower(F.regexp_replace(F.col(text_col), r"[^\p{L}\p{N} ]", " "))),
-        r" +",
-    )
+from anofox_forecast_spark.webtext.text_stats import _tokens
 
 
 def shingles(text_col: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles as an array column (pure SQL)."""
-    w = _words(text_col)
+    w = _tokens(F.col(text_col))
     return F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0))),
@@ -212,11 +207,11 @@ def chunk_lines(
     df: DataFrame, id_col: str, text_col: str, tokens_per_line: int = 12
 ) -> Column:
     """Array of fixed-width token 'lines' (non-overlapping chunks of
-    ``tokens_per_line`` word tokens, same ``_words`` tokenizer as
+    ``tokens_per_line`` word tokens, same ``text_stats._tokens`` tokenizer as
     shingles). The unit for corpus-level span dedup on corpora whose
     documents carry no natural line structure; pass real lines via
     ``split(text, '\\n')`` instead when they exist."""
-    w = F.array_remove(_words(text_col), "")
+    w = F.array_remove(_tokens(F.col(text_col)), "")
     L = tokens_per_line
     n_chunks = F.greatest(F.ceil(F.size(w) / L).cast("int"), F.lit(1))
     return F.transform(
@@ -323,7 +318,7 @@ def line_dedup(
     """
     if lines_col is None:
         L = int(tokens_per_line)
-        w = F.array_remove(_words(text_col), "")
+        w = F.array_remove(_tokens(F.col(text_col)), "")
         key_udf = _chunk_key_udf(L)
         wh = F.transform(w, lambda x: F.xxhash64(x))
         # empty-doc filter BEFORE the UDF (projection-collapse trap —
@@ -436,7 +431,7 @@ def minhash_signatures(
       JVM-side (``sequence``+``slice``+``concat_ws``+``array_distinct``)
       — string construction, not hashing, was the bottleneck.
     * Final design: never materialize shingle strings. JVM side hashes
-      WORDS from the same punctuation-stripping ``_words()`` tokenizer as
+      WORDS from the same punctuation-stripping ``text_stats._tokens`` tokenizer as
       ``shingles()`` (lowercase, non-alphanumerics → space, split on
       space runs — NOT a bare whitespace split; simhash/fingerprint use
       the bare split) — one cheap codegen pass of per-word ``xxhash64``;
@@ -511,7 +506,7 @@ def minhash_signatures(
             res[dj] = out[j]
         return pd.Series(res)
 
-    words = F.array_remove(_words(text_col), "")
+    words = F.array_remove(_tokens(F.col(text_col)), "")
     wh_col = F.transform(words, lambda w: F.xxhash64(w))
     # empty-doc filter on the cheap JVM word array, BEFORE the UDF: a
     # post-filter on size(sig) gets inlined by projection collapse and the
@@ -1272,7 +1267,7 @@ def substring_dedup(
     L = int(min_tokens)
     if L < 2:
         raise ValueError("min_tokens must be >= 2")
-    w = F.array_remove(_words(text_col), "")
+    w = F.array_remove(_tokens(F.col(text_col)), "")
     docs = df.select(F.col(id_col).alias("id"), w.alias("__w"))
     if hashed:
         from .pipeline import _hashed_shingles  # lazy: keep modules acyclic

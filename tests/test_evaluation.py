@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 
 import numpy as np
+import pandas as pd
 
 from anofox_forecast_spark.evaluation import (
     accuracy_metrics,
@@ -94,6 +95,25 @@ def test_bootstrap_intervals_spark(spark):
     assert len(out) == 6
     assert (out["lo"] <= out["yhat"]).all() and (out["yhat"] <= out["hi"]).all()
     assert (out["hi"] - out["lo"]).mean() > 0.1  # non-degenerate
+
+
+def test_bootstrap_intervals_deterministic_for_null_keys(spark):
+    """The per-series seed comes from the JVM hash of the key columns: a
+    NULL bigint key is NaN in pandas, whose Python hash changes from object
+    to object, yet its series gets the same intervals on every run."""
+    rng = np.random.default_rng(7)
+    rows = [(sid, T0 + dt.timedelta(days=i), float(50 + rng.normal(0, 5)))
+            for sid in (1, None, 2) for i in range(40)]
+    df = spark.createDataFrame(rows, "sid bigint, ts timestamp, y double")
+
+    def run() -> pd.DataFrame:
+        out = bootstrap_intervals(df, ["sid"], "ts", "y", "ses", horizon=4,
+                                  n_samples=50, alpha=0.3).toPandas()
+        return out.sort_values(["sid", "step"], na_position="first").reset_index(drop=True)
+
+    first, second = run(), run()
+    assert len(first) == 12 and first["sid"].isna().sum() == 4
+    pd.testing.assert_frame_equal(first, second)
 
 
 def test_ljung_box_white_vs_correlated():

@@ -152,24 +152,49 @@ def test_extract_features_spark(spark):
 
 def test_null_key_series_survive_batch_splits(spark):
     """A NULL-key series is a real series: with Arrow batches far smaller
-    than one series, extract_features still returns exactly one row for it
-    and ewm_mean keeps every one of its rows."""
+    than one series, extract_features still returns exactly one row for it,
+    ewm_mean keeps every one of its rows, and every other per-series
+    operator gives each series what its numpy function gives."""
     import datetime as dt
 
+    from pyspark.sql import functions as F
+
+    from anofox_forecast_spark.changepoint import pelt_detect, pelt_detect_spark
+    from anofox_forecast_spark.evaluation import (
+        accuracy_metrics_np,
+        bootstrap_intervals,
+        cross_validate,
+    )
+    from anofox_forecast_spark.evaluation.bootstrap import bootstrap_intervals_np
     from anofox_forecast_spark.features import extract_features
+    from anofox_forecast_spark.models.harness import fitted_values
+    from anofox_forecast_spark.models.registry import get_model
+    from anofox_forecast_spark.seasonality import stl_decompose_spark
+    from anofox_forecast_spark.seasonality.stl import stl_decompose
     from anofox_forecast_spark.transform import ewm_mean
+    from anofox_forecast_spark.transform.boxcox import boxcox_lambda, boxcox_lambda_per_series
     from anofox_forecast_spark.transform.window import ewm_mean_np
 
     t0 = dt.datetime(2024, 1, 1)
-    rows = [(sid, t0 + dt.timedelta(hours=i), float(i % 7) + (sid is None))
-            for sid in ("a", None, "b") for i in range(40)]
+    sids = ("a", None, "b")
+    rows = [(sid, t0 + dt.timedelta(hours=i), float(i % 7) + (sid is None) + 5.0 * (i >= 25))
+            for sid in sids for i in range(40)]
     df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
+    seeds = dict(df.groupBy("sid").agg(F.first(F.xxhash64("sid"))).collect())
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "7")
     try:
         feats = extract_features(df, ["sid"], "ts", "y", features=["mean", "length"]).toPandas()
         ewm = ewm_mean(df, ["sid"], "ts", "y", alpha=0.5).toPandas()
+        stl = stl_decompose_spark(df, ["sid"], "ts", "y", period=7).toPandas()
+        pelt = pelt_detect_spark(df, ["sid"], "ts", "y").toPandas()
+        lam = boxcox_lambda_per_series(df, ["sid"], "y").toPandas()
+        fit = fitted_values(df, ["sid"], "ts", "y", ["seasonal_naive"], season_length=7).toPandas()
+        cv = cross_validate(df, ["sid"], "ts", "y", ["naive"], horizon=5,
+                            initial_train=20, step_size=5, season_length=7).toPandas()
+        boot = bootstrap_intervals(df, ["sid"], "ts", "y", "ses", horizon=3,
+                                   n_samples=20, alpha=0.3).toPandas()
     finally:
         spark.conf.set(key, old)
     assert len(feats) == 3
@@ -182,6 +207,41 @@ def test_null_key_series_survive_batch_splits(spark):
     null_ewm = ewm[ewm["sid"].isna()].sort_values("ts")
     assert len(null_ewm) == 40
     assert np.allclose(null_ewm["y_ewm"].to_numpy(), ewm_mean_np(y_null, 0.5))
+
+    def part(pdf: pd.DataFrame, sid, by: list[str]) -> pd.DataFrame:
+        mask = pdf["sid"].isna() if sid is None else pdf["sid"] == sid
+        return pdf[mask].sort_values(by).reset_index(drop=True)
+
+    ts = np.array([r[1] for r in rows[:40]], dtype="datetime64[ns]")
+    for sid in sids:
+        y = np.array([r[2] for r in rows if r[0] == sid])
+        want = stl_decompose(y, 7)
+        got = part(stl, sid, ["ts"])
+        assert len(got) == 40
+        for c in ("trend", "seasonal", "remainder"):
+            np.testing.assert_allclose(got[c].to_numpy(), getattr(want, c), atol=1e-9)
+        cps = pelt_detect(y).changepoints
+        assert cps, "the level shift at 25 must be a changepoint"
+        got = part(pelt, sid, ["changepoint_index"])
+        assert got["changepoint_index"].tolist() == cps
+        assert (got["ts"].to_numpy() == ts[cps]).all()
+        assert abs(part(lam, sid, ["lambda"])["lambda"].item() - boxcox_lambda(y)) < 1e-9
+        res = get_model("seasonal_naive")(y, 1, 0.95, 7)
+        got = part(fit, sid, ["ts"])
+        np.testing.assert_array_equal(got["y"].to_numpy(), y)
+        np.testing.assert_allclose(got["fitted"].to_numpy(dtype=float), res.fitted, equal_nan=True)
+        np.testing.assert_allclose(got["residual"].to_numpy(dtype=float), res.residuals,
+                                   equal_nan=True)
+        got = part(cv, sid, ["fold"])
+        assert got["origin_index"].tolist() == [20, 25, 30, 35]
+        for o, mae in zip(got["origin_index"], got["mae"]):
+            yhat = get_model("naive")(y[:o], 5, 0.95, 7).yhat
+            assert abs(mae - accuracy_metrics_np(y[o:o + 5], yhat, 7)["mae"]) < 1e-12
+        want = bootstrap_intervals_np(y, get_model("ses"), 3, 1, 0.95, 20, None,
+                                      seeds[sid] % (2**32), alpha=0.3)
+        got = part(boot, sid, ["step"])
+        for c in ("yhat", "lo", "hi"):
+            np.testing.assert_allclose(got[c].to_numpy(), want[c], atol=1e-12)
 
 
 def test_rolling_expanding_ewm_spark(spark):

@@ -57,6 +57,23 @@ def test_word_frequencies_and_train(spark):
     assert merges == learn_bpe_from_counts(TOY, n_merges=5)
 
 
+def test_words_are_the_engine_tokenizer(spark):
+    """BPE words come from text_stats._tokens: punctuation is stripped
+    before lowercasing, so "İstanbul" (whose lowercase carries a combining
+    dot, not a letter) stays one word, as in shingles and term stats."""
+    from pyspark.sql import functions as F
+
+    from anofox_forecast_spark.webtext.text_stats import _tokens
+
+    docs = spark.createDataFrame([(1, "\u0130stanbul, \u0130stanbul! low")], ["doc_id", "text"])
+    wf = {r["word"]: r["freq"] for r in word_frequencies(docs, "text").collect()}
+    assert wf == {"i\u0307stanbul": 2, "low": 1}
+    toks = docs.select(_tokens(F.col("text")).alias("t")).first()["t"]
+    assert sorted(set(toks)) == sorted(wf)
+    out = bpe_tokenize(docs, "doc_id", "text", []).first()
+    assert out["n_words"] == 3
+
+
 def test_tokenize_roundtrip_and_counts(spark):
     docs = spark.createDataFrame(
         [(1, "low lower newest"), (2, "widest low"), (3, "")],

@@ -97,15 +97,33 @@ def main() -> None:
         ["BroadcastHashJoin", "BroadcastExchange"],
     ))
 
-    # 6. forecast stage: explicit repartition feeding ArrowEvalPython/mapInPandas
-    fc = forecast(
-        t1h.select("lang", "host", "bucket_start",
-                   F.col("crawl_count").cast("double").alias("y")),
-        ["lang", "host"], "bucket_start", "y",
-        models=["seasonal_naive"], horizon=6, freq="1h", season_length=24)
+    # 6. every per-series Python kernel is the one batched stage: explicit
+    # repartition on the keys -> sort (keys, ts) -> MapInPandas; never a
+    # per-group FlatMapGroupsInPandas
+    from anofox_forecast_spark.evaluation import cross_validate
+    from anofox_forecast_spark.seasonality import stl_decompose_spark
+
+    y6 = t1h.select("lang", "host", "bucket_start",
+                    F.col("crawl_count").cast("double").alias("y"))
+    plans6 = [grab(df) for df in (
+        forecast(y6, ["lang", "host"], "bucket_start", "y",
+                 models=["seasonal_naive"], horizon=6, freq="1h", season_length=24),
+        cross_validate(y6, ["lang", "host"], "bucket_start", "y", ["ets", "theta"],
+                       horizon=24, initial_train=168, step_size=24, season_length=24),
+        stl_decompose_spark(y6, ["lang", "host"], "bucket_start", "y", period=24),
+    )]
+    for p in plans6:
+        assert all(node in p for node in ("MapInPandas", "Exchange", "Sort")), (
+            "a per-series kernel must run as repartition -> sort -> MapInPandas")
+        assert "FlatMapGroupsInPandas" not in p, (
+            "a per-series kernel must not run one grouped map per series")
     sections.append((
-        "Grouped-kernel forecast (explicit repartition -> sort -> MapInPandas)",
-        grab(fc),
+        "Per-series kernels: forecast, cross_validate, STL (explicit "
+        "repartition -> sort -> MapInPandas, no FlatMapGroupsInPandas)",
+        # the three trees; the formatted node details would pass the
+        # section's length cap
+        "\n\n".join(f"-- {name}\n{p.split(chr(10) * 2)[0]}" for name, p in
+                     zip(("forecast", "cross_validate", "stl_decompose_spark"), plans6)),
         ["MapInPandas", "Exchange", "Sort"],
     ))
 
