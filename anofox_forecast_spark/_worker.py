@@ -33,7 +33,8 @@ first call, so the stamps are exact; a worker pays that once, not per task.
 
 The hook is installed when the package is imported inside a task
 (``TaskContext.get()`` is set), which unpickling an engine UDF does when it
-references a package module (a closure over numpy/pandas alone does not).
+references a package module. A closure over numpy/pandas alone does not,
+so such closures are marked with ``hooked``.
 The driver process keeps the stdlib method. It relies on the 3.10-3.12
 ``zipimporter`` internals (``_files``, ``_zip_directory_cache``) and is not
 installed on other versions.
@@ -83,3 +84,16 @@ def install() -> None:
         if isinstance(importer, zipimport.zipimporter):
             _invalidate_caches(importer)
     zipimport.zipimporter.invalidate_caches = _invalidate_caches
+
+
+def hooked(fn):
+    """Mark a function shipped to Python workers so that unpickling it
+    imports this package, which installs the hook in that worker.
+
+    cloudpickle ships a nested function by value, together with its
+    ``__dict__``; a module object there is pickled by reference, so loading
+    the function imports the module. ``fn`` itself is returned unchanged,
+    so ``pandas_udf`` still reads its signature and type hints.
+    """
+    fn._imports = sys.modules[__package__]
+    return fn

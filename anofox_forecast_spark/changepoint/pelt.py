@@ -206,7 +206,7 @@ def pelt_detect_spark(
     """Per-series PELT: returns (keys…, changepoint_index, changepoint_ts)."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    from anofox_forecast_spark.models.harness import batched_series_apply
+    from anofox_forecast_spark.models.harness import batched_series_apply, each_series
 
     keys_l = list(keys)
     out_schema = StructType(
@@ -225,4 +225,4 @@ def pelt_detect_spark(
         out["changepoint_index"].append(cps)
         out[ts_col].append(g[ts_col].to_numpy()[cps])
 
-    return batched_series_apply(df, keys_l, ts_col, per_series, out_schema)
+    return batched_series_apply(df, keys_l, ts_col, each_series(per_series), out_schema)

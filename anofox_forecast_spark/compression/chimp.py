@@ -21,8 +21,8 @@ documented here; there is no wire-format reference to match):
   lead(3) indexes the paper's rounding table {0,8,12,16,18,20,22,24}.
 
 The vectorized encoder emits the conformant always-'11' subset (never
-'10') so the whole stream builds in one numpy pass — the same
-vectorization trick as gorilla.encode_values_packed; the decoder reads
+'10') so every chunk of a body builds in one numpy pass — the same
+segmented layout as gorilla.encode_values_packed; the decoder reads
 all four flags. Lossless for every bit pattern including NaN/Inf/-0.0
 (property-tested).
 """
@@ -33,67 +33,46 @@ import numpy as np
 
 from anofox_forecast_spark.compression.gorilla import (
     _BitReader,
-    _CLZ8,
-    _CTZ8,
-    _pack_segments,
+    _chunk_heads,
+    _pack_points,
+    _xor_lead_trail,
 )
 
 # paper's leading-zero rounding table (3-bit index)
 _LEAD_TABLE = np.array([0, 8, 12, 16, 18, 20, 22, 24], dtype=np.int64)
 
 
-def encode_values_chimp(values: np.ndarray) -> bytes:
-    """Vectorized Chimp encoder (always-'11' profile, see module doc)."""
+def encode_values_chimp(values: np.ndarray, starts=None) -> list[bytes]:
+    """Vectorized Chimp encoder (always-'11' profile, see module doc): one
+    blob per chunk of ``values`` cut at ``starts`` (``None``: one chunk),
+    all chunks in one numpy pass."""
     v = np.asarray(values, dtype=np.float64)
-    n = v.size
-    if n == 0:
-        return b""
+    if v.size == 0:
+        return [b""]
+    starts, first = _chunk_heads(v.size, starts)
     bits = v.view(np.uint64)
-    if n == 1:
-        return _pack_segments(bits[:1].copy(), np.array([64]))
-    x = bits[1:] ^ bits[:-1]
-    nz = x != 0
-
-    xb = x.view(np.uint8).reshape(-1, 8)
-    if np.little_endian:
-        xb = xb[:, ::-1]
-    nonzero_byte = xb != 0
-    first_nz = np.argmax(nonzero_byte, axis=1)
-    last_nz = 7 - np.argmax(nonzero_byte[:, ::-1], axis=1)
-    lead_true = 8 * first_nz + _CLZ8[xb[np.arange(x.size), first_nz]]
-    trail = 8 * (7 - last_nz) + _CTZ8[xb[np.arange(x.size), last_nz]]
+    x, nz, lead_true, trail = _xor_lead_trail(bits, first)
     # round lead DOWN onto the table (never overstate leading zeros)
     lead_idx = np.searchsorted(_LEAD_TABLE, np.minimum(lead_true, 24), side="right") - 1
     lead = _LEAD_TABLE[lead_idx]
 
     center = nz & (trail > 6)          # '01' case
-    plain = nz & ~center               # '11' case
     sig = 64 - lead - trail            # significant bits for the '01' case
-
-    counts = np.where(nz, 2, 1)
-    starts = np.concatenate([[1], 1 + np.cumsum(counts)[:-1]])
-    n_seg = 1 + int(counts.sum())
-    seg_vals = np.empty(n_seg, dtype=np.uint64)
-    seg_w = np.empty(n_seg, dtype=np.int64)
-    seg_vals[0] = bits[0]
-    seg_w[0] = 64
-    header = np.zeros(x.size, dtype=np.uint64)       # '00' default, 2 bits
-    hwidth = np.full(x.size, 2, dtype=np.int64)
-    header[center] = (
+    # per point: '00' (2 bits), '01' + lead(3) + sig(6), or '11' + lead(3)
+    header = np.where(
+        center,
         (np.uint64(0b01) << np.uint64(9))
-        | (lead_idx[center].astype(np.uint64) << np.uint64(6))
-        | sig[center].astype(np.uint64)
+        | (lead_idx.astype(np.uint64) << np.uint64(6))
+        | sig.astype(np.uint64),
+        (np.uint64(0b11) << np.uint64(3)) | lead_idx.astype(np.uint64),
     )
-    hwidth[center] = 11
-    header[plain] = (np.uint64(0b11) << np.uint64(3)) | lead_idx[plain].astype(np.uint64)
-    hwidth[plain] = 5
-    seg_vals[starts] = header
-    seg_w[starts] = hwidth
-    pl_pos = starts[nz] + 1
-    payload = np.where(center, x >> trail.astype(np.uint64), x)
-    seg_vals[pl_pos] = payload[nz]
-    seg_w[pl_pos] = np.where(center, sig, 64 - lead)[nz]
-    return _pack_segments(seg_vals, seg_w)
+    c, xs = center[nz], x[nz]
+    return _pack_points(
+        bits, first, starts, nz,
+        np.where(nz, header, np.uint64(0)), np.where(center, 11, np.where(nz, 5, 2)),
+        np.where(c, xs >> trail[nz].astype(np.uint64), xs),
+        np.where(c, sig[nz], 64 - lead[nz]),
+    )
 
 
 def decode_values_chimp(blob: bytes, n: int) -> np.ndarray:

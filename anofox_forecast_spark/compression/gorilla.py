@@ -20,8 +20,13 @@ Value encoding (§4.1.2):
     else → '11' + 5 bits #leading-zeros + 6 bits length + meaningful bits
 
 The Spark layer (``compress_chunks``) packs each (series, chunk) into one
-BinaryType blob pair inside the harness's batched ``mapInPandas`` (many
-series per Arrow batch) with the vectorized encoders. ``decompress_chunks``
+BinaryType blob pair inside the harness's batched ``mapInPandas``. The
+harness hands the encoder a whole body of complete series per Arrow batch;
+a chunk starts at a series start or where the chunk bucket changes, and the
+vectorized encoders build every chunk of the body in one segmented pass:
+one segment table over all points, one bit-pack with each chunk padded to a
+byte, and the packed buffer sliced per chunk. The bytes are those of
+encoding each chunk on its own. ``decompress_chunks``
 is narrow: chunk rows are self-contained (header, codec magic, point
 count), so it is one ``mapInPandas`` over the chunk frame with no Exchange
 and no Sort; each Arrow batch of chunks becomes output frames of about
@@ -158,80 +163,102 @@ for _v in range(1, 256):
     _CTZ8[_v] = (_v & -_v).bit_length() - 1
 
 
-def _pack_segments(vals: np.ndarray, widths: np.ndarray) -> bytes:
-    """Bit-pack variable-width big-endian segments (vectorized).
+def _chunk_heads(n: int, starts) -> tuple[np.ndarray, np.ndarray]:
+    """(chunk start offsets, per-point "first point of its chunk" mask) for
+    ``n`` points cut at ``starts`` (ascending, beginning with 0); ``None``
+    is one chunk."""
+    starts = np.zeros(1, dtype=np.int64) if starts is None else np.asarray(starts, dtype=np.int64)
+    first = np.zeros(n, dtype=bool)
+    first[starts] = True
+    return starts, first
+
+
+def _pack_segments(vals: np.ndarray, widths: np.ndarray, firsts: np.ndarray) -> list[bytes]:
+    """Bit-pack variable-width big-endian segments, one blob per chunk.
 
     vals: uint64 segment values (only the low ``width`` bits used);
-    widths: per-segment bit widths (1..64). Output is MSB-first, padded
-    with zero bits to a byte boundary — the same layout _BitWriter emits.
+    widths: per-segment bit widths (1..64); firsts: index of each chunk's
+    first segment (ascending, beginning with 0). Each chunk is MSB-first
+    and padded with zero bits to a byte boundary — the layout _BitWriter
+    emits — but all chunks go through one repeat/packbits pass and the
+    buffer is sliced per chunk.
     """
-    total = int(widths.sum())
-    if total == 0:
-        return b""
+    chunk_bits = np.add.reduceat(widths, firsts)
+    chunk_bytes = (chunk_bits + 7) >> 3
+    pad = 8 * chunk_bytes - chunk_bits
     seg_idx = np.repeat(np.arange(vals.size), widths)
-    offsets = np.concatenate([[0], np.cumsum(widths)[:-1]])
-    j = np.arange(total) - offsets[seg_idx]          # bit index within segment
-    shift = (widths[seg_idx] - 1 - j).astype(np.uint64)
-    bits = ((vals[seg_idx] >> shift) & np.uint64(1)).astype(np.uint8)
-    return np.packbits(bits).tobytes()
+    seg_end = np.cumsum(widths)
+    # bit index within its segment, counted from the segment's last bit
+    shift = (seg_end[seg_idx] - 1 - np.arange(seg_idx.size)).astype(np.uint64)
+    stream = np.zeros(8 * int(chunk_bytes.sum()), dtype=np.uint8)
+    dest = np.arange(seg_idx.size) + np.repeat(np.cumsum(pad) - pad, chunk_bits)
+    stream[dest] = (vals[seg_idx] >> shift) & np.uint64(1)
+    buf = np.packbits(stream).tobytes()
+    ends = np.cumsum(chunk_bytes).tolist()
+    return [buf[a:b] for a, b in zip([0, *ends[:-1]], ends)]
 
 
-def encode_values_packed(values: np.ndarray) -> bytes:
-    """Vectorized Gorilla XOR encoder (always-new-window profile — a
-    conformant subset the streaming decoder reads unchanged): byte-LUT
-    leading/trailing zero counts, one repeat/cumsum bit-pack pass.
-
-    This is the encoder ``compress_chunks`` uses (1.4-1.6× the loop
-    encoder per point at realistic 7d-chunk sizes). Blobs are ~3-8% larger
-    than the window-reuse loop encoder ('11' headers always carry lead/len).
-    """
-    v = np.asarray(values, dtype=np.float64)
-    n = v.size
-    if n == 0:
-        return b""
-    bits = v.view(np.uint64)
-    if n == 1:
-        return _pack_segments(bits[:1].copy(), np.array([64]))
-    x = bits[1:] ^ bits[:-1]
+def _xor_lead_trail(bits: np.ndarray, first: np.ndarray):
+    """XOR of each point with its predecessor (0 at a chunk's first point),
+    the nonzero mask, and each XOR's leading/trailing zero-bit counts from
+    byte lookup tables (meaningless where the XOR is 0)."""
+    x = np.zeros(bits.size, dtype=np.uint64)
+    np.bitwise_xor(bits[1:], bits[:-1], out=x[1:])
+    x[first] = 0
     nz = x != 0
-
     xb = x.view(np.uint8).reshape(-1, 8)
     if np.little_endian:
         xb = xb[:, ::-1]  # big-endian byte order for lead/trail scan
     nonzero_byte = xb != 0
     first_nz = np.argmax(nonzero_byte, axis=1)
     last_nz = 7 - np.argmax(nonzero_byte[:, ::-1], axis=1)
-    lead = 8 * first_nz + _CLZ8[xb[np.arange(x.size), first_nz]]
-    trail = 8 * (7 - last_nz) + _CTZ8[xb[np.arange(x.size), last_nz]]
+    rows = np.arange(x.size)
+    lead = 8 * first_nz + _CLZ8[xb[rows, first_nz]]
+    trail = 8 * (7 - last_nz) + _CTZ8[xb[rows, last_nz]]
+    return x, nz, lead, trail
+
+
+def _pack_points(bits, first, starts, nz, head, head_w, payload, pay_w) -> list[bytes]:
+    """Lay out one segment per point (the raw 64-bit value at a chunk's
+    first point, else ``head``) plus a payload segment where ``nz``, in
+    point order, and pack one blob per chunk."""
+    counts = np.where(nz, 2, 1)
+    seg_at = np.cumsum(counts) - counts
+    seg_vals = np.empty(int(counts.sum()), dtype=np.uint64)
+    seg_w = np.empty(seg_vals.size, dtype=np.int64)
+    seg_vals[seg_at] = np.where(first, bits, head)
+    seg_w[seg_at] = np.where(first, 64, head_w)
+    seg_vals[seg_at[nz] + 1] = payload
+    seg_w[seg_at[nz] + 1] = pay_w
+    return _pack_segments(seg_vals, seg_w, seg_at[starts])
+
+
+def encode_values_packed(values: np.ndarray, starts=None) -> list[bytes]:
+    """Vectorized Gorilla XOR encoder (always-new-window profile — a
+    conformant subset the streaming decoder reads unchanged): one blob per
+    chunk of ``values`` cut at ``starts`` (``None``: one chunk), all chunks
+    in one numpy pass.
+
+    This is the encoder ``compress_chunks`` uses. Blobs are ~3-8% larger
+    than the window-reuse loop encoder ('11' headers always carry lead/len).
+    """
+    v = np.asarray(values, dtype=np.float64)
+    if v.size == 0:
+        return [b""]
+    starts, first = _chunk_heads(v.size, starts)
+    bits = v.view(np.uint64)
+    x, nz, lead, trail = _xor_lead_trail(bits, first)
     lead = np.minimum(lead, 31)          # 5-bit field cap (paper convention)
     sig = 64 - lead - trail
-
-    # segments: [first value raw 64] then per point either ('0',1) or
-    # ('11'+lead+sig-1, 13) + (payload, sig)
-    n_seg = 1 + int(nz.sum()) * 2 + int((~nz).sum())
-    seg_vals = np.empty(n_seg, dtype=np.uint64)
-    seg_w = np.empty(n_seg, dtype=np.int64)
-    seg_vals[0] = bits[0]
-    seg_w[0] = 64
-    # interleave: for zero points one segment, for nonzero two — build by
-    # computing per-point segment counts and scattering
-    counts = np.where(nz, 2, 1)
-    starts = 1 + np.concatenate([[0], np.cumsum(counts)[:-1]])
-    # control/header segment
-    header = np.where(
-        nz,
-        (np.uint64(0b11) << np.uint64(11))
-        | (lead.astype(np.uint64) << np.uint64(6))
-        | (sig - 1).astype(np.uint64),
-        np.uint64(0),
+    # per point: '0' (1 bit), or '11' + lead(5) + sig-1(6) then sig payload bits
+    header = ((np.uint64(0b11) << np.uint64(11))
+              | (lead.astype(np.uint64) << np.uint64(6))
+              | (sig - 1).astype(np.uint64))
+    return _pack_points(
+        bits, first, starts, nz,
+        np.where(nz, header, np.uint64(0)), np.where(nz, 13, 1),
+        x[nz] >> trail[nz].astype(np.uint64), sig[nz],
     )
-    seg_vals[starts] = header
-    seg_w[starts] = np.where(nz, 13, 1)
-    # payload segment for nonzero points
-    pl_pos = starts[nz] + 1
-    seg_vals[pl_pos] = x[nz] >> trail[nz].astype(np.uint64)
-    seg_w[pl_pos] = sig[nz]
-    return _pack_segments(seg_vals, seg_w)
 
 
 def encode_values(values: np.ndarray) -> bytes:
@@ -294,47 +321,40 @@ def decode_values(blob: bytes, n: int) -> np.ndarray:
     return out.view(np.float64)
 
 
-def encode_timestamps_packed(ts: np.ndarray) -> bytes:
-    """Vectorized delta-of-delta encoder: same bitstream as
+def encode_timestamps_packed(ts: np.ndarray, starts=None) -> list[bytes]:
+    """Vectorized delta-of-delta encoder: per chunk of ``ts`` cut at
+    ``starts`` (``None``: one chunk), the same bitstream as
     ``encode_timestamps`` (the scalar loop), built with np.select over the
-    range table + one segment-pack pass. On a regular grid every
-    delta-of-delta is 0, so the payload collapses to (n−2) zero bits."""
+    range table and one segment-pack pass for all chunks. On a regular grid
+    every delta-of-delta is 0, so a chunk's payload collapses to (n−2) zero
+    bits."""
     ts = np.asarray(ts, dtype=np.int64)
-    n = ts.size
-    if n == 0:
-        return b""
-    if n == 1:
-        return _pack_segments(ts.astype(np.uint64), np.array([64]))
-    deltas = np.diff(ts)
-    d = np.diff(deltas)  # n-2 delta-of-deltas
-    head_vals = np.array([ts[0], deltas[0]], dtype=np.uint64)
-    head_w = np.array([64, 64])
-    if d.size == 0:
-        return _pack_segments(head_vals, head_w)
-    zero = d == 0
+    if ts.size == 0:
+        return [b""]
+    starts, first = _chunk_heads(ts.size, starts)
+    second = np.zeros(ts.size, dtype=bool)
+    second[1:] = first[:-1] & ~first[1:]
+    deltas = np.zeros(ts.size, dtype=np.int64)
+    np.subtract(ts[1:], ts[:-1], out=deltas[1:])
+    d = np.zeros(ts.size, dtype=np.int64)  # delta-of-delta from a chunk's third point
+    np.subtract(deltas[1:], deltas[:-1], out=d[1:])
+    # a chunk's first two points carry the raw timestamp and the raw delta
+    raw = first | second
+    zero = (d == 0) | raw
     conds = [zero] + [(lo <= d) & (d <= hi) for lo, hi, *_ in _TS_RANGES]
     # control values/widths per range; else-branch = '1111' + 64 raw
     ctrl_vals = np.select(conds, [0, *(c for *_, c, _ in _TS_RANGES)], 0b1111)
     ctrl_w = np.select(conds, [1, *(cb for *_, cb in _TS_RANGES)], 4)
-    pay_vals = np.select(
-        conds[1:], [(d - lo).astype(np.uint64) for lo, *_ in _TS_RANGES],
-        d.astype(np.uint64),
-    )
-    pay_w = np.select(conds[1:], [bits for *_, bits, _, _ in _TS_RANGES], 64)
     has_pay = ~zero
-    counts = np.where(has_pay, 2, 1)
-    starts = 2 + np.concatenate([[0], np.cumsum(counts)[:-1]])
-    n_seg = 2 + int(counts.sum())
-    seg_vals = np.empty(n_seg, dtype=np.uint64)
-    seg_w = np.empty(n_seg, dtype=np.int64)
-    seg_vals[:2] = head_vals
-    seg_w[:2] = head_w
-    seg_vals[starts] = ctrl_vals.astype(np.uint64)
-    seg_w[starts] = ctrl_w
-    pp = starts[has_pay] + 1
-    seg_vals[pp] = pay_vals[has_pay]
-    seg_w[pp] = pay_w[has_pay]
-    return _pack_segments(seg_vals, seg_w)
+    dp = d[has_pay]
+    pay_conds = [(lo <= dp) & (dp <= hi) for lo, hi, *_ in _TS_RANGES]
+    pay_vals = np.select(pay_conds, [(dp - lo).view(np.uint64) for lo, *_ in _TS_RANGES],
+                         dp.view(np.uint64))
+    pay_w = np.select(pay_conds, [bits for *_, bits, _, _ in _TS_RANGES], 64)
+    return _pack_points(
+        np.where(first, ts, deltas).view(np.uint64), raw, starts, has_pay,
+        ctrl_vals.astype(np.uint64), ctrl_w, pay_vals, pay_w,
+    )
 
 
 # ------------------------------------------------------------- Spark layer
@@ -429,33 +449,29 @@ def compress_chunks(
 
     chunked = df.withColumn("__chunk", bucket_col(ts_col, chunk_freq))
 
-    # batched mapInPandas (many series per Arrow batch); per-chunk split
-    # happens in-process — per-series or per-chunk grouped maps would pay
-    # dispatch overhead thousands of times
-    def encode_series(g: pd.DataFrame, out: dict) -> None:
+    def encode_body(body: pd.DataFrame, starts: np.ndarray, out: dict) -> None:
+        # a chunk starts with a series or where the chunk bucket changes;
+        # every chunk of the body is encoded in one segmented pass
+        chunks = body["__chunk"].to_numpy()
+        first = np.zeros(len(body), dtype=bool)
+        first[starts] = True
+        first[1:] |= chunks[1:] != chunks[:-1]
+        heads = np.flatnonzero(first)
         # native microsecond resolution — sub-second timestamps round-trip
         # losslessly (r1 silently truncated to whole seconds)
-        ts_all = g[ts_col].astype("datetime64[us]").astype("int64").to_numpy()
-        vals_all = g[value_col].to_numpy(dtype=np.float64)
-        chunks = g["__chunk"].to_numpy()
-        boundaries = np.flatnonzero(chunks[1:] != chunks[:-1]) + 1
-        for seg_ts, seg_vals, seg_chunk in zip(
-            np.split(ts_all, boundaries),
-            np.split(vals_all, boundaries),
-            chunks[np.concatenate([[0], boundaries])],
-        ):
-            for k in keys_l:
-                out[k].append([g[k].iloc[0]])
-            out["chunk_start"].append([seg_chunk])
-            out["n_points"].append([np.int32(seg_ts.size)])
-            out["ts_blob"].append([_wrap_blob(encode_timestamps_packed(seg_ts))])
-            out["val_blob"].append(
-                [val_magic + _UNIT_CODES["us"] + enc_values(seg_vals)]
-            )
+        ts = body[ts_col].astype("datetime64[us]").astype("int64").to_numpy()
+        vals = body[value_col].to_numpy(dtype=np.float64)
+        for k in keys_l:
+            out[k].append(body[k].to_numpy()[heads])
+        out["chunk_start"].append(chunks[heads])
+        out["n_points"].append(np.diff(heads, append=len(body)).astype(np.int32))
+        out["ts_blob"].append([_wrap_blob(b) for b in encode_timestamps_packed(ts, heads)])
+        prefix = val_magic + _UNIT_CODES["us"]
+        out["val_blob"].append([prefix + b for b in enc_values(vals, heads)])
 
     from anofox_forecast_spark.models.harness import batched_series_apply
 
-    return batched_series_apply(chunked, keys_l, ts_col, encode_series, out_schema)
+    return batched_series_apply(chunked, keys_l, ts_col, encode_body, out_schema)
 
 
 def _decode_chunk(ts_blob: bytes, val_blob: bytes, n: int) -> tuple[np.ndarray, np.ndarray]:

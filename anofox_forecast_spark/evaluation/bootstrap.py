@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
-from anofox_forecast_spark.models.harness import batched_series_apply
+from anofox_forecast_spark.models.harness import batched_series_apply, each_series
 from anofox_forecast_spark.models.registry import get_model
 
 _SEED = "__bootstrap_seed"
@@ -110,4 +110,4 @@ def bootstrap_intervals(
             out[c].append(np.asarray(r[c], dtype=np.float64))
 
     seeded = df.select(*keys_l, ts_col, y_col, F.xxhash64(*keys_l).alias(_SEED))
-    return batched_series_apply(seeded, keys_l, ts_col, per_series, out_schema)
+    return batched_series_apply(seeded, keys_l, ts_col, each_series(per_series), out_schema)

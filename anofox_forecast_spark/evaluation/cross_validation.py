@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
 from anofox_forecast_spark.evaluation.metrics import accuracy_metrics_np
-from anofox_forecast_spark.models.harness import _normalize_models, batched_series_apply
+from anofox_forecast_spark.models.harness import _normalize_models, batched_series_apply, each_series
 from anofox_forecast_spark.models.registry import get_model
 
 _METRIC_COLS = ("mae", "mse", "rmse", "mape", "smape", "mase", "r_squared")
@@ -89,4 +89,4 @@ def cross_validate(
         for c, col in zip(_METRIC_COLS, np.array(metrics, dtype=np.float64).T):
             out[c].append(col)
 
-    return batched_series_apply(df, keys_l, ts_col, per_series, out_schema)
+    return batched_series_apply(df, keys_l, ts_col, each_series(per_series), out_schema)

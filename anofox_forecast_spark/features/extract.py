@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from anofox_forecast_spark.features.np_features import DEFAULT_FEATURES
-from anofox_forecast_spark.models.harness import batched_series_apply
+from anofox_forecast_spark.models.harness import batched_series_apply, each_series
 
 
 def extract_features(
@@ -63,4 +63,4 @@ def extract_features(
             except Exception:
                 out[n].append(np.nan)  # NaN → NULL via Arrow
 
-    return batched_series_apply(df, keys_l, ts_col, per_series, out_schema)
+    return batched_series_apply(df, keys_l, ts_col, each_series(per_series), out_schema)

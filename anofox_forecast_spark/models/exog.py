@@ -33,6 +33,7 @@ from anofox_forecast_spark.models._numerics import ols_fit, ols_residuals
 from anofox_forecast_spark.models.harness import (
     _normalize_models,
     batched_series_apply,
+    each_series,
 )
 from anofox_forecast_spark.models.kernels import KernelResult
 from anofox_forecast_spark.models.registry import get_model
@@ -125,4 +126,4 @@ def forecast_exog(
             out["lo"].append(res.lo)
             out["hi"].append(res.hi)
 
-    return batched_series_apply(combined, keys_l, ts_col, per_series, out_schema)
+    return batched_series_apply(combined, keys_l, ts_col, each_series(per_series), out_schema)

@@ -4,11 +4,17 @@ Every per-series Python kernel in the engine (forecasts, fitted values,
 cross-validation, bootstrap intervals, STL, PELT, Box-Cox λ, features, EWM,
 exogenous regressors, Gorilla encode) runs through ``batched_series_apply``:
 the input long frame is shuffled once by the series key and sorted by key
-and time, then one ``mapInPandas`` hands many series to Python per Arrow
-batch; the kernels run over each series' numpy array and results return as
-Arrow batches. This is the SURVEY §2.2 "Spark primitive for ALL models": no
-per-row Python, no per-series Arrow round trip, no driver-side loops,
-cross-series parallelism = partition parallelism.
+and time, then one ``mapInPandas`` collects complete series into one pandas
+body per Arrow batch (a series cut by the batch boundary is carried over to
+the next body). The kernel gets the whole body plus the row offsets where
+each series starts, computed once per body with numpy. A one-series kernel
+is wrapped in ``each_series``, which slices the body per series; a kernel
+that vectorizes across series (the Gorilla/Chimp encode) runs once per body,
+so numpy's fixed per-call cost is paid per Arrow batch, not per series or
+chunk. Results return as Arrow batches. This is the SURVEY §2.2 "Spark
+primitive for ALL models": no per-row Python, no per-series Arrow round
+trip, no driver-side loops, cross-series parallelism = partition
+parallelism.
 
 Failure policy (ref returns Result per call — src/error.rs): a series that
 raises (e.g. InsufficientData) emits zero forecast rows instead of failing
@@ -82,26 +88,52 @@ def _key_mask(pdf: pd.DataFrame, keys_l: list[str], ref: pd.DataFrame) -> np.nda
     return mask
 
 
-def batched_series_apply(df: DataFrame, keys, ts_col, per_series, out_schema) -> DataFrame:
-    """mapInPandas over key-partitioned, key+ts-sorted data: many series per
-    Arrow batch with carry-over for groups split across batch boundaries.
+def _series_starts(body: pd.DataFrame, keys_l: list[str]) -> np.ndarray:
+    """Row offsets where each series of a key-sorted ``body`` starts.
 
-    ``per_series(g: pd.DataFrame, out: dict[str, list])`` appends one block
-    per output column for one series, which arrives in ``ts_col`` order.
-    Every block of a column is a numpy array, or every block is a list: a
-    column is flattened by the type of its first block. ``ts_col=None``
-    sorts by the keys alone, for kernels whose result does not depend on
-    row order. This is the one per-series Python stage of the engine: one
-    pandas frame per ~10k rows instead of one per series.
+    Null-safe like ``_key_mask``: two NULL keys are equal, so a null-key
+    series (e.g. parse_url host on malformed URLs) is one series and is
+    never discarded.
+    """
+    first = np.zeros(len(body), dtype=bool)
+    first[:1] = True
+    for k in keys_l:
+        v = body[k].to_numpy()
+        na = body[k].isna().to_numpy()
+        first[1:] |= (v[1:] != v[:-1]) & ~(na[1:] & na[:-1])
+    return np.flatnonzero(first)
+
+
+def each_series(per_series):
+    """Adapt a one-series callback ``per_series(g, out)`` to the body
+    contract of ``batched_series_apply``: ``g`` is one series' rows."""
+    def per_body(body: pd.DataFrame, starts: np.ndarray, out: dict) -> None:
+        for a, b in zip(starts.tolist(), [*starts[1:].tolist(), len(body)]):
+            per_series(body.iloc[a:b], out)
+    return per_body
+
+
+def batched_series_apply(df: DataFrame, keys, ts_col, per_body, out_schema) -> DataFrame:
+    """mapInPandas over key-partitioned, key+ts-sorted data: many complete
+    series per call, with carry-over for series split across Arrow batches.
+
+    ``per_body(body: pd.DataFrame, starts: np.ndarray, out: dict[str, list])``
+    gets a body of complete series, each in ``ts_col`` order, and the row
+    offsets where each series starts (ascending, beginning with 0); it
+    appends blocks per output column. Every block of a column is a numpy
+    array, or every block is a list: a column is flattened by the type of
+    its first block. A kernel that works on one series at a time is wrapped
+    in ``each_series``; a kernel that can vectorize across series (the
+    Gorilla encode) takes the body whole. ``ts_col=None`` sorts by the keys
+    alone, for kernels whose result does not depend on row order. This is
+    the one per-series Python stage of the engine: one pandas frame per
+    ~10k rows instead of one per series.
     """
     keys_l = list(keys)
 
     def _flush(body: pd.DataFrame):
         out = {f.name: [] for f in out_schema.fields}
-        # dropna=False: NULL keys (e.g. parse_url host on malformed URLs)
-        # are real series and must not be silently discarded.
-        for _, g in body.groupby(keys_l, sort=False, dropna=False):
-            per_series(g, out)
+        per_body(body, _series_starts(body, keys_l), out)
         if not next(iter(out.values()), None):
             return None
         return pd.DataFrame({
@@ -217,7 +249,7 @@ def forecast(
             out["lo"].append(res.lo)
             out["hi"].append(res.hi)
 
-    return batched_series_apply(df, keys_l, ts_col, one_series, out_schema)
+    return batched_series_apply(df, keys_l, ts_col, each_series(one_series), out_schema)
 
 
 def fitted_values(
@@ -266,4 +298,4 @@ def fitted_values(
             out["fitted"].append(res.fitted)
             out["residual"].append(res.residuals)
 
-    return batched_series_apply(df, keys_l, ts_col, per_series, out_schema)
+    return batched_series_apply(df, keys_l, ts_col, each_series(per_series), out_schema)

@@ -186,7 +186,7 @@ def stl_decompose_spark(df, keys, ts_col, y_col, period: int, robust: bool = Fal
     """Per-series STL: returns input rows + (trend, seasonal, remainder)."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from anofox_forecast_spark.models.harness import batched_series_apply
+    from anofox_forecast_spark.models.harness import batched_series_apply, each_series
 
     keys_l = list(keys)
     parts = ("trend", "seasonal", "remainder")
@@ -206,4 +206,4 @@ def stl_decompose_spark(df, keys, ts_col, y_col, period: int, robust: bool = Fal
         for c in parts:
             out[c].append(np.full(y.size, np.nan) if r is None else getattr(r, c))
 
-    return batched_series_apply(df, keys_l, ts_col, per_series, out_schema)
+    return batched_series_apply(df, keys_l, ts_col, each_series(per_series), out_schema)

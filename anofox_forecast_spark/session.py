@@ -10,6 +10,13 @@ is only the test harness. All scale-relevant knobs are set here once:
   overridden by AQE (`spark.sql.adaptive.coalescePartitions.enabled`).
 - Timestamps normalized to UTC (the reference uses chrono `DateTime<Utc>`;
   ref src/core/time_series.rs:163-174).
+- DataFrame call-site capture off (`spark.python.sql.dataFrameDebugging.enabled`).
+  With it on, PySpark wraps every Column/`functions` call so that it records
+  the caller's frame in the JVM: about five py4j round trips per call. The
+  frames it records are engine internals. A perfbench `series_batch`
+  repetition (`local[4]`, 4-core x86) made 2,105-2,250 py4j calls and spent
+  0.16-0.18 s of driver CPU with capture on, 1,150-1,381 calls and
+  0.09-0.10 s with it off. `extra_conf` can turn it back on.
 """
 
 from __future__ import annotations
@@ -41,6 +48,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     if extra_conf:

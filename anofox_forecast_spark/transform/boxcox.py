@@ -82,10 +82,10 @@ def boxcox_lambda_per_series(
             out[k].append(np.repeat(g[k].iloc[0], 1))
         out["lambda"].append(np.array([boxcox_lambda(g[value_col].to_numpy(dtype=np.float64))]))
 
-    from anofox_forecast_spark.models.harness import batched_series_apply
+    from anofox_forecast_spark.models.harness import batched_series_apply, each_series
 
     # λ does not depend on row order: sort by the keys alone
-    return batched_series_apply(df, keys_l, None, per_series, out_schema)
+    return batched_series_apply(df, keys_l, None, each_series(per_series), out_schema)
 
 
 def boxcox_shifted(y: np.ndarray, lam: float) -> tuple[np.ndarray, float]:

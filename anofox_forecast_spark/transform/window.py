@@ -97,7 +97,7 @@ def ewm_mean(
     """
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from anofox_forecast_spark.models.harness import batched_series_apply
+    from anofox_forecast_spark.models.harness import batched_series_apply, each_series
 
     out_col = out_col or f"{value_col}_ewm"
     cols = df.columns
@@ -108,7 +108,7 @@ def ewm_mean(
             out[c].append(g[c].to_numpy())
         out[out_col].append(ewm_mean_np(g[value_col].to_numpy(dtype=np.float64), alpha))
 
-    return batched_series_apply(df, keys, ts_col, per_series, out_schema)
+    return batched_series_apply(df, keys, ts_col, each_series(per_series), out_schema)
 
 
 def ewm_mean_np(y: np.ndarray, alpha: float) -> np.ndarray:

@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StringType
 
+from anofox_forecast_spark._worker import hooked
+
 # Query parameters stripped by the URL canonicalizer: click/campaign
 # trackers that never change page content. Prefix match for utm_*,
 # exact-key match for the rest. Pinned here so the DuckDB oracle can
@@ -149,6 +151,7 @@ def normalize_text(
     nf = form
 
     @F.pandas_udf(StringType())
+    @hooked
     def _norm(s: pd.Series) -> pd.Series:
         return s.str.normalize(nf)
 

@@ -27,6 +27,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from anofox_forecast_spark._worker import hooked
 from anofox_forecast_spark.webtext.text_stats import _tokens
 
 
@@ -105,6 +106,7 @@ def exact_dedup_incremental(
 
     n_bytes = bloom_bits // 8
 
+    @hooked
     def _partial_blooms(batches):
         bitmap = np.zeros(n_bytes, dtype=np.uint8)
         seen = False
@@ -125,6 +127,7 @@ def exact_dedup_incremental(
         bitmap |= np.frombuffer(row["bits"], dtype=np.uint8)
 
     @pandas_udf(BooleanType())
+    @hooked
     def might_contain(idx_s: pd.Series) -> pd.Series:
         if len(idx_s) == 0:
             return pd.Series([], dtype=bool)
@@ -235,6 +238,7 @@ def _chunk_key_udf(L: int, seed: int = 23):
              << np.uint64(1)) | np.uint64(1)
 
     @pandas_udf(ArrayType(LongType()))
+    @hooked
     def key_udf(hs: pd.Series) -> pd.Series:
         ndocs = len(hs)
         lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
@@ -459,6 +463,7 @@ def minhash_signatures(
     umax = np.uint64(0xFFFFFFFFFFFFFFFF)
 
     @pandas_udf(ArrayType(LongType()))
+    @hooked
     def sig_udf(hs: pd.Series) -> pd.Series:
         ndocs = len(hs)
         lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
@@ -700,6 +705,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     from pyspark.sql.types import LongType
 
     @pandas_udf(LongType())
+    @hooked
     def bitvote(hs: pd.Series) -> pd.Series:
         n = len(hs)
         lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=n)

@@ -28,6 +28,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, Window
 
+from anofox_forecast_spark._worker import hooked
+
 from .text_stats import _tokens, quality_scores, repetition_stats
 
 # ---------------------------------------------------------------------------
@@ -746,6 +748,7 @@ def pack_greedy(
         F.col(tokens_col).cast("long").alias("n_tokens"),
     )
 
+    @hooked
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("id").reset_index(drop=True)
         bin_id, fill = 0, 0

@@ -45,6 +45,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from anofox_forecast_spark._worker import hooked
+
 
 def _norm(col):
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x))
@@ -251,6 +253,7 @@ def _probe_topk(index: DataFrame, queries: DataFrame, id_col: str,
         flat_keys[order], return_index=True, return_counts=True)
     qr_concat = flat_rows[order]
 
+    @hooked
     def score(batches):
         import pyarrow as pa
 

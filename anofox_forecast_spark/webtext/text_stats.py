@@ -10,6 +10,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from anofox_forecast_spark._worker import hooked
+
 # tiny stopword lists per language (n-gram/stopword heuristic language ID)
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "on"],
@@ -133,6 +135,7 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str, window: int = 8) -> D
     w = window
 
     @pandas_udf(LongType())
+    @hooked
     def fp(hs: pd.Series) -> pd.Series:
         ndocs = len(hs)
         out = np.zeros(ndocs, dtype=np.int64)
@@ -287,6 +290,7 @@ def repetition_stats(
         return max_run, n_runs
 
     @pandas_udf(ArrayType(DoubleType()))
+    @hooked
     def rep_udf(hs: pd.Series) -> pd.Series:
         ndocs = len(hs)
         out = np.zeros((ndocs, 3), dtype=np.float64)

@@ -1,7 +1,7 @@
 """``__spark_entry__`` queries against their DuckDB ``oracle_sql()`` twins at
-sf0.001: the gap-fill queries of plans/driver_queries.py and the four
-webtext queries rewritten in round 6 (line dedup, LM perplexity, DSIR
-weights, C4 filters).
+sf0.001: the gap-fill queries of plans/driver_queries.py, the Gorilla and
+Chimp compress → decompress round trips, and the four webtext queries
+rewritten in round 6 (line dedup, LM perplexity, DSIR weights, C4 filters).
 """
 
 from __future__ import annotations
@@ -17,6 +17,7 @@ from tools.check_oracle import norm_rows  # noqa: E402
 
 ORACLE_QUERIES = ("gapfill_spine_1h", "gapfill_locf_1h", "gapfill_interp_1h",
                   "gapfill_dense_1h", "forecast_snaive_1h",
+                  "compress_roundtrip_7d", "compress_chimp_7d",
                   "dedup_lines", "text_lm_ppl", "text_dsir", "text_c4_filters")
 
 

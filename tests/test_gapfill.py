@@ -253,3 +253,24 @@ def test_fill_gaps_matches_python_reference(spark):
                     assert (g[2] is None) == (w[2] is None), (case, g, w)
                     if w[2] is not None:
                         assert g[2] == pytest.approx(w[2], rel=1e-12), (case, g, w)
+
+
+def test_gapfill_plan_building_sends_no_call_site_capture(spark, monkeypatch):
+    """``get_spark`` turns DataFrame call-site capture off: building a
+    ``gapfill_dense`` plan sends py4j commands, but none that sets or
+    clears ``PySparkCurrentOrigin`` around each Column call."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def recording(self, command):
+        sent.append(command)
+        return send(self, command)
+
+    df = _mk(spark, [("a", t, 1.0) for t in _hours(0, 3)])
+    monkeypatch.setattr(ClientServerConnection, "send_command", recording)
+    gapfill_dense(df, ["sid"], "ts", ["y"], "1h")
+    monkeypatch.undo()
+    assert sent
+    assert not [c for c in sent if "PySparkCurrentOrigin" in c]

@@ -131,7 +131,7 @@ def test_vectorized_encoder_matches_decoder():
         np.full(500, 42.125),
         np.round(50 + rng.normal(0, 5, 3000), 3),
     ):
-        blob = encode_values_packed(v)
+        [blob] = encode_values_packed(v)
         out = decode_values(blob, v.size)
         assert np.array_equal(
             np.asarray(v, float).view(np.uint64), out.view(np.uint64)
@@ -149,7 +149,7 @@ def test_timestamps_packed_bit_identical():
         np.cumsum(rng.integers(1, 10_000, 800)).astype(np.int64),
         rng.integers(-2**50, 2**50, 200).astype(np.int64),
     ):
-        assert encode_timestamps(ts) == encode_timestamps_packed(ts)
+        assert [encode_timestamps(ts)] == encode_timestamps_packed(ts)
 
 
 def test_compress_chunks_subsecond_roundtrip(spark):
@@ -193,7 +193,7 @@ def test_chimp_roundtrip_property():
         rng.random(2000),
     ]
     for v in cases:
-        back = decode_values_chimp(encode_values_chimp(v), v.size)
+        back = decode_values_chimp(encode_values_chimp(v)[0], v.size)
         assert back.size == v.size
         if v.size:
             np.testing.assert_array_equal(v.view(np.uint64), back.view(np.uint64))
@@ -211,8 +211,8 @@ def test_chimp_smaller_than_gorilla_on_counts():
     rng = np.random.default_rng(1)
     counts = rng.integers(0, 500, 5000).astype(np.float64)
     walk = np.cumsum(rng.normal(0, 1, 5000))
-    assert len(encode_values_chimp(counts)) < len(encode_values_packed(counts))
-    assert len(encode_values_chimp(walk)) < len(encode_values_packed(walk))
+    assert len(encode_values_chimp(counts)[0]) < len(encode_values_packed(counts)[0])
+    assert len(encode_values_chimp(walk)[0]) < len(encode_values_packed(walk)[0])
 
 
 def test_chimp_chunks_roundtrip(spark):
@@ -286,7 +286,7 @@ def test_seconds_unit_blob_matches_microsecond_twin(spark):
     secs = np.array([1_704_067_200 + 3600 * i for i in range(20)] + [1_704_200_000],
                     dtype=np.int64)
     vals = np.linspace(0.0, 5.0, secs.size)
-    val_blob = _wrap_blob(encode_values_packed(vals))
+    val_blob = _wrap_blob(encode_values_packed(vals)[0])
     rows = [
         ("s", int(secs.size), _wrap_blob(encode_timestamps(secs), "s"), val_blob),
         ("us", int(secs.size), _wrap_blob(encode_timestamps(secs * 1_000_000), "us"),
@@ -390,3 +390,105 @@ def test_small_arrow_batches_roundtrip_long_chunks(spark):
     assert (back["ts"] == orig["ts"]).all()
     assert np.array_equal(back["value"].to_numpy().view(np.uint64),
                           orig["y"].to_numpy().view(np.uint64))
+
+
+# ------------------------------------------------ segmented (per-body) encode
+
+_SPECIALS = [np.nan, np.inf, -np.inf, -0.0, 0.0, 5e-324, 1.7e308]
+
+
+def _check_segmented(vals, ts, starts):
+    """Every chunk's blob from one segmented call equals the one-chunk
+    encoders' bytes (the scalar loop for timestamps) and decodes back."""
+    from anofox_forecast_spark.compression.chimp import (
+        decode_values_chimp,
+        encode_values_chimp,
+    )
+    from anofox_forecast_spark.compression.gorilla import (
+        encode_timestamps_packed,
+        encode_values_packed,
+    )
+
+    bounds = [*starts, vals.size]
+    gor = encode_values_packed(vals, starts)
+    chimp = encode_values_chimp(vals, starts)
+    tsb = encode_timestamps_packed(ts, starts)
+    assert len(gor) == len(chimp) == len(tsb) == len(starts)
+    for i, (a, b) in enumerate(zip(bounds[:-1], bounds[1:])):
+        v, t = vals[a:b], ts[a:b]
+        assert gor[i] == encode_values_packed(v)[0]
+        assert chimp[i] == encode_values_chimp(v)[0]
+        assert tsb[i] == encode_timestamps(t)
+        assert np.array_equal(decode_values(gor[i], v.size).view(np.uint64), v.view(np.uint64))
+        assert np.array_equal(decode_values_chimp(chimp[i], v.size).view(np.uint64),
+                              v.view(np.uint64))
+        assert np.array_equal(decode_timestamps(tsb[i], t.size), t)
+
+
+def test_segmented_encoders_cover_edge_chunks():
+    """1- and 2-point chunks, NaN/±inf/-0.0 and a delta-of-delta outside
+    ±2047 (the '1111' + 64-bit branch), in one body."""
+    vals = np.array([1.5, -0.0, 0.0, np.nan, np.inf, -np.inf, 2.0, 2.0, 5e-324, 3.25, 1.7e308])
+    ts = 1_704_067_200_000_000 + np.cumsum(
+        [0, 3600, 3600, 7, 3600, 1_000_000, 3600, -5, 3600, 3600, 90_000]).astype(np.int64)
+    assert (np.abs(np.diff(np.diff(ts))) > 2047).any()
+    # chunks of 1, 2, 1, 3 and 4 points
+    _check_segmented(vals, ts, np.array([0, 1, 3, 4, 7]))
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.data())
+def test_segmented_encoders_match_per_chunk_property(data):
+    n = data.draw(st.integers(1, 80))
+    vals = np.array(data.draw(st.lists(
+        st.one_of(st.sampled_from(_SPECIALS), st.floats(width=64),
+                  st.integers(-4, 4).map(float)),
+        min_size=n, max_size=n)), dtype=np.float64)
+    steps = data.draw(st.lists(
+        st.one_of(st.just(3_600_000_000), st.integers(-3000, 3000),
+                  st.integers(-(2**40), 2**40)),
+        min_size=n, max_size=n))
+    ts = 1_704_067_200_000_000 + np.cumsum(steps).astype(np.int64)
+    cuts = data.draw(st.sets(st.integers(1, n - 1))) if n > 1 else set()
+    _check_segmented(vals, ts, np.array([0, *sorted(cuts)], dtype=np.int64))
+
+
+@pytest.mark.parametrize("codec", ["gorilla", "chimp"])
+def test_compress_chunks_blobs_match_per_chunk_encoders(spark, codec):
+    """Through Spark: a NULL-key series and series that span Arrow batches
+    (maxRecordsPerBatch 7) get, per chunk, the bytes of encoding that chunk
+    on its own."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from anofox_forecast_spark.compression.chimp import encode_values_chimp
+    from anofox_forecast_spark.compression.gorilla import encode_values_packed
+
+    t0 = dt.datetime(2024, 1, 1)
+    minutes = [0, 20, 40, 61, 62, 63, 130, 131, 200, 260, 261, 262, 600, 601]
+    rows = [(sid, t0 + dt.timedelta(minutes=m, microseconds=i % 3),
+             _SPECIALS[i % len(_SPECIALS)] if i % 4 == 0 else i * 0.5 - 3.0)
+            for sid in (None, "a", "b") for i, m in enumerate(minutes)]
+    df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        chunks = compress_chunks(df, ["sid"], "ts", "y", chunk_freq="1h", codec=codec)
+        got = chunks.withColumn("start_us", F.unix_micros("chunk_start")).collect()
+    finally:
+        spark.conf.set(key, old)
+    points = df.select("sid", F.unix_micros("ts").alias("us"), "y").collect()
+    encode = encode_values_chimp if codec == "chimp" else encode_values_packed
+    hour = 3_600_000_000
+    assert sum(r.n_points for r in got) == len(rows)
+    assert any(r.sid is None for r in got) and any(r.n_points == 1 for r in got)
+    for r in got:
+        mine = sorted((p.us, p.y) for p in points
+                      if p.sid == r.sid and p.us // hour * hour == r.start_us)
+        ts = np.array([u for u, _ in mine], dtype=np.int64)
+        vals = np.array([y for _, y in mine], dtype=np.float64)
+        assert r.n_points == ts.size
+        assert bytes(r.ts_blob)[5:] == encode_timestamps(ts)
+        assert bytes(r.val_blob)[5:] == encode(vals)[0]

@@ -79,3 +79,22 @@ def test_forecast_keeps_null_key_series(spark):
     assert len(out) == 2 * 3
     null_rows = out[out.sid.isna()]
     assert len(null_rows) == 3 and (null_rows["yhat"] == 19.0).all()
+
+
+def test_series_starts_are_null_safe_across_key_columns():
+    """A series starts wherever any key column changes; two NULL/NaN keys
+    are equal, a NULL and a value are not."""
+    import pandas as pd
+
+    from anofox_forecast_spark.models.harness import _series_starts, each_series
+
+    body = pd.DataFrame({
+        "lang": [None, None, None, "en", "en", "en", "fr"],
+        "n": [np.nan, np.nan, 1.0, 1.0, 1.0, np.nan, np.nan],
+        "y": np.arange(7.0),
+    })
+    starts = _series_starts(body, ["lang", "n"])
+    assert starts.tolist() == [0, 2, 3, 5, 6]
+    seen = []
+    each_series(lambda g, out: seen.append(g["y"].tolist()))(body, starts, {})
+    assert seen == [[0.0, 1.0], [2.0], [3.0, 4.0], [5.0], [6.0]]

@@ -124,3 +124,85 @@ def test_driver_keeps_stdlib_invalidate_caches(spark):
 
     spark.range(4).mapInPandas(lambda it: it, "id long").collect()
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+#: webtext closures that reference only numpy, pandas or the standard
+#: library; each is marked with ``_worker.hooked``
+HOOKED_CLOSURES = {
+    "repetition_stats.<locals>.rep_udf",
+    "fingerprint.<locals>.fp",
+    "_chunk_key_udf.<locals>.key_udf",
+    "exact_dedup_incremental.<locals>._partial_blooms",
+    "exact_dedup_incremental.<locals>.might_contain",
+    "minhash_signatures.<locals>.sig_udf",
+    "simhash_signatures.<locals>.bitvote",
+    "normalize_text.<locals>._norm",
+    "pack_greedy.<locals>._pack",
+    "_probe_topk.<locals>.score",
+}
+
+
+def test_webtext_closures_import_the_package_when_unpickled(spark, tmp_path, monkeypatch):
+    """Capture the command each webtext operator ships to workers, unpickle
+    it in a fresh interpreter and check that the package got imported
+    there, so a worker that runs only these closures installs the hook."""
+    import os
+    import subprocess
+    import sys
+
+    import pyspark.core.rdd as rdd
+    from pyspark.serializers import CloudPickleSerializer
+
+    import anofox_forecast_spark
+    from anofox_forecast_spark.webtext.clean import normalize_text
+    from anofox_forecast_spark.webtext.dedup import (
+        exact_dedup_incremental,
+        line_dedup,
+        minhash_signatures,
+        simhash_signatures,
+    )
+    from anofox_forecast_spark.webtext.pipeline import pack_greedy
+    from anofox_forecast_spark.webtext.similarity import lsh_cosine_topk
+    from anofox_forecast_spark.webtext.text_stats import fingerprint, repetition_stats
+
+    shipped = {}
+    prepare = rdd._prepare_for_python_RDD
+
+    def capture(sc, command):
+        func = command[0] if isinstance(command, tuple) else command
+        shipped.setdefault(getattr(func, "__qualname__", None), command)
+        return prepare(sc, command)
+
+    monkeypatch.setattr(rdd, "_prepare_for_python_RDD", capture)
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat. the cat sat."), (2, "a dog ran far away")],
+        "id long, text string")
+    repetition_stats(docs, "id", "text")
+    fingerprint(docs, "id", "text")
+    line_dedup(docs, "id", "text")
+    exact_dedup_incremental(docs, docs, "id", "text", bloom_bits=1 << 10)
+    minhash_signatures(docs, "id", "text")
+    simhash_signatures(docs, "id", "text")
+    normalize_text(docs, "id", "text")
+    pack_greedy(docs.selectExpr("id", "'d' AS domain", "length(text) AS n"),
+                "id", "domain", "n", budget=16)
+    vecs = spark.createDataFrame(
+        [(i, [float(i), 1.0, -1.0, 0.5]) for i in range(4)], "vec_id long, embedding array<double>")
+    lsh_cosine_topk(vecs, vecs, dim=4, n_tables=2, n_planes=2)
+
+    assert HOOKED_CLOSURES <= shipped.keys(), sorted(HOOKED_CLOSURES - shipped.keys())
+    env = dict(os.environ,
+               PYTHONPATH=os.path.dirname(os.path.dirname(anofox_forecast_spark.__file__)))
+    check = ("import pickle, sys\n"
+             "pickle.loads(open(sys.argv[1], 'rb').read())\n"
+             "print('anofox_forecast_spark' in sys.modules)\n")
+    ser = CloudPickleSerializer()
+    imported = {}
+    for i, name in enumerate(sorted(HOOKED_CLOSURES)):
+        path = tmp_path / f"command{i}.pkl"
+        path.write_bytes(ser.dumps(shipped[name]))
+        out = subprocess.run([sys.executable, "-c", check, str(path)], cwd=tmp_path,
+                             env=env, capture_output=True, text=True, check=True)
+        imported[name] = out.stdout.strip()
+    assert imported == {name: "True" for name in HOOKED_CLOSURES}
