@@ -14,6 +14,8 @@ depends on these specific approximations (SURVEY §2.13):
   denominator n·var (ref src/models/theta/model.rs:490-521).
 - ``ols_fit``: normal-equations least squares for exog detrending
   (ref src/utils/ols.rs:94-130).
+- ``level_fold``: the sequential SES/EWM level recursion shared by theta's
+  in-sample fit, ``ewm_mean_np`` and the streaming SES state.
 
 Z95_EXACT is statrs' exact Φ⁻¹(0.95) used by the Theta seasonal test
 (ref src/models/theta/model.rs:543-548) — that one is NOT the A&S approx.
@@ -186,6 +188,22 @@ def ols_fit(y: np.ndarray, x: np.ndarray) -> np.ndarray:
 def ols_residuals(y: np.ndarray, coef: np.ndarray, x: np.ndarray) -> np.ndarray:
     design = np.column_stack([np.ones(y.size), x])
     return y - design @ coef
+
+
+def level_fold(y: np.ndarray, alpha: float, init: float | None = None) -> np.ndarray:
+    """SES/EWM levels ``l_i = α·y_i + (1−α)·l_{i−1}``, one per point, folded
+    in order (ref window.rs:227-244). ``l_0 = y_0``, or the first step from
+    ``init`` when a prior level is carried in."""
+    ys = y.tolist()
+    if not ys:
+        return np.empty(0)
+    b = 1.0 - alpha
+    lvl = ys[0] if init is None else alpha * ys[0] + b * init
+    out = [lvl]
+    for v in ys[1:]:
+        lvl = alpha * v + b * lvl
+        out.append(lvl)
+    return np.array(out, dtype=np.float64)
 
 
 def mean_sq(residuals: np.ndarray) -> float:

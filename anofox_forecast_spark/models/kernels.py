@@ -23,6 +23,7 @@ import numpy as np
 from anofox_forecast_spark.models._numerics import (
     Z95_EXACT,
     acf,
+    level_fold,
     mean_sq,
     nelder_mead,
     z_for_level,
@@ -527,23 +528,17 @@ def theta(
 
     a = _optimize_ses_alpha(des) if (optimize_alpha or alpha is None) else float(alpha)
 
-    lvl = des[0]
+    levels = level_fold(des, a)
+    lvl = levels[-1]
     drift = (
         (1.0 - 1.0 / theta_param) * b / a if drift_in_fitted else 0.0
     )
-    fitted = np.empty(n)
-    resid = np.zeros(n)
+    # one-step-ahead: point i is fitted from the level after point i-1
+    fitted = np.concatenate([des[:1], levels[:-1] + drift])
     if full_seasonal.size:
-        fitted[0] = des[0] * full_seasonal[0] if multiplicative else des[0] + full_seasonal[0]
-    else:
-        fitted[0] = des[0]
-    for i in range(1, n):
-        f = lvl + drift
-        if full_seasonal.size:
-            f = f * full_seasonal[i] if multiplicative else f + full_seasonal[i]
-        fitted[i] = f
-        resid[i] = y[i] - f
-        lvl = a * des[i] + (1.0 - a) * lvl
+        fitted = fitted * full_seasonal if multiplicative else fitted + full_seasonal
+    resid = np.zeros(n)
+    resid[1:] = y[1:] - fitted[1:]
     variance = mean_sq(resid[1:]) if n > 1 else 0.0
 
     hs = np.arange(1, h + 1, dtype=np.float64)

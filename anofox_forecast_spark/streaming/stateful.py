@@ -34,14 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-
-def ses_level_np(y: np.ndarray, alpha: float, init: float | None = None) -> float:
-    """Fold the SES recursion over y; ``init`` carries prior state."""
-    lvl = float(y[0]) if init is None else float(init)
-    start = 1 if init is None else 0
-    for v in y[start:]:
-        lvl = alpha * float(v) + (1.0 - alpha) * lvl
-    return lvl
+from anofox_forecast_spark.models._numerics import level_fold
 
 
 def streaming_ses_level(
@@ -82,7 +75,8 @@ def streaming_ses_level(
             y = y[~np.isnan(y)]
             if y.size == 0:
                 continue
-            level = ses_level_np(y, alpha, init=level)
+            # the SES fold, carrying the prior batches' level in
+            level = float(level_fold(y, alpha, init=level)[-1])
             n += int(y.size)
         if n:
             state.update((float(level), int(n)))

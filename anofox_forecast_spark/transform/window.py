@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from anofox_forecast_spark.models._numerics import level_fold
+
 _AGGS = {
     "mean": F.avg,
     "sum": F.sum,
@@ -112,13 +114,8 @@ def ewm_mean(
 
 
 def ewm_mean_np(y: np.ndarray, alpha: float) -> np.ndarray:
-    """Reference EWM recursion e0=y0 (ref window.rs:227-244)."""
-    e = np.empty(y.size)
-    if y.size:
-        e[0] = y[0]
-        for i in range(1, y.size):
-            e[i] = alpha * y[i] + (1.0 - alpha) * e[i - 1]
-    return e
+    """Reference EWM recursion e0=y0 (ref window.rs:227-244): the SES level fold."""
+    return level_fold(y, alpha)
 
 
 def ewm_var_np(y: np.ndarray, alpha: float) -> np.ndarray:

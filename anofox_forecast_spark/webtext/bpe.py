@@ -34,11 +34,6 @@ from anofox_forecast_spark.webtext.text_stats import _tokens
 END = "</w>"  # end-of-word marker (Sennrich 2016 convention)
 
 
-def _words_col(text_col: str):
-    # the engine's one word tokenizer (shingles, term stats, line dedup)
-    return F.array_remove(_tokens(F.col(text_col)), "")
-
-
 def word_frequencies(
     df: DataFrame, text_col: str, max_words: int = 100_000
 ) -> DataFrame:
@@ -46,7 +41,7 @@ def word_frequencies(
     (word, freq) rows ordered by (-freq, word). The ONLY distributed pass
     BPE training needs; map-side combine absorbs hot words before the
     single shuffle."""
-    w = _words_col(text_col)
+    w = _tokens(F.col(text_col))
     return (
         df.select(F.explode(w).alias("word"))
         .groupBy("word")
@@ -181,10 +176,11 @@ def bpe_tokenize(
 
         return words.map(enc_doc)
 
-    toks = encode(_words_col(text_col))
+    words = _tokens(F.col(text_col))
+    toks = encode(words)
     out = df.select(
         F.col(id_col).alias("id"),
-        F.size(_words_col(text_col)).cast("int").alias("n_words"),
+        F.size(words).cast("int").alias("n_words"),
         toks.alias("tokens"),
     )
     return out.select(

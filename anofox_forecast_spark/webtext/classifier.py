@@ -56,7 +56,7 @@ def hashed_features(
     keys by the token string itself (the oracle-able path — DuckDB has
     no xxhash64). One explode + one hash aggregate; map-side combine
     collapses repeated tokens before the shuffle."""
-    toks = F.array_remove(_tokens(F.col(text_col)), "")
+    toks = _tokens(F.col(text_col))
     ex = df.select(F.col(id_col).alias("id"), F.explode(toks).alias("__w"))
     if hashed:
         key = F.pmod(F.xxhash64(F.col("__w")), F.lit(int(n_buckets))).alias("bucket")
@@ -240,7 +240,7 @@ def score_logreg(
     # bucket (guaranteed join miss, zero weight) so empty docs still reach
     # the aggregate with a bias-only margin — joining the base table back
     # would cost a second full-corpus shuffle just to restore them.
-    toks = F.array_remove(_tokens(F.col(text_col)), "")
+    toks = _tokens(F.col(text_col))
     ex = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.concat(toks, F.array(F.lit("")))).alias("__w"),
@@ -282,7 +282,7 @@ def score_formula_weights(
     and DuckDB; range ±1 unit). Exercises the exact explode → weight →
     groupBy(id) → sigmoid scoring plan with zero Python and no
     driver-held weight table — the margin is fully checkable in SQL."""
-    toks = F.array_remove(_tokens(F.col(text_col)), "")
+    toks = _tokens(F.col(text_col))
     # sentinel "" appended per doc (weight 0) keeps empty docs in the
     # single groupBy — same no-join shape as score_logreg
     ex = df.select(

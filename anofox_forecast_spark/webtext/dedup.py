@@ -28,18 +28,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from anofox_forecast_spark._worker import hooked
-from anofox_forecast_spark.webtext.text_stats import _tokens
-
-
-def shingles(text_col: str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as an array column (pure SQL)."""
-    w = _tokens(F.col(text_col))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(w, i + 1, n)),
-        )
-    )
+from anofox_forecast_spark.webtext.text_stats import (
+    _combo_coefs, _flatten, _rows, _tokens, _window_combos, grams,
+)
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -167,9 +158,11 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard over candidate pairs sharing a (non-hot)
     shingle. Output: (id_a, id_b, jaccard) with id_a < id_b,
     jaccard ≥ threshold."""
+    # the Jaccard counts DISTINCT shingles
     sh = df.select(
-        F.col(id_col).alias("id"), F.explode(shingles(text_col, n)).alias("sh")
-    ).filter(F.col("sh") != "")
+        F.col(id_col).alias("id"),
+        F.explode(F.array_distinct(grams(_tokens(F.col(text_col)), n))).alias("sh"),
+    )
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     freq = sh.groupBy("sh").agg(F.count("*").alias("df"))
     # Candidate GENERATION only uses rare shingles (df-cap bounds the join
@@ -206,51 +199,25 @@ def ngram_jaccard_pairs(
     return out
 
 
-def chunk_lines(
-    df: DataFrame, id_col: str, text_col: str, tokens_per_line: int = 12
-) -> Column:
-    """Array of fixed-width token 'lines' (non-overlapping chunks of
-    ``tokens_per_line`` word tokens, same ``text_stats._tokens`` tokenizer as
-    shingles). The unit for corpus-level span dedup on corpora whose
-    documents carry no natural line structure; pass real lines via
-    ``split(text, '\\n')`` instead when they exist."""
-    w = F.array_remove(_tokens(F.col(text_col)), "")
-    L = tokens_per_line
-    n_chunks = F.greatest(F.ceil(F.size(w) / L).cast("int"), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.concat_ws(" ", F.slice(w, i * L + 1, L)),
-    )
-
-
 def _chunk_key_udf(L: int, seed: int = 23):
     """array<long> of one positional-combination hash per non-overlapping
-    ``L``-word chunk of a doc's word-hash array — the minhash-signature
-    combo design (odd random coefficients, mod-2^64 numpy arithmetic) at
-    stride L instead of stride 1. Key equality ⟺ chunk word-sequence
-    equality up to 2^-64-per-pair collisions (words carry no spaces, so
-    the word sequence determines the joined line string bijectively)."""
+    ``L``-word chunk of a doc's word-hash array — the window combo of
+    ``text_stats._window_combos`` (same odd coefficients, mod-2^64 numpy
+    arithmetic) at stride L instead of stride 1. Key equality ⟺ chunk
+    word-sequence equality up to 2^-64-per-pair collisions (words carry no
+    spaces, so the word sequence determines the joined line string
+    bijectively)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
-    rng = np.random.default_rng(seed)
-    coefs = (rng.integers(0, 1 << 62, L, dtype=np.uint64)
-             << np.uint64(1)) | np.uint64(1)
+    coefs = _combo_coefs(seed, L)
 
     @pandas_udf(ArrayType(LongType()))
     @hooked
     def key_udf(hs: pd.Series) -> pd.Series:
-        ndocs = len(hs)
-        lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
-        nonempty = lengths > 0
-        if not nonempty.any():
-            return pd.Series([[] for _ in range(ndocs)])
-        W = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in hs if len(x)]
-        ).view(np.uint64)
-        ne_len = lengths[nonempty]
-        starts = np.zeros(ne_len.size, dtype=np.int64)
-        np.cumsum(ne_len[:-1], out=starts[1:])
+        W, nonempty, ne_len, starts = _flatten(hs)
+        if not ne_len.size:
+            return _rows(nonempty, [])
         # coefficient index = position within the doc mod L — one
         # batch-wide multiply, then per-chunk sums via reduceat at every
         # chunk start (doc_start + i*L), all wraparound uint64
@@ -263,13 +230,7 @@ def _chunk_key_udf(L: int, seed: int = 23):
                      - np.repeat(starts2, n_chunks))
         bounds = np.repeat(starts, n_chunks) + chunk_pos * L
         sums = np.add.reduceat(prod, bounds).view(np.int64)
-        res: list = [[]] * ndocs
-        k = 0
-        for dj in np.flatnonzero(nonempty):
-            c = int(n_chunks[k])
-            res[dj] = sums[starts2[k]: starts2[k] + c].tolist()
-            k += 1
-        return pd.Series(res)
+        return _rows(nonempty, (k.tolist() for k in np.split(sums, starts2[1:])))
 
     return key_udf
 
@@ -322,7 +283,7 @@ def line_dedup(
     """
     if lines_col is None:
         L = int(tokens_per_line)
-        w = F.array_remove(_tokens(F.col(text_col)), "")
+        w = _tokens(F.col(text_col))
         key_udf = _chunk_key_udf(L)
         wh = F.transform(w, lambda x: F.xxhash64(x))
         # empty-doc filter BEFORE the UDF (projection-collapse trap —
@@ -406,7 +367,7 @@ def _minhash_perms(n_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     permutation of the hash space and the min-hash estimator stays the
     textbook one-permutation-per-component estimator)."""
     rng = np.random.default_rng(seed)
-    a = (rng.integers(0, 1 << 62, n_hashes, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
+    a = _combo_coefs(rng, n_hashes)
     b = rng.integers(0, 1 << 63, n_hashes, dtype=np.uint64)
     return a, b
 
@@ -435,83 +396,44 @@ def minhash_signatures(
       JVM-side (``sequence``+``slice``+``concat_ws``+``array_distinct``)
       — string construction, not hashing, was the bottleneck.
     * Final design: never materialize shingle strings. JVM side hashes
-      WORDS from the same punctuation-stripping ``text_stats._tokens`` tokenizer as
-      ``shingles()`` (lowercase, non-alphanumerics → space, split on
-      space runs — NOT a bare whitespace split; simhash/fingerprint use
-      the bare split) — one cheap codegen pass of per-word ``xxhash64``;
-      the Arrow-batched UDF forms each word-n-gram's hash
-      as a positional linear combination of its n word hashes
-      ``Σ_j c_j·w_{i+j} (mod 2^64)`` (odd random c_j — injective whp,
-      order-sensitive like the string n-gram), then derives the k minima
-      via k affine permutations ``(a_i·s + b_i) mod 2^64`` (odd a_i ⇒
-      true permutations of u64). All numpy wraparound arithmetic over the
+      WORDS of the engine's word array ``text_stats._tokens`` (lowercase,
+      non-alphanumerics → space, split on space runs — NOT a bare
+      whitespace split; simhash/fingerprint use the bare split) — one
+      cheap codegen pass of per-word ``xxhash64``; the Arrow-batched UDF
+      forms each word-n-gram's hash with the one word-hash core,
+      ``text_stats._window_combos`` (``Σ_j c_j·w_{i+j} (mod 2^64)``, odd
+      random c_j drawn from ``seed + 1``), then derives the k minima via
+      k affine permutations ``(a_i·s + b_i) mod 2^64`` (odd a_i ⇒ true
+      permutations of u64). All numpy wraparound arithmetic over the
       flattened batch; ZERO shuffles. Estimator quality is property-gated
       (tests/test_webtext.py::test_minhash_estimator_unbiased).
 
-    Short docs (< n words) contribute one partial shingle (combo of the
-    available words) — same contract as the old string shingler. Docs
-    with no non-empty words produce no signature row.
+    Shingles sit at the windows of ``text_stats.grams``: short docs
+    (< n words) contribute one partial shingle (combo of the available
+    words). Docs with no word produce no signature row.
     """
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
     a_perm, b_perm = _minhash_perms(n_hashes, seed)
-    rng = np.random.default_rng(seed + 1)
-    coefs = (rng.integers(0, 1 << 62, shingle_n, dtype=np.uint64)
-             << np.uint64(1)) | np.uint64(1)
-    n = shingle_n
-    umax = np.uint64(0xFFFFFFFFFFFFFFFF)
+    coefs = _combo_coefs(seed + 1, shingle_n)
 
     @pandas_udf(ArrayType(LongType()))
     @hooked
     def sig_udf(hs: pd.Series) -> pd.Series:
-        ndocs = len(hs)
-        lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
-        nonempty = lengths > 0
-        if not nonempty.any():
-            return pd.Series([[] for _ in range(ndocs)])
-        W = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in hs if len(x)]
-        ).view(np.uint64)
-        T = W.size
-        ne_len = lengths[nonempty]
-        starts = np.zeros(ne_len.size, dtype=np.int64)
-        np.cumsum(ne_len[:-1], out=starts[1:])
-        # shingle hash s[i] = Σ_j coefs[j]*W[i+j] over the zero-padded flat
-        # array; positions whose window crosses a doc boundary are invalid
-        Wp = np.concatenate([W, np.zeros(n - 1, dtype=np.uint64)])
-        s = np.zeros(T, dtype=np.uint64)
-        for j in range(n):
-            s += coefs[j] * Wp[j : j + T]
-        counts = np.maximum(ne_len - n + 1, 1)  # short docs: 1 partial shingle
-        # short docs (< n words): the full-window combo would bleed into the
-        # next doc — recompute their single partial combo over only their words
-        short = np.flatnonzero(ne_len < n)
-        if short.size:
-            sstart, slen = starts[short], ne_len[short]
-            acc = np.zeros(short.size, dtype=np.uint64)
-            for j in range(n):
-                m = j < slen
-                acc[m] += coefs[j] * W[(sstart + j)[m].clip(max=T - 1)]
-            s[sstart] = acc
-        # compress to valid shingle positions: doc d owns [starts[d],
-        # starts[d]+counts[d]) in s — then reduceat boundaries are clean
-        pos_within = np.arange(T, dtype=np.int64) - np.repeat(starts, ne_len)
-        valid = pos_within < np.repeat(counts, ne_len)
-        sv = s[valid]
+        W, nonempty, ne_len, starts = _flatten(hs)
+        if not ne_len.size:
+            return _rows(nonempty, [])
+        sv, counts = _window_combos(W, starts, ne_len, coefs)
         starts2 = np.zeros(counts.size, dtype=np.int64)
         np.cumsum(counts[:-1], out=starts2[1:])
         mins = np.empty((n_hashes, counts.size), dtype=np.uint64)
         for i in range(n_hashes):
             p = a_perm[i] * sv + b_perm[i]
             mins[i] = np.minimum.reduceat(p, starts2)
-        out = mins.view(np.int64).T
-        res: list = [[]] * ndocs
-        for j, dj in enumerate(np.flatnonzero(nonempty)):
-            res[dj] = out[j]
-        return pd.Series(res)
+        return _rows(nonempty, mins.view(np.int64).T)
 
-    words = F.array_remove(_tokens(F.col(text_col)), "")
+    words = _tokens(F.col(text_col))
     wh_col = F.transform(words, lambda w: F.xxhash64(w))
     # empty-doc filter on the cheap JVM word array, BEFORE the UDF: a
     # post-filter on size(sig) gets inlined by projection collapse and the
@@ -707,18 +629,10 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     @pandas_udf(LongType())
     @hooked
     def bitvote(hs: pd.Series) -> pd.Series:
-        n = len(hs)
-        lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=n)
-        out = np.zeros(n, dtype=np.int64)
-        nonempty = lengths > 0
-        if not nonempty.any():
+        out = np.zeros(len(hs), dtype=np.int64)
+        flat, nonempty, ne_len, starts = _flatten(hs)
+        if not ne_len.size:
             return pd.Series(out)
-        flat = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in hs if len(x)]
-        ).view(np.uint64)
-        ne_len = lengths[nonempty]
-        starts = np.zeros(ne_len.size, dtype=np.int64)
-        np.cumsum(ne_len[:-1], out=starts[1:])
         # per-bit loop keeps temporaries at T elements (the one-shot T×64
         # vote matrix thrashed memory bandwidth: ~600 MB/batch, measured
         # slower than 64 small reduceat passes)
@@ -1273,30 +1187,20 @@ def substring_dedup(
     L = int(min_tokens)
     if L < 2:
         raise ValueError("min_tokens must be >= 2")
-    w = F.array_remove(_tokens(F.col(text_col)), "")
+    w = _tokens(F.col(text_col))
     docs = df.select(F.col(id_col).alias("id"), w.alias("__w"))
-    if hashed:
-        from .pipeline import _hashed_shingles  # lazy: keep modules acyclic
-
-        gram_arr = _hashed_shingles(text_col, L)
-        empty = F.array().cast("array<bigint>")
-    else:
-        gram_arr = F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(w) - (L - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(w, i, L)),
-        )
-        empty = F.array().cast("array<string>")
     # strict windows only: docs shorter than L contribute nothing (a
     # partial window is a span < L and must never be cut)
-    gram_arr = F.when(F.size(w) >= L, gram_arr).otherwise(empty)
-    grams = df.select(
+    empty = F.array().cast("array<bigint>" if hashed else "array<string>")
+    gram_arr = F.when(F.size(w) >= L, grams(w, L, hashed)).otherwise(empty)
+    occ = df.select(
         F.col(id_col).alias("id"), F.posexplode(gram_arr).alias("pos", "__g")
     )
-    first = grams.groupBy("__g").agg(
+    first = occ.groupBy("__g").agg(
         F.min(F.struct("id", "pos")).alias("k"), F.count("*").alias("c")
     )
     spans = (
-        grams.join(first, "__g")
+        occ.join(first, "__g")
         .filter(
             (F.col("c") > 1)
             & ~((F.col("k.id") == F.col("id")) & (F.col("k.pos") == F.col("pos")))

@@ -30,13 +30,23 @@ from .text_stats import _tokens
 _U6 = 1_000_000.0  # micro-nat quantum shared with the DuckDB twins
 
 
-def _tok_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, __toks) with the shared punctuation-stripping tokenizer;
-    empty strings removed, empty docs kept (empty array)."""
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.array_remove(_tokens(F.col(text_col)), "").alias("__toks"),
-    )
+def _tok_frame(
+    df: DataFrame, id_col: str, text_col: str, hashed: bool = False
+) -> DataFrame:
+    """(id, __toks): the engine's word array, empty docs kept (empty array).
+
+    ``hashed=True`` (the scale path) hashes each word once (xxhash64, no
+    gram string is ever built) and materializes the compact long arrays
+    lazily (``localCheckpoint(eager=False)``): the frame feeds several
+    gram branches, and unmaterialized, Spark re-tokenizes the corpus once
+    per branch. The exact-string frame is NOT checkpointed: storing string
+    token arrays costs more than re-tokenizing, and exact mode is the
+    small-scale oracle path."""
+    toks = _tokens(F.col(text_col))
+    if hashed:
+        toks = F.transform(toks, lambda t: F.xxhash64(t))
+    frame = df.select(F.col(id_col).alias("id"), toks.alias("__toks"))
+    return frame.localCheckpoint(eager=False) if hashed else frame
 
 
 def _bigrams(toks: Column) -> Column:
@@ -84,30 +94,11 @@ def lm_perplexity(
     identical up to hash collisions (two colliding terms share one LM
     slot); exact-string mode is the DuckDB-oracled path.
     """
-    score = _tok_frame(df, id_col, text_col)
-    train = score if train_df is None else _tok_frame(train_df, id_col, text_col)
-    if hashed:
-        def _h(frame: DataFrame) -> DataFrame:
-            return frame.withColumn(
-                "__toks", F.transform("__toks", lambda t: F.xxhash64(t))
-            )
-
-        hashed_score = _h(score)
-        train = hashed_score if train is score else _h(train)
-        score = hashed_score
+    # the tokenized frame feeds five branches (train uni/bi streams,
+    # first-token stream, scoring bigram stream, final n_tokens select)
+    score = _tok_frame(df, id_col, text_col, hashed)
+    train = score if train_df is None else _tok_frame(train_df, id_col, text_col, hashed)
     unk = F.lit(-1).cast("long") if hashed else F.lit("<unk>")
-    if hashed:
-        # the tokenized frame feeds five branches (train uni/bi streams,
-        # first-token stream, scoring bigram stream, final n_tokens
-        # select); unmaterialized, Spark re-tokenizes the corpus once
-        # per branch. The hashed frame is compact long arrays — cheap to
-        # materialize via lazy localCheckpoint (prepare_corpus trap fix).
-        # The exact-string frame is NOT checkpointed: storing string
-        # token arrays costs more than re-tokenizing, and exact mode is
-        # the small-scale oracle path.
-        shared = train is score
-        score = score.localCheckpoint(eager=False)
-        train = score if shared else train.localCheckpoint(eager=False)
 
     t_uni = train.select(F.explode("__toks").alias("term"))
     if vocab_size is not None:
@@ -268,48 +259,29 @@ def dsir_log_weights(
     per-doc sum. No collects; the raw corpus text never shuffles —
     only (id, gram) pairs move.
     """
-    raw = _tok_frame(df, id_col, text_col)
-    tgt = _tok_frame(target_df, id_col, text_col)
-    if hash_buckets is not None:
-        # scale path: hash tokens once (no gram strings are ever built),
-        # then materialize the compact long arrays lazily — the frames
-        # feed multiple gram branches (uni+bi explodes, count + scoring
-        # passes) and would otherwise re-tokenize the corpus per branch.
-        # Exact mode is the small-scale oracle path and skips both.
-        def _h(frame: DataFrame) -> DataFrame:
-            return frame.withColumn(
-                "__toks", F.transform("__toks", lambda t: F.xxhash64(t))
-            ).localCheckpoint(eager=False)
+    hashed = hash_buckets is not None
+    raw = _tok_frame(df, id_col, text_col, hashed)
+    tgt = _tok_frame(target_df, id_col, text_col, hashed)
 
-        raw, tgt = _h(raw), _h(tgt)
+    def uni_bi_grams(frame: DataFrame) -> DataFrame:
+        # uni+bi grams ride ONE concat array through ONE explode (r6): a
+        # two-branch union scanned the token frame twice per reference —
+        # interleaved A/B at 200k docs measured 11.5 s → 9.4 s for the
+        # hashed operator; the gram MULTISET is identical (aggregate
+        # order-free). Hashed mode folds token hashes into bigram hashes
+        # JVM-side, then pmods into the bounded bucket space, so explodes
+        # and joins carry longs.
+        th = F.col("__toks")
+        n = F.greatest(F.size(th) - 1, F.lit(0))
+        pair = (lambda a, x: F.xxhash64(a, x)) if hashed else (
+            lambda a, x: F.concat_ws(" ", a, x))
+        bi = F.zip_with(F.slice(th, 1, n), F.slice(th, 2, n), pair)
+        g = frame.select("id", F.explode(F.concat(th, bi)).alias("g"))
+        if hashed:
+            g = g.select("id", F.pmod("g", F.lit(int(hash_buckets))).alias("g"))
+        return g
 
-    def grams(frame: DataFrame) -> DataFrame:
-        if hash_buckets is not None:
-            # token hashes fold into bigram hashes JVM-side, then pmod
-            # into the bounded bucket space; explodes and joins carry
-            # longs. Uni+bi grams ride ONE concat array through ONE
-            # explode (r6): the two-branch union scanned the
-            # checkpointed token frame twice per grams() reference —
-            # interleaved A/B at 200k docs measured 11.5 s → 9.4 s for
-            # the whole operator; the gram MULTISET is identical
-            # (aggregate order-free), so output is unchanged.
-            b = F.lit(int(hash_buckets))
-            th = F.col("__toks")
-            n = F.greatest(F.size(th) - 1, F.lit(0))
-            bh = F.zip_with(
-                F.slice(th, 1, n), F.slice(th, 2, n),
-                lambda a, x: F.xxhash64(a, x),
-            )
-            return frame.select(
-                "id", F.explode(F.concat(th, bh)).alias("h")
-            ).select("id", F.pmod(F.col("h"), b).alias("g"))
-        uni = frame.select("id", F.explode("__toks").alias("g"))
-        bi = frame.select(
-            "id", F.explode(_bigrams(F.col("__toks"))).alias("p")
-        ).select("id", F.concat_ws(" ", "p.v", "p.w").alias("g"))
-        return uni.unionByName(bi)
-
-    g_raw, g_tgt = grams(raw), grams(tgt)
+    g_raw, g_tgt = uni_bi_grams(raw), uni_bi_grams(tgt)
     c_raw = g_raw.groupBy("g").agg(F.count("*").alias("__cr"))
     c_tgt = g_tgt.groupBy("g").agg(F.count("*").alias("__ct"))
     # SHUFFLE_HASH: the two count tables are hash-partitioned by g
@@ -337,7 +309,7 @@ def dsir_log_weights(
             * _U6
         ).cast("long").alias("__d6"),
     )
-    if hash_buckets is not None:
+    if hashed:
         # hashed mode bounds the model at hash_buckets rows — broadcast
         # it explicitly (the size ESTIMATE after full_outer+crossJoin is
         # far above the auto threshold, so AQE plans a sort-merge join

@@ -30,91 +30,10 @@ from pyspark.sql import DataFrame, functions as F, Window
 
 from anofox_forecast_spark._worker import hooked
 
-from .text_stats import _tokens, quality_scores, repetition_stats
+from .text_stats import _tokens, grams, quality_scores, repetition_stats
 
 # ---------------------------------------------------------------------------
 # benchmark decontamination (n-gram overlap against an eval set)
-
-
-def _shingles(text_col, n: int):
-    """Word n-gram strings from the punctuation-stripping tokenizer —
-    identical contract to ngram_jaccard_pairs (webtext/dedup.py): docs
-    shorter than n contribute ONE partial shingle; empty docs none."""
-    w = F.array_remove(_tokens(F.col(text_col)), "")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(1)))
-    return F.filter(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, n))),
-        lambda s: s != "",
-    )
-
-
-def _hashed_shingles(text_col, n: int, seed: int = 11):
-    """int64 word-n-gram keys built WITHOUT constructing gram strings —
-    the minhash-signature design (webtext/dedup.py minhash_signatures)
-    reused for join keys: the JVM hashes each word once (one codegen
-    pass of per-token ``xxhash64``), then ONE Arrow-batched numpy pass
-    forms each n-gram key as a positional linear combination of its n
-    word hashes ``Σ_j c_j·w_{i+j} (mod 2^64)`` (odd random c_j —
-    injective whp, order-sensitive like a string n-gram) over the
-    flattened batch. No sequence/slice/concat_ws string builds (the
-    measured 21 s / 200k-doc cost the minhash rewrite eliminated), and
-    joins downstream carry 8-byte keys instead of ~50-byte strings.
-
-    A pure-JVM fold was tried first and abandoned: chaining n-1
-    ``zip_with`` passes re-references the running array per step, so
-    the expression tree (and codegen) grows geometrically — n=8 hangs.
-
-    Same shingle positions as :func:`_shingles`: docs shorter than n
-    contribute ONE partial shingle (combo of the words they have),
-    empty docs an empty array.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    rng = np.random.default_rng(seed)
-    coefs = (rng.integers(0, 1 << 62, n, dtype=np.uint64)
-             << np.uint64(1)) | np.uint64(1)
-
-    @pandas_udf(ArrayType(LongType()))
-    def gram_udf(hs: pd.Series) -> pd.Series:
-        ndocs = len(hs)
-        lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
-        nonempty = lengths > 0
-        if not nonempty.any():
-            return pd.Series([[] for _ in range(ndocs)])
-        W = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in hs if len(x)]
-        ).view(np.uint64)
-        T = W.size
-        ne_len = lengths[nonempty]
-        starts = np.zeros(ne_len.size, dtype=np.int64)
-        np.cumsum(ne_len[:-1], out=starts[1:])
-        Wp = np.concatenate([W, np.zeros(n - 1, dtype=np.uint64)])
-        s = np.zeros(T, dtype=np.uint64)
-        for j in range(n):
-            s += coefs[j] * Wp[j : j + T]
-        counts = np.maximum(ne_len - n + 1, 1)
-        # short docs: the full-window combo bleeds into the next doc —
-        # recompute their single partial combo over only their own words
-        for si in np.flatnonzero(ne_len < n):
-            st, ln = starts[si], ne_len[si]
-            s[st] = (coefs[:ln] * W[st : st + ln]).sum(dtype=np.uint64)
-        sv = s.view(np.int64)
-        res, k = [], 0
-        for di in range(ndocs):
-            if lengths[di] == 0:
-                res.append([])
-            else:
-                st, c = starts[k], counts[k]
-                k += 1
-                res.append(sv[st : st + c].tolist())
-        return pd.Series(res)
-
-    h = F.transform(
-        F.array_remove(_tokens(F.col(text_col)), ""), lambda t: F.xxhash64(t)
-    )
-    return gram_udf(h)
 
 
 def decontaminate(
@@ -144,24 +63,22 @@ def decontaminate(
     multiset itself never shuffles.
 
     ``hashed=True`` is the corpus-scale path: gram keys become numpy
-    positional-combination hashes of JVM token hashes
-    (:func:`_hashed_shingles`) — no gram-string construction, 8-byte
+    positional-combination hashes of JVM token hashes (the hashed mode
+    of ``text_stats.grams``) — no gram-string construction, 8-byte
     join keys (measured 19.8 s → 1.6 s steady-state at 50k docs / 8
     cores). Output is identical up to astronomically-unlikely hash
     collisions (a collision adds one false gram match); the
     exact-string mode is the DuckDB-oracled path.
     """
-    sh = _hashed_shingles if hashed else _shingles
+    doc_grams = grams(_tokens(F.col(text_col)), n, hashed)
     bench_grams = F.broadcast(
-        benchmark.select(
-            F.explode(sh(text_col, n)).alias("__g")
-        ).distinct()
+        benchmark.select(F.explode(doc_grams).alias("__g")).distinct()
     )
     corpus_ids = corpus.select(F.col(id_col).alias("id"))
     hits = (
         corpus.select(
             F.col(id_col).alias("id"),
-            F.explode(sh(text_col, n)).alias("__g"),
+            F.explode(doc_grams).alias("__g"),
         )
         .join(bench_grams, "__g")
         .groupBy("id")
@@ -202,7 +119,7 @@ def tfidf_topk(
     crossJoined broadcast, same single-pass trick as term_stats; pass
     ``n_docs`` to drop the branch when N is already known.
     """
-    words = F.array_remove(_tokens(F.col(text_col)), "")
+    words = _tokens(F.col(text_col))
     terms = df.select(
         F.col(id_col).alias("id"), F.explode(words).alias("term")
     )
@@ -509,7 +426,7 @@ def chunk_documents(
         raise ValueError(
             f"overlap must be in [0, max_tokens), got {overlap}")
     stride = max_tokens - overlap
-    toks = F.array_remove(_tokens(F.col(text_col)), "")
+    toks = _tokens(F.col(text_col))
     n = F.size(toks)
     # ceil((n - overlap) / stride), floor 1: the count that covers every
     # token exactly once per window position

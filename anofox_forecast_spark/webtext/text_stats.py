@@ -21,10 +21,120 @@ STOPWORDS = {
 }
 
 
+# ---------------------------------------------------------------------------
+# the word-gram front-end: how a document becomes words and word n-grams
+
+
 def _tokens(text_col) -> Column:
-    return F.split(
+    """The engine's word array: lowercased, anything not a letter or digit
+    becomes a space, split on space runs. A doc with no word gives []."""
+    return F.array_remove(F.split(
         F.trim(F.lower(F.regexp_replace(text_col, r"[^\p{L}\p{N} ]", " "))), r" +"
-    )
+    ), "")
+
+
+def grams(words: Column, n: int, hashed: bool = False) -> Column:
+    """Word ``n``-grams of a word array, one per window position
+    1..max(size − n + 1, 1): a doc shorter than ``n`` gives ONE partial
+    gram over the words it has, an empty doc gives none.
+
+    ``hashed=False`` (the exact oracle mode) builds the gram strings
+    (words joined by a space). ``hashed=True`` (the scale mode) builds
+    int64 keys at the same positions without any string build: the JVM
+    hashes each word once (codegen ``xxhash64``) and one Arrow-batched
+    numpy pass forms each key with :func:`_window_combos` (seed-11
+    coefficients). Keys are equal for equal grams and differ otherwise
+    up to 2^-64-per-pair collisions. A pure-JVM fold was tried first and
+    abandoned: chaining n-1 ``zip_with`` passes re-references the running
+    array per step, so the expression tree (and codegen) grows
+    geometrically — n=8 hangs.
+    """
+    if hashed:
+        return _gram_key_udf(n)(F.transform(words, lambda w: F.xxhash64(w)))
+    idx = F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1)))
+    return F.when(
+        F.size(words) > 0,
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, n))),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _combo_coefs(seed: int | np.random.Generator, n: int) -> np.ndarray:
+    """n odd uint64 coefficients from ``default_rng(seed)`` (odd ⇒ each
+    term of a window combo is a bijection of its word hash); a Generator
+    passed as ``seed`` is drawn from in place."""
+    rng = np.random.default_rng(seed)
+    return (rng.integers(0, 1 << 62, n, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
+
+
+def _flatten(hs: pd.Series):
+    """One Arrow batch of int64 word-hash arrays as one flat uint64 array:
+    (W, nonempty, lengths, starts). ``nonempty`` masks the rows with at
+    least one word; ``lengths``/``starts`` give each such row's run in W."""
+    lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=len(hs))
+    nonempty = lengths > 0
+    lengths = lengths[nonempty]
+    if not lengths.size:
+        return np.empty(0, dtype=np.uint64), nonempty, lengths, lengths
+    W = np.concatenate(
+        [np.asarray(x, dtype=np.int64) for x in hs if len(x)]
+    ).view(np.uint64)
+    starts = np.zeros(lengths.size, dtype=np.int64)
+    np.cumsum(lengths[:-1], out=starts[1:])
+    return W, nonempty, lengths, starts
+
+
+def _window_combos(W, starts, lengths, coefs):
+    """Every word n-gram of every doc of a flattened batch as the
+    positional combination ``Σ_j c_j·w_{i+j} (mod 2^64)`` of its word
+    hashes (n = len(coefs); order-sensitive like the string gram).
+    Same windows as :func:`grams`: a doc shorter than n gives one partial
+    combo over its own words. Returns (combos, counts): doc d's combos
+    are the next ``counts[d]`` entries of the flat array."""
+    n, T = coefs.size, W.size
+    Wp = np.concatenate([W, np.zeros(n - 1, dtype=np.uint64)])
+    s = np.zeros(T, dtype=np.uint64)
+    for j in range(n):
+        s += coefs[j] * Wp[j: j + T]
+    counts = np.maximum(lengths - n + 1, 1)
+    # a short doc's full window runs into the next doc: recompute its one
+    # partial combo over only its own words
+    short = np.flatnonzero(lengths < n)
+    if short.size:
+        sstart, slen = starts[short], lengths[short]
+        acc = np.zeros(short.size, dtype=np.uint64)
+        for j in range(n):
+            m = j < slen
+            acc[m] += coefs[j] * W[sstart[m] + j]
+        s[sstart] = acc
+    pos_within = np.arange(T, dtype=np.int64) - np.repeat(starts, lengths)
+    return s[pos_within < np.repeat(counts, lengths)], counts
+
+
+def _rows(nonempty: np.ndarray, per_doc) -> pd.Series:
+    """Scatter one result per nonempty row back over the batch's rows;
+    rows with no word get []."""
+    res: list = [[]] * nonempty.size
+    for dj, v in zip(np.flatnonzero(nonempty), per_doc):
+        res[dj] = v
+    return pd.Series(res)
+
+
+def _gram_key_udf(n: int, seed: int = 11):
+    """array<long> of the hashed word n-grams of each row (see :func:`grams`)."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, LongType
+
+    coefs = _combo_coefs(seed, n)
+
+    @pandas_udf(ArrayType(LongType()))
+    @hooked
+    def gram_udf(hs: pd.Series) -> pd.Series:
+        W, nonempty, lengths, starts = _flatten(hs)
+        combos, counts = _window_combos(W, starts, lengths, coefs)
+        per_doc = np.split(combos.view(np.int64), np.cumsum(counts)[:-1])
+        return _rows(nonempty, (g.tolist() for g in per_doc))
+
+    return gram_udf
 
 
 def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -56,10 +166,19 @@ def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Length / punctuation / word-shape quality features (pure SQL):
     (id, n_chars, n_words, mean_word_len, punct_ratio, digit_ratio,
     upper_ratio, stopword_ratio_en, quality)."""
-    t = F.col(text_col)
-    toks = _tokens(t)
+    # the word array gets its own projection: inlined, every use of it
+    # below re-tokenizes the doc (7.3 → 6.1 s at 200k docs, local[4] on a
+    # 4-core host)
+    base = df.select(
+        F.col(id_col).alias("id"),
+        F.col(text_col).alias("__t"),
+        _tokens(F.col(text_col)).alias("__w"),
+    )
+    t, toks = F.col("__t"), F.col("__w")
     n_chars = F.length(t)
-    n_words = F.size(toks)
+    # a doc with no word counts as one word, as its DuckDB twin's
+    # len(regexp_split_to_array('', ' +')) does
+    n_words = F.when(F.size(toks) == 0, 1).otherwise(F.size(toks))
     wl = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     stop = F.size(F.filter(toks, lambda x: F.array_contains(wl, x)))
     # char-class counts as length deltas of `translate` (single-pass char
@@ -75,8 +194,8 @@ def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     punct = n_chars - F.length(F.translate(t, _PUNCT, ""))
     digits = n_chars - F.length(F.translate(t, "0123456789", ""))
     uppers = n_chars - F.length(F.translate(t, "ABCDEFGHIJKLMNOPQRSTUVWXYZ", ""))
-    out = df.select(
-        F.col(id_col).alias("id"),
+    out = base.select(
+        "id",
         n_chars.alias("n_chars"),
         n_words.alias("n_words"),
         F.round(n_chars / F.greatest(n_words, F.lit(1)), 6).alias("mean_word_len"),
@@ -127,8 +246,6 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str, window: int = 8) -> D
     Docs with fewer than ``window`` tokens fingerprint as the min token
     hash (unchanged contract); empty docs get 0.
     """
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
@@ -137,19 +254,11 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str, window: int = 8) -> D
     @pandas_udf(LongType())
     @hooked
     def fp(hs: pd.Series) -> pd.Series:
-        ndocs = len(hs)
-        out = np.zeros(ndocs, dtype=np.int64)
-        lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
-        nonempty = lengths > 0
-        if not nonempty.any():
+        out = np.zeros(len(hs), dtype=np.int64)
+        flat, nonempty, L, starts = _flatten(hs)
+        if not L.size:
             return pd.Series(out)
-        flat = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in hs if len(x)]
-        ).view(np.uint64)
         T = flat.size
-        L = lengths[nonempty]
-        starts = np.zeros(L.size, dtype=np.int64)
-        np.cumsum(L[:-1], out=starts[1:])
         # all window sums at once: roll[i] = cs[i+w] - cs[i] (mod 2^64)
         cs = np.zeros(T + 1, dtype=np.uint64)
         np.cumsum(flat, out=cs[1:])
@@ -227,9 +336,9 @@ def repetition_stats(
 
     SHUFFLE-FREE: every metric is per-document, so nothing needs a
     groupBy — words are hashed once JVM-side (xxhash64, whole-stage
-    codegen), n-gram identities are positional linear combos of word
-    hashes (the minhash_signatures trick), and one Arrow-batched numpy
-    pass computes all per-doc counts via a batch-wide lexsort +
+    codegen), n-gram identities are the word-hash window combos of
+    :func:`_window_combos` (seed-97 coefficients), and one Arrow-batched
+    numpy pass computes all per-doc counts via a batch-wide lexsort +
     run-length reduceat. The first cut exploded grams into a
     groupBy(id, gram) — 16M shuffled gram strings at 200k docs,
     measured 22 s; this pass is ~1-2 s and at 100 TB avoids shuffling
@@ -241,32 +350,7 @@ def repetition_stats(
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, DoubleType
 
-    rng = np.random.default_rng(97)
-    max_n = max(top_n, dup_n)
-    coefs = (rng.integers(0, 1 << 62, max_n, dtype=np.uint64)
-             << np.uint64(1)) | np.uint64(1)
-
-    def _gram_hashes(W, starts, ne_len, n):
-        """Positional combo hashes for all n-grams of every doc in the
-        flat word-hash array W; matches the string grammer's contract
-        (docs shorter than n contribute ONE partial gram)."""
-        T = W.size
-        Wp = np.concatenate([W, np.zeros(n - 1, dtype=np.uint64)])
-        s = np.zeros(T, dtype=np.uint64)
-        for j in range(n):
-            s += coefs[j] * Wp[j: j + T]
-        counts = np.maximum(ne_len - n + 1, 1)
-        short = np.flatnonzero(ne_len < n)
-        if short.size:
-            sstart, slen = starts[short], ne_len[short]
-            acc = np.zeros(short.size, dtype=np.uint64)
-            for j in range(n):
-                m = j < slen
-                acc[m] += coefs[j] * W[(sstart + j)[m].clip(max=T - 1)]
-            s[sstart] = acc
-        pos_within = np.arange(T, dtype=np.int64) - np.repeat(starts, ne_len)
-        valid = pos_within < np.repeat(counts, ne_len)
-        return s[valid], counts
+    coefs = _combo_coefs(97, max(top_n, dup_n))
 
     def _run_stats(vals, counts):
         """(max run length, distinct runs) per doc over flat per-doc gram
@@ -292,34 +376,21 @@ def repetition_stats(
     @pandas_udf(ArrayType(DoubleType()))
     @hooked
     def rep_udf(hs: pd.Series) -> pd.Series:
-        ndocs = len(hs)
-        out = np.zeros((ndocs, 3), dtype=np.float64)
-        lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
-        nonempty = lengths > 0
-        res: list = [None] * ndocs
-        if nonempty.any():
-            W = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in hs if len(x)]
-            ).view(np.uint64)
-            ne_len = lengths[nonempty]
-            starts = np.zeros(ne_len.size, dtype=np.int64)
-            np.cumsum(ne_len[:-1], out=starts[1:])
-            tg, tg_counts = _gram_hashes(W, starts, ne_len, top_n)
-            top_max, _ = _run_stats(tg, tg_counts)
-            dgv, dg_counts = _gram_hashes(W, starts, ne_len, dup_n)
-            _, dg_distinct = _run_stats(dgv, dg_counts)
-            _, w_distinct = _run_stats(W, ne_len)
-            vals = np.stack([
-                top_max / np.maximum(tg_counts, 1),
-                (dg_counts - dg_distinct) / np.maximum(dg_counts, 1),
-                w_distinct / np.maximum(ne_len, 1),
-            ], axis=1)
-            out[nonempty] = vals
-        for j in np.flatnonzero(nonempty):
-            res[j] = out[j]
-        return pd.Series(res)
+        W, nonempty, ne_len, starts = _flatten(hs)
+        if not ne_len.size:
+            return _rows(nonempty, [])
+        tg, tg_counts = _window_combos(W, starts, ne_len, coefs[:top_n])
+        top_max, _ = _run_stats(tg, tg_counts)
+        dgv, dg_counts = _window_combos(W, starts, ne_len, coefs[:dup_n])
+        _, dg_distinct = _run_stats(dgv, dg_counts)
+        _, w_distinct = _run_stats(W, ne_len)
+        return _rows(nonempty, np.stack([
+            top_max / np.maximum(tg_counts, 1),
+            (dg_counts - dg_distinct) / np.maximum(dg_counts, 1),
+            w_distinct / np.maximum(ne_len, 1),
+        ], axis=1))
 
-    words = F.array_remove(_tokens(F.col(text_col)), "")
+    words = _tokens(F.col(text_col))
     wh_col = F.transform(words, lambda w: F.xxhash64(w))
     # empty-doc filter BEFORE the UDF (projection-collapse trap — see
     # minhash_signatures); string-version semantics dropped empty docs too
@@ -361,7 +432,7 @@ def term_stats(
     """
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.array_remove(_tokens(F.col(text_col)), "")).alias("term"),
+        F.explode(_tokens(F.col(text_col))).alias("term"),
     )
     if n_docs is None:
         n_col = F.col("__n_docs").cast("double")
@@ -398,7 +469,7 @@ def domain_stats(
     are few) plus a broadcast 1-row total-count branch for doc_share
     (the term_stats trick — no second corpus scan, no driver action).
     """
-    nt = F.size(F.array_remove(_tokens(F.col(text_col)), ""))
+    nt = F.size(_tokens(F.col(text_col)))
     per = df.select(
         F.col(source_col).alias("source"),
         nt.alias("__nt"),

@@ -1,7 +1,7 @@
 """``__spark_entry__`` queries against their DuckDB ``oracle_sql()`` twins at
 sf0.001: the gap-fill queries of plans/driver_queries.py, the Gorilla and
-Chimp compress → decompress round trips, and the four webtext queries
-rewritten in round 6 (line dedup, LM perplexity, DSIR weights, C4 filters).
+Chimp compress → decompress round trips, and the webtext queries built on the
+word-gram front-end (webtext/text_stats.py: words, grams, term counts).
 """
 
 from __future__ import annotations
@@ -18,7 +18,10 @@ from tools.check_oracle import norm_rows  # noqa: E402
 ORACLE_QUERIES = ("gapfill_spine_1h", "gapfill_locf_1h", "gapfill_interp_1h",
                   "gapfill_dense_1h", "forecast_snaive_1h",
                   "compress_roundtrip_7d", "compress_chimp_7d",
-                  "dedup_lines", "text_lm_ppl", "text_dsir", "text_c4_filters")
+                  "dedup_lines", "text_lm_ppl", "text_dsir", "text_c4_filters",
+                  "dedup_ngram_jaccard", "dedup_substring", "text_decontaminate",
+                  "text_repetition", "text_term_stats", "text_tfidf", "text_quality",
+                  "text_lang_id", "corpus_domain_stats", "chunk_documents")
 
 
 def test_driver_queries_match_duckdb_oracle(spark):

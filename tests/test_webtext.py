@@ -178,7 +178,8 @@ def test_minhash_estimator_unbiased(spark):
     xxhash64 + k affine permutations). Guards the rewrite: a biased
     permutation family (e.g. even multipliers, correlated a_i) would show
     a systematic est-vs-true gap here."""
-    from anofox_forecast_spark.webtext.dedup import minhash_signatures, shingles
+    from anofox_forecast_spark.webtext.dedup import minhash_signatures
+    from anofox_forecast_spark.webtext.text_stats import _tokens, grams
 
     rng = np.random.default_rng(11)
     vocab = [f"w{i}" for i in range(500)]
@@ -189,13 +190,15 @@ def test_minhash_estimator_unbiased(spark):
         for pos in rng.choice(60, size=i * 4, replace=False):
             words[pos] = str(rng.choice(vocab))
         docs.append((i, " ".join(words)))
+    docs += [(13, ""), (14, "!!! ... ?")]  # no word: no signature row
     df = spark.createDataFrame(docs, "doc_id long, text string")
     sig = (
         minhash_signatures(df, "doc_id", "text", n_hashes=256)
         .toPandas().set_index("id")["sig"]
     )
+    assert sorted(sig.index) == list(range(13))
     sh = (
-        df.select("doc_id", shingles("text", 3).alias("sh"))
+        df.select("doc_id", grams(_tokens(F.col("text")), 3).alias("sh"))
         .toPandas().set_index("doc_id")["sh"]
     )
     s0, g0 = np.asarray(sig.loc[0]), set(sh.loc[0])
@@ -307,6 +310,12 @@ def test_token_counts_and_quality(spark):
     assert (q["punct_ratio"] == 0.0).all()
     assert q.loc[0, "n_words"] == 13
     assert q.loc[0, "quality"] >= 0.9  # long, clean text
+    # a doc with no word counts one word, as the DuckDB twin's
+    # len(regexp_split_to_array('', ' +')) does
+    empty = spark.createDataFrame([(7, ""), (8, "!!!")], "doc_id long, text string")
+    q = quality_scores(empty, "doc_id", "text").toPandas().set_index("id")
+    assert q["n_words"].tolist() == [1, 1]
+    assert q.loc[7, "quality"] == 0.64 and q.loc[8, "quality"] == 0.34
 
 
 def test_language_id(spark):

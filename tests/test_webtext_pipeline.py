@@ -81,19 +81,22 @@ def test_decontaminate_short_doc_partial_shingle(spark):
 
 def test_decontaminate_hashed_equals_exact(spark):
     """hashed=True (numpy positional-combo gram keys) must reproduce
-    the exact-string verdicts — including short-doc partial shingles
-    and per-doc distinct-overlap counts."""
+    the exact-string verdicts — including short-doc partial shingles,
+    docs with no word on either side and per-doc distinct-overlap counts."""
     docs = _docs(spark).union(
-        spark.createDataFrame([(9, "alpha beta", "web")],
+        spark.createDataFrame([(9, "alpha beta", "web"), (10, "", "web"),
+                               (11, "!!! ...", "web"), (12, "", "web")],
                               "doc_id long, text string, source string")
     )
-    bench = docs.filter(F.col("doc_id").isin(0, 9))
-    corpus = docs.filter(~F.col("doc_id").isin(0, 9))
+    bench = docs.filter(F.col("doc_id").isin(0, 9, 10))
+    corpus = docs.filter(~F.col("doc_id").isin(0, 9, 10))
     for n in (4, 5):
         exact = decontaminate(corpus, bench, "doc_id", "text", n=n).orderBy("id").collect()
         hashed = decontaminate(corpus, bench, "doc_id", "text", n=n,
                                hashed=True).orderBy("id").collect()
         assert exact == hashed
+        assert [(r["id"], r["n_overlap"]) for r in exact if r["id"] >= 11] == [
+            (11, 0), (12, 0)]
 
 
 # ---------------------------------------------------------------------------
@@ -398,13 +401,16 @@ def test_substring_dedup_every_doc_present_and_counts(spark):
 def test_substring_dedup_hashed_equals_exact(spark):
     from anofox_forecast_spark.webtext.dedup import substring_dedup
 
-    docs = _sub_docs(spark)
+    docs = _sub_docs(spark).union(spark.createDataFrame(
+        [(5, ""), (6, "!!! ..."), (7, "")], "doc_id long, text string"))
     exact = sorted(
         substring_dedup(docs, "doc_id", "text", min_tokens=8).collect())
     hashed = sorted(
         substring_dedup(docs, "doc_id", "text", min_tokens=8,
                         hashed=True).collect())
     assert exact == hashed
+    assert [tuple(r) for r in exact if r["id"] >= 5] == [
+        (5, 0, 0, ""), (6, 0, 0, ""), (7, 0, 0, "")]
 
 
 def test_substring_dedup_rejects_tiny_window(spark):

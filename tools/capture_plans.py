@@ -356,6 +356,8 @@ def main() -> None:
     assert "CartesianProduct" not in plan21
     assert "ArrowEvalPython" not in plan21 and "BatchEvalPython" not in plan21, (
         "DSIR scoring must stay JVM-side")
+    assert "Union (" not in plan21, (
+        "DSIR uni+bi grams must ride one concat array through one explode")
 
     # 22. ExactSubstr dedup: first-occurrence selection over the
     # (hot-key) gram must be a HASH AGGREGATE with map-side combine —
