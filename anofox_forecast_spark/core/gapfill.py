@@ -19,9 +19,8 @@ Semantics from the reference (all cites into /root/reference):
   tolerance on the modal ratio — src/core/time_series.rs:727-767.
 
 NULL discipline: Spark aggregates skip NULL but *propagate* NaN, so the
-engine's canonical missing marker is NULL; ``nan_to_null`` is applied at
-ingest boundaries (the reference uses NaN in-memory,
-src/core/time_series.rs:601-605).
+engine's canonical missing marker is NULL; ``gapfill_dense`` reads NaN as
+NULL (the reference uses NaN in-memory, src/core/time_series.rs:601-605).
 
 Scale notes: ``fill_gaps`` is one sort → window → explode pass in the
 JVM: one hash exchange on the series keys, one sort by (keys, ts), one
@@ -30,64 +29,88 @@ spine aggregate, no join, no Python. ``interp`` adds one sort and Window in
 descending ts on the same partitioning for the next known value.
 ``locf`` and ``interpolate_linear`` share these frames and the one
 interpolation expression.
+
+Plan building: the pass is three DataFrame steps built from SQL expression
+text, with every identifier backtick-quoted: (1) only the windows the
+method reads, (2) the slot index and ``explode(sequence(…))`` with the
+three timestamp checks, (3) the final projection. Each DataFrame step makes
+the JVM re-analyse a plan that holds windows, and each
+``functions``/``Column`` call is one py4j round trip. ``gapfill_dense``
+reads NaN as NULL in one more step before the windows, on the window-free
+input. On ``series_batch``'s 1h input (``local[4]``, 4-core x86 host) a
+``gapfill_dense(…, "1h", method="locf")`` build took 115 ms and 421 py4j
+commands as five steps of Column calls (median of 12 repetitions), and
+about 45 ms and 31 commands this way (BENCH/SERIES_BATCH_COST.md).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from anofox_forecast_spark.core.frequency import parse_frequency
 
 
-def nan_to_null(c: Column) -> Column:
-    """Normalize NaN (reference missing marker) to NULL (engine marker)."""
-    return F.when(F.isnan(c), F.lit(None)).otherwise(c)
+def _q(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _text(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _series_window(keys: Sequence[str], ts_col: str) -> Window:
     return Window.partitionBy(*keys).orderBy(ts_col)
 
 
-def _seconds(c: Column) -> Column:
-    return c.cast("timestamp").cast("double")  # NTZ-safe under UTC
+def _over(keys: Sequence[str], ts_col: str, frame: str, desc: bool = False) -> str:
+    """A window over one series in ``ts_col`` order (descending with
+    ``desc``) with the given ROWS frame."""
+    part = f"PARTITION BY {', '.join(map(_q, keys))} " if keys else ""
+    return f"OVER ({part}ORDER BY {_q(ts_col)}{' DESC' if desc else ''} {frame})"
 
 
-def _neighbours(
-    v: Column, keys: Sequence[str], ts_col: str
-) -> tuple[Column, Column, Column, Column]:
-    """(v0, t0, v1, t1): the last non-NULL value strictly before the current
-    row and the first at or after it, each with its time in seconds.
+def _seconds(c: str) -> str:
+    return f"CAST(CAST({c} AS TIMESTAMP) AS DOUBLE)"  # NTZ-safe under UTC
+
+
+_BEFORE = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+_SINCE = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+
+
+def _neighbours(v: str, keys: Sequence[str], ts_col: str, names: Sequence[str]) -> list[str]:
+    """SQL for the ``names`` among (v0, t0, v1, t1): the last non-NULL value
+    of ``v`` strictly before the current row and the first at or after it,
+    each with its time in seconds. Only the named windows are built.
 
     The forward look runs over the series in descending ts from its start:
     Spark re-aggregates a frame ending at unboundedFollowing for every
     row, which is quadratic in the series length (``local[4]`` on a 4-core
     host, 40 series of ~4.8k rows: interp fill_gaps 38 s that way, 1.3 s
     this way)."""
-    t = F.when(v.isNotNull(), _seconds(F.col(ts_col)))
-    prev = _series_window(keys, ts_col).rowsBetween(Window.unboundedPreceding, -1)
-    nxt = Window.partitionBy(*keys).orderBy(F.col(ts_col).desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        F.last(v, ignorenulls=True).over(prev),
-        F.last(t, ignorenulls=True).over(prev),
-        F.last(v, ignorenulls=True).over(nxt),
-        F.last(t, ignorenulls=True).over(nxt),
-    )
+    t = f"CASE WHEN {v} IS NOT NULL THEN {_seconds(_q(ts_col))} END"
+    before, since = _over(keys, ts_col, _BEFORE), _over(keys, ts_col, _SINCE, desc=True)
+    sql = {"v0": f"last({v}, true) {before}", "t0": f"last({t}, true) {before}",
+           "v1": f"last({v}, true) {since}", "t1": f"last({t}, true) {since}"}
+    return [sql[n] for n in names]
 
 
-def _interpolated(v, t, v0, t0, v1, t1, fill_edges: bool) -> Column:
+def _interpolated(v: str, t: str, v0: str, t0: str, v1: str, t1: str, fill_edges: bool) -> str:
     """``v`` where known; else v0 + (t-t0)/(t1-t0) * (v1-v0) between two
     known neighbours; at an edge the nearer known value with
     ``fill_edges``, else NULL. DOUBLE."""
-    edge = F.coalesce(v0, v1) if fill_edges else F.lit(None)
-    inner = v0.isNotNull() & v1.isNotNull() & (t1 != t0)
-    return F.when(v.isNotNull(), v).otherwise(
-        F.when(inner, v0 + (t - t0) / (t1 - t0) * (v1 - v0)).otherwise(edge)
-    ).cast("double")
+    edge = f"coalesce({v0}, {v1})" if fill_edges else "NULL"
+    inner = f"{v0} IS NOT NULL AND {v1} IS NOT NULL AND {t1} != {t0}"
+    return (f"CAST(CASE WHEN {v} IS NOT NULL THEN {v} "
+            f"WHEN {inner} THEN {v0} + ({t} - {t0}) / ({t1} - {t0}) * ({v1} - {v0}) "
+            f"ELSE {edge} END AS DOUBLE)")
+
+
+_NEIGHBOURS = {"none": (), "locf": ("v0",), "interp": ("v0", "t0", "v1", "t1")}
 
 
 def fill_gaps(
@@ -110,63 +133,65 @@ def fill_gaps(
     observed rows and are NULL on gap rows. Columns: keys, ts, the other
     input columns in input order, ``filled``.
 
-    One pass, no join: a window over (keys, ts) reads the series start,
-    the previous timestamp and each value's neighbours; every observed row
-    explodes the grid slots since the previous row plus its own. Slot k is
+    One pass, no join, three DataFrame steps: (1) a window over (keys, ts)
+    reads the series start, the previous timestamp and the neighbours the
+    method needs; (2) every observed row explodes the grid slots since the
+    previous row plus its own; (3) the final projection. Slot k is
     ``start + k·freq``, so month grids keep ``sequence``'s day clamping
     (Jan 31 → Feb 29 → Mar 31). A NULL, off-grid or duplicate timestamp
     raises.
     """
-    if method not in ("none", "locf", "interp"):
+    if method not in _NEIGHBOURS:
         raise ValueError(f"unknown method {method!r}")
     f = parse_frequency(freq)
-    w = _series_window(keys, ts_col)
-    ts, start, slot = F.col(ts_col), F.col("__start"), F.col("__slot")
+    ts, start, lag, k, slot = _q(ts_col), "`__start`", "`__lag`", "`__k`", "`__slot`"
 
-    def index(c: Column) -> Column:  # whole steps from the series start
+    def index(c: str) -> str:  # whole steps from the series start
         if f.kind == "duration":
-            us = F.unix_micros(c.cast("timestamp")) - F.unix_micros(start.cast("timestamp"))
-            return (us / (f.seconds * 1_000_000)).cast("long")
-        return (((F.year(c) - F.year(start)) * 12 + F.month(c) - F.month(start))
-                / f.months).cast("long")
+            us = f"unix_micros(CAST({c} AS TIMESTAMP)) - unix_micros(CAST({start} AS TIMESTAMP))"
+            return f"CAST(({us}) / {f.seconds * 1_000_000} AS BIGINT)"
+        return (f"CAST(((year({c}) - year({start})) * 12 + month({c}) - month({start}))"
+                f" / {f.months} AS BIGINT)")
 
-    def at(k: Column) -> Column:
-        return start + F.expr(f.sql_interval()) * k
+    def at(i: str) -> str:
+        return f"({start} + ({f.sql_interval()}) * {i})"
 
-    def fail(*problem: Column) -> Column:
-        return F.raise_error(F.concat(
-            F.lit("fill_gaps: "), *problem, F.lit(" in series "), F.to_json(F.struct(*keys))
-        ))
+    def fail(*problem: str) -> str:
+        series = f"to_json(struct({', '.join(map(_q, keys))}))"
+        return f"raise_error(concat('fill_gaps: ', {', '.join(problem)}, ' in series ', {series}))"
 
-    names = {"none": (), "locf": ("v0",), "interp": ("v0", "t0", "v1", "t1")}[method]
-    nbrs = [x.alias(f"__{n}_{c}") for c in value_cols
-            for n, x in zip(names, _neighbours(F.col(c), keys, ts_col))]
-    rows = df.select(
-        "*", F.first(ts).over(w).alias("__start"), F.lag(ts).over(w).alias("__lag"), *nbrs
-    ).withColumn("__k", index(ts))
+    names = _NEIGHBOURS[method]
+    nbrs = [f"{x} AS {_q(f'__{n}_{c}')}" for c in value_cols
+            for n, x in zip(names, _neighbours(_q(c), keys, ts_col, names))]
+    rows = df.selectExpr(
+        "*", f"first({ts}) {_over(keys, ts_col, _SINCE)} AS {start}",
+        f"lag({ts}) {_over(keys, ts_col, '')} AS {lag}", *nbrs)
+
     first_slot = (  # the checks run here, before sequence() sees bad bounds
-        F.when(start.isNull(), fail(F.lit("NULL timestamp")))
-        .when(at(F.col("__k")) != ts,
-              fail(F.lit(f"timestamp off the {freq} grid: "), ts.cast("string")))
-        .when(ts == F.col("__lag"), fail(F.lit("duplicate timestamp "), ts.cast("string")))
-        .otherwise(F.coalesce(index(F.col("__lag")) + 1, F.lit(0)))
+        f"CASE WHEN {start} IS NULL THEN {fail(_text('NULL timestamp'))} "
+        f"WHEN {at(index(ts))} != {ts} THEN "
+        f"{fail(_text(f'timestamp off the {freq} grid: '), f'CAST({ts} AS STRING)')} "
+        f"WHEN {ts} = {lag} THEN {fail(_text('duplicate timestamp '), f'CAST({ts} AS STRING)')} "
+        f"ELSE coalesce({index(lag)} + 1, 0) END"
     )
-    slots = rows.withColumn("__slot", F.explode(F.sequence(first_slot, F.col("__k"))))
-    observed = slot == F.col("__k")
+    slots = rows.selectExpr(
+        "*", f"{index(ts)} AS {k}", f"explode(sequence({first_slot}, {index(ts)})) AS {slot}")
 
-    def value(c: str) -> Column:
-        v = F.when(observed, F.col(c))
+    observed = f"({slot} = {k})"
+
+    def value(c: str) -> str:
+        v = f"CASE WHEN {observed} THEN {_q(c)} END"
         if c not in value_cols or method == "none":
             return v
+        nb = [_q(f"__{n}_{c}") for n in names]
         if method == "locf":
-            return F.coalesce(v, F.col(f"__v0_{c}"))
-        nb = [F.col(f"__{n}_{c}") for n in names]
-        return _interpolated(v, _seconds(F.col(ts_col)), *nb, fill_edges=fill_edges)
+            return f"coalesce({v}, {nb[0]})"
+        return _interpolated(v, _seconds(at(slot)), *nb, fill_edges=fill_edges)
 
     rest = [c for c in df.columns if c not in (*keys, ts_col, "filled")]
-    return slots.withColumn(ts_col, at(slot)).select(
-        *keys, ts_col, *[value(c).alias(c) for c in rest], (~observed).alias("filled")
-    )
+    return slots.selectExpr(
+        *map(_q, keys), f"{at(slot)} AS {ts}", *[f"{value(c)} AS {_q(c)}" for c in rest],
+        f"NOT {observed} AS `filled`")
 
 
 def locf(
@@ -178,11 +203,10 @@ def locf(
     """Last-observation-carried-forward in place (ref ForwardFill,
     :673-702): each NULL takes the last non-NULL value before it in its
     series; leading NULLs stay NULL, as in the reference."""
-    out = df
-    for c in value_cols:
-        v0 = _neighbours(F.col(c), keys, ts_col)[0]
-        out = out.withColumn(c, F.coalesce(F.col(c), v0))
-    return out
+    return df.withColumns({
+        c: F.expr(f"coalesce({_q(c)}, {_neighbours(_q(c), keys, ts_col, ['v0'])[0]})")
+        for c in value_cols
+    })
 
 
 def interpolate_linear(
@@ -200,13 +224,12 @@ def interpolate_linear(
     leading NULLs take the first known value and trailing NULLs the last
     (ref ``interpolated(fill_edges=true)``, src/core/time_series.rs:707-724).
     """
-    out = df
-    for c in value_cols:
-        v = F.col(c)
-        out = out.withColumn(c, _interpolated(
-            v, _seconds(F.col(ts_col)), *_neighbours(v, keys, ts_col), fill_edges=fill_edges
-        ))
-    return out
+    nbrs = ("v0", "t0", "v1", "t1")
+    return df.withColumns({
+        c: F.expr(_interpolated(_q(c), _seconds(_q(ts_col)),
+                                *_neighbours(_q(c), keys, ts_col, nbrs), fill_edges=fill_edges))
+        for c in value_cols
+    })
 
 
 def sanitize(
@@ -371,7 +394,12 @@ def gapfill_dense(
     """``fill_gaps`` over (keys, ts, value_cols) with DOUBLE values, NaN
     read as missing, and LOCF by default. Output: keys, ts, value_cols,
     ``filled``."""
-    vals = [nan_to_null(F.col(c).cast("double")).alias(c) for c in value_cols]
-    return fill_gaps(
-        df.select(*keys, ts_col, *vals), keys, ts_col, value_cols, freq, method, fill_edges
-    )
+    # a step of its own: folded into the window step, each value would be
+    # computed and shuffled twice, once as the column and once as the
+    # window input
+    def dense(c: str) -> str:
+        v = f"CAST({_q(c)} AS DOUBLE)"
+        return f"CASE WHEN isnan({v}) THEN NULL ELSE {v} END AS {_q(c)}"
+
+    narrowed = df.selectExpr(*map(_q, (*keys, ts_col)), *map(dense, value_cols))
+    return fill_gaps(narrowed, keys, ts_col, value_cols, freq, method, fill_edges)

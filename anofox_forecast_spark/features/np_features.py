@@ -528,14 +528,6 @@ def augmented_dickey_fuller(y, attribute="teststat", max_lag=None):  # trend.rs:
 # --------------------------------------------------------------- counting
 
 
-def count_above(y, t=0.0):
-    return float((y > t).sum())
-
-
-def count_below(y, t=0.0):
-    return float((y < t).sum())
-
-
 def count_above_mean(y):
     return float((y > y.mean()).sum()) if y.size else 0.0
 

@@ -16,6 +16,9 @@ depends on these specific approximations (SURVEY §2.13):
   (ref src/utils/ols.rs:94-130).
 - ``level_fold``: the sequential SES/EWM level recursion shared by theta's
   in-sample fit, ``ewm_mean_np`` and the streaming SES state.
+- ``SegmentLevels`` / ``nelder_mead_lockstep``: the SES level scan and its
+  one-parameter optimizer over every series of a body at once; each series
+  gets the bits of its one-series run (ref src/models/exponential/ses.rs).
 
 Z95_EXACT is statrs' exact Φ⁻¹(0.95) used by the Theta seasonal test
 (ref src/models/theta/model.rs:543-548) — that one is NOT the A&S approx.
@@ -151,6 +154,159 @@ def nelder_mead(
 
     best = int(np.argmin(values))
     return simplex[best]
+
+
+def nelder_mead_lockstep(
+    objective: Callable[[np.ndarray, np.ndarray], np.ndarray],
+    size: int,
+    initial: float,
+    bounds: tuple[float, float],
+    max_iter: int = 1000,
+    tolerance: float = 1e-8,
+    alpha: float = 1.0,
+    gamma: float = 2.0,
+    rho: float = 0.5,
+    sigma: float = 0.5,
+    initial_step: float = 0.05,
+) -> np.ndarray:
+    """``nelder_mead`` over one bounded parameter for ``size`` problems at
+    once: ``objective(x, which)`` gives the values of problems ``which``
+    (ascending) at points ``x``, and each optimizer step makes one call for
+    every problem still running. Returns each problem's optimal point.
+
+    Each problem takes exactly the steps ``nelder_mead`` takes for it alone:
+    with one parameter the simplex is two points, the centroid is the best
+    one, and reflection alone is never accepted (its test reads
+    ``best <= f_r < second worst`` with second worst = best). Per-problem
+    masks choose expansion, the outside or inside contraction and the
+    shrink; the stopping tests use the same arithmetic, down to the
+    Python-float ``** 0.5`` of the collapse test."""
+    lo, hi = bounds
+    step = initial_step * abs(initial) if abs(initial) > 1e-10 else initial_step
+    live = np.arange(size)
+    p0 = np.full(size, float(initial))
+    p1 = np.full(size, min(max(initial + step, lo), hi))
+    f0, f1 = objective(p0, live), objective(p1, live)
+    best = np.empty(size)
+
+    def clip(x: np.ndarray) -> np.ndarray:
+        return np.minimum(np.maximum(x, lo), hi)
+
+    for _ in range(max_iter):
+        swap = f1 < f0  # sorted()'s order: point 1 is the best
+        xb, xw = np.where(swap, p1, p0), np.where(swap, p0, p1)
+        fb, fw = np.where(swap, f1, f0), np.where(swap, f0, f1)
+        d = xw - xb
+        spread = [v ** 0.5 for v in (d * d).tolist()]
+        stop = (fw - fb < tolerance) | (np.array(spread) < tolerance)
+        if stop.any():
+            best[live[stop]] = _argmin_point(p0[stop], p1[stop], f0[stop], f1[stop])
+            go = ~stop
+            live, swap, xb, xw, fb, fw = live[go], swap[go], xb[go], xw[go], fb[go], fw[go]
+            p0, p1, f0, f1 = p0[go], p1[go], f0[go], f1[go]
+            if not live.size:
+                return best
+        xr = clip(xb + alpha * (xb - xw))
+        fr = objective(xr, live)
+        expand = fr < fb
+        outside = fr < fw
+        x2 = clip(np.where(expand, xb + gamma * (xr - xb),
+                           np.where(outside, xb + rho * (xr - xb), xb + rho * (xw - xb))))
+        f2 = objective(x2, live)
+        take2 = np.where(expand, f2 < fr, np.where(outside, f2 <= fr, f2 < fw))
+        xn, fn = np.where(take2, x2, xr), np.where(take2, f2, fr)
+        shrink = np.flatnonzero(~expand & ~take2)
+        if shrink.size:
+            xn[shrink] = clip(xb[shrink] + sigma * (xw[shrink] - xb[shrink]))
+            fn[shrink] = objective(xn[shrink], live[shrink])
+        # the new point replaces the worst one
+        p0, f0 = np.where(swap, xn, p0), np.where(swap, fn, f0)
+        p1, f1 = np.where(swap, p1, xn), np.where(swap, f1, fn)
+    best[live] = _argmin_point(p0, p1, f0, f1)
+    return best
+
+
+def _argmin_point(p0, p1, f0, f1) -> np.ndarray:
+    """``simplex[np.argmin(values)]`` per problem: the first NaN, else the
+    first minimum."""
+    return np.where(~np.isnan(f0) & (np.isnan(f1) | (f1 < f0)), p1, p0)
+
+
+_BLOCK = 32
+_POWERS = np.arange(_BLOCK + 1)
+
+
+class SegmentLevels:
+    """SES levels ``l_t = α·y_t + (1−α)·l_{t−1}``, ``l_0 = y_0``, for the
+    series of one body: values ``y`` with series ``i`` in rows
+    ``starts[i]:ends[i]``, one α in (0, 1) per series.
+
+    The scan is a blocked renormalized cumsum: block 32 keeps
+    (1−α)^{−31} ≤ ~1e124 for α ≤ 0.9999, so nothing overflows, and it equals
+    the sequential ``level_fold`` to fp round-off. The blocks of every
+    series are the rows of one matrix, so a body runs in the same few numpy
+    calls as one series; only the carried level steps from block to block.
+    Each series gets the bits it gets as a body of its own."""
+
+    def __init__(self, y: np.ndarray, starts: np.ndarray, ends: np.ndarray):
+        self.y = np.asarray(y, dtype=np.float64)
+        self.starts, self.ends = starts, ends
+        # blocks after each series' first point: ceil((n − 1) / 32)
+        self.blocks = np.maximum(ends - starts - 2, -1) // _BLOCK + 1
+        first_row = np.cumsum(self.blocks) - self.blocks
+        self.series = np.repeat(np.arange(starts.size), self.blocks)
+        block = np.arange(self.series.size) - first_row[self.series]
+        idx = (starts[self.series] + 1 + _BLOCK * block)[:, None] + _POWERS[:-1]
+        self.valid = idx < ends[self.series][:, None]
+        self.seg = np.where(self.valid, self.y[np.where(self.valid, idx, 0)], 0.0)
+        self.cells = idx[self.valid]
+        self.counts = self.valid.sum(axis=1)
+
+    def levels(self, alpha: np.ndarray, which: np.ndarray) -> np.ndarray:
+        """The body's values with series ``which`` (ascending) replaced by
+        their levels at ``alpha`` (one α per entry of ``which``)."""
+        out = self.y.copy()
+        if which.size == self.starts.size:
+            series, seg, valid, cells = self.series, self.seg, self.valid, self.cells
+        else:
+            pos = np.full(self.starts.size, -1)
+            pos[which] = np.arange(which.size)
+            series = pos[self.series]
+            rows = series >= 0
+            series, seg, valid = series[rows], self.seg[rows], self.valid[rows]
+            cells = self.cells[np.repeat(rows, self.counts)]
+        if not series.size:
+            return out
+        nb = self.blocks[which]
+        single = bool((nb == 1).all())  # every series of 2..33 points: rows are series
+        row = slice(None) if single else series
+        b = (1.0 - alpha)[:, None]
+        pow_beta = (b ** _POWERS)[row, 1:]  # beta^(j+1)
+        inv_beta = ((1.0 / b) ** _POWERS[1:])[row]  # beta^-(j+1)
+        # l_{s+j} = beta^{j+1}·l_s + α·Σ_{i≤j} beta^{j-i}·seg_i
+        contrib = alpha[:, None][row] * np.cumsum(seg * inv_beta, axis=1) * pow_beta
+        lvl = self.y[self.starts[which]]
+        if single:
+            lv = pow_beta * lvl[:, None] + contrib
+        else:
+            first_row = np.cumsum(nb) - nb
+            lv = np.empty_like(contrib)
+            for k in range(int(nb.max())):
+                has = np.flatnonzero(nb > k)
+                rows = first_row[has] + k
+                lv[rows] = pow_beta[rows] * lvl[has][:, None] + contrib[rows]
+                lvl[has] = lv[rows, -1]
+        out[cells] = lv[valid]
+        return out
+
+    def sse(self, alpha: np.ndarray, which: np.ndarray) -> np.ndarray:
+        """One-step SSE per series of ``which`` (ref ses.rs:93-112). Each
+        series' errors are one contiguous slice reduced by ``e @ e``, the
+        one-series reduction order."""
+        lv = self.levels(alpha, which)
+        e = self.y[1:] - lv[:-1]
+        return np.array([float(e[a:b - 1] @ e[a:b - 1]) for a, b in
+                         zip(self.starts[which].tolist(), self.ends[which].tolist())])
 
 
 def acf(y: np.ndarray, nlags: int) -> np.ndarray:

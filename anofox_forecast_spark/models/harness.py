@@ -11,10 +11,13 @@ each series starts, computed once per body with numpy. A one-series kernel
 is wrapped in ``each_series``, which slices the body per series; a kernel
 that vectorizes across series (the Gorilla/Chimp encode) runs once per body,
 so numpy's fixed per-call cost is paid per Arrow batch, not per series or
-chunk. Results return as Arrow batches. This is the SURVEY §2.2 "Spark
-primitive for ALL models": no per-row Python, no per-series Arrow round
-trip, no driver-side loops, cross-series parallelism = partition
-parallelism.
+chunk. ``forecast`` works per body too: a model with a body form
+(``registry.BODY_FORMS``: ``ses``, whose optimizer runs in lockstep over the
+body's series) is called once per body, every other model once per series
+on a numpy slice, and the output columns are assembled once per body.
+Results return as Arrow batches. This is the SURVEY §2.2 "Spark primitive
+for ALL models": no per-row Python, no per-series Arrow round trip, no
+driver-side loops, cross-series parallelism = partition parallelism.
 
 Failure policy (ref returns Result per call — src/error.rs): a series that
 raises (e.g. InsufficientData) emits zero forecast rows instead of failing
@@ -62,7 +65,7 @@ from pyspark.sql.types import (
 )
 
 from anofox_forecast_spark.core.frequency import parse_frequency
-from anofox_forecast_spark.models.registry import get_model
+from anofox_forecast_spark.models.registry import BODY_FORMS, get_model
 
 ModelSpec = Mapping[str, Mapping] | Sequence[str]
 
@@ -212,6 +215,14 @@ def forecast(
     src/core/time_series.rs:1014-1039 via pandas DateOffset clamping).
     ``max_points_per_series`` truncates pathological series to their most
     recent points (documented guard, SURVEY §7.3 grouped-map skew).
+
+    Per body: a model with a body form (``registry.BODY_FORMS``: ``ses``)
+    fits every series of the body in one call; every other model (``theta``,
+    ``seasonal_naive``, …) is called once per series on a numpy slice, and a
+    series it raises on emits no rows for it. A body form fits any series
+    of one or more points, so it raises only on bad parameters, where every
+    series would. The output columns are assembled once per body, in the
+    per-series order (series, then model, then step).
     """
     key_fields = [df.schema[k] for k in keys]
     out_schema = StructType(
@@ -226,30 +237,53 @@ def forecast(
     keys_l = list(keys)
 
     # resolved on the driver: an unknown model fails before launching
-    resolved = [(name, get_model(name), params)
+    resolved = [(name, get_model(name), BODY_FORMS.get(name), params)
                 for name, params in _normalize_models(models).items()]
+    names = np.repeat(np.array([name for name, *_ in resolved]), horizon)
+    steps = np.arange(1, horizon + 1, dtype=np.int32)
+    f = parse_frequency(freq)
+    ahead = np.timedelta64(f.seconds, "s") * steps if f.kind == "duration" else None
 
-    def one_series(g: pd.DataFrame, out: dict) -> None:
-        if len(g) > max_points_per_series:
-            g = g.iloc[-max_points_per_series:]
-        y = g[y_col].to_numpy(dtype=np.float64)
-        last_ts = g[ts_col].iloc[-1]
-        ds = _future_timestamps(last_ts, horizon, freq)
-        for name, kernel, params in resolved:
-            try:
-                res = kernel(y, horizon, level, season_length, **params)
-            except Exception:
+    def per_body(body: pd.DataFrame, starts: np.ndarray, out: dict) -> None:
+        ends = np.append(starts[1:], len(body))
+        starts = np.maximum(starts, ends - max_points_per_series)
+        y = body[y_col].to_numpy(dtype=np.float64)
+        n, m = starts.size, len(resolved)
+        yhat, lo, hi = (np.empty((n, m, horizon)) for _ in range(3))
+        ok = np.zeros((n, m), dtype=bool)
+        for j, (_, kernel, body_form, params) in enumerate(resolved):
+            if body_form is not None:
+                try:
+                    r = body_form(y, starts, ends, horizon, level, season_length, **params)
+                except Exception:  # bad params: every series would raise alike
+                    continue
+                yhat[:, j], lo[:, j], hi[:, j], ok[:, j] = r.yhat, r.lo, r.hi, True
                 continue
-            for k in keys_l:
-                out[k].append(np.repeat(g[k].iloc[0], horizon))
-            out["model"].append(np.repeat(name, horizon))
-            out["step"].append(np.arange(1, horizon + 1, dtype=np.int32))
-            out["ds"].append(np.asarray(ds, dtype="datetime64[us]"))
-            out["yhat"].append(res.yhat)
-            out["lo"].append(res.lo)
-            out["hi"].append(res.hi)
+            for i, (a, b) in enumerate(zip(starts.tolist(), ends.tolist())):
+                try:
+                    r = kernel(y[a:b], horizon, level, season_length, **params)
+                except Exception:
+                    continue
+                yhat[i, j], lo[i, j], hi[i, j], ok[i, j] = r.yhat, r.lo, r.hi, True
+        if not ok.any():
+            return
+        ts = body[ts_col]
+        if ahead is not None and np.issubdtype(ts.dtype, np.datetime64):
+            ds = ts.to_numpy()[ends - 1, None] + ahead
+        else:
+            ds = np.array([_future_timestamps(ts.iloc[e - 1], horizon, freq)
+                           for e in ends.tolist()], dtype="datetime64[us]")
+        rows = np.repeat(ok.ravel(), horizon)  # (series, model, step) order
+        for k in keys_l:
+            out[k].append(np.repeat(body[k].to_numpy()[starts], m * horizon)[rows])
+        out["model"].append(np.tile(names, n)[rows])
+        out["step"].append(np.tile(steps, n * m)[rows])
+        out["ds"].append(np.repeat(ds.astype("datetime64[us]"), m, axis=0).ravel()[rows])
+        out["yhat"].append(yhat.ravel()[rows])
+        out["lo"].append(lo.ravel()[rows])
+        out["hi"].append(hi.ravel()[rows])
 
-    return batched_series_apply(df, keys_l, ts_col, each_series(one_series), out_schema)
+    return batched_series_apply(df, keys_l, ts_col, per_body, out_schema)
 
 
 def fitted_values(

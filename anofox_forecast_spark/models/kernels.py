@@ -10,6 +10,15 @@ period. Kernels run *inside* the Arrow-batched per-series stage — cross-series
 parallelism comes from Spark partitioning, never from threads here
 (SURVEY §3.2: the reference's rayon layer is replaced by data parallelism).
 
+A model may also have a body form (``ses_body``) that fits every series of
+one body at once::
+
+    body_form(y, starts, ends, h, level, m, **params) -> BodyResult
+
+with series ``i`` in rows ``starts[i]:ends[i]`` of ``y``; the one-series
+kernel is the body form over one series, so each model keeps one
+implementation (``registry.BODY_FORMS`` lists them).
+
 Numerical contracts are cited per kernel into /root/reference (semantics
 only; this is a fresh numpy implementation).
 """
@@ -22,10 +31,12 @@ import numpy as np
 
 from anofox_forecast_spark.models._numerics import (
     Z95_EXACT,
+    SegmentLevels,
     acf,
     level_fold,
     mean_sq,
     nelder_mead,
+    nelder_mead_lockstep,
     z_for_level,
 )
 
@@ -171,48 +182,72 @@ def seasonal_window_average(
 
 # ------------------------------------------------------------ exponential
 
-def _ses_levels(y: np.ndarray, alpha: float) -> np.ndarray:
-    """Vectorized SES level scan: levels[t] = α·y_t + (1−α)·levels[t−1],
-    levels[0] = y[0]. Blocked renormalized cumsum (block 32 keeps
-    (1−α)^{−31} ≤ ~1e124 for α ≤ 0.9999 — no overflow), identical to the
-    sequential recursion to fp round-off."""
-    n = y.size
-    beta = 1.0 - alpha
-    if n <= 1 or beta == 0.0:
-        out = y.astype(np.float64).copy()
-        return out
-    out = np.empty(n)
-    out[0] = y[0]
-    B = 32
-    pow_beta = beta ** np.arange(B + 1)          # beta^k
-    inv_beta = (1.0 / beta) ** np.arange(1, B + 1)  # beta^-k
-    lvl = y[0]
-    start = 1
-    while start < n:
-        end = min(start + B, n)
-        seg = y[start:end]
-        k = seg.size
-        # l_{start+j} = beta^{j+1}·lvl + α·Σ_{i≤j} beta^{j-i}·seg_i
-        contrib = alpha * np.cumsum(seg * inv_beta[:k]) * pow_beta[1 : k + 1]
-        out[start:end] = pow_beta[1 : k + 1] * lvl + contrib
-        lvl = out[end - 1]
-        start = end
-    return out
+def _ses_alphas(scan: SegmentLevels) -> np.ndarray:
+    """α per series: NM start 0.5, bounds [1e-4, 0.9999], 500 iters (ref
+    ses.rs:115-130), all series of the body in lockstep."""
+    pt = nelder_mead_lockstep(scan.sse, scan.starts.size, 0.5, (0.0001, 0.9999), max_iter=500)
+    return np.clip(pt, 0.0001, 0.9999)
 
 
-def _ses_sse(y: np.ndarray, alpha: float) -> float:
-    """SSE of one-step SES with level initialized at y[0] (ref ses.rs:93-112)."""
-    levels = _ses_levels(y, alpha)
-    e = y[1:] - levels[:-1]
-    return float(e @ e)
+def _one_series(n: int) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, ends) of a body that is one series of ``n`` points."""
+    return np.zeros(1, dtype=np.int64), np.array([n])
 
 
-def _optimize_ses_alpha(y: np.ndarray) -> float:
-    """NM start 0.5, bounds [1e-4, 0.9999], 500 iters (ref ses.rs:115-130)."""
-    pt = nelder_mead(
-        lambda p: _ses_sse(y, p[0]), [0.5], [(0.0001, 0.9999)], max_iter=500
-    )
-    return float(np.clip(pt[0], 0.0001, 0.9999))
+@dataclass
+class BodyResult:
+    """A body form's output: row ``i`` of ``yhat``/``lo``/``hi`` (series ×
+    horizon) belongs to series ``i``; ``fitted``/``residuals`` run along
+    the body's rows; ``params`` hold one value per series."""
+    yhat: np.ndarray
+    lo: np.ndarray
+    hi: np.ndarray
+    fitted: np.ndarray
+    residuals: np.ndarray
+    params: dict
+
+
+def ses_body(
+    y: np.ndarray,
+    starts: np.ndarray,
+    ends: np.ndarray,
+    h: int,
+    level: float = 0.95,
+    m: int = 1,
+    alpha: float | None = None,
+) -> BodyResult:
+    """``ses`` for every series of a body (series ``i`` in rows
+    ``starts[i]:ends[i]`` of ``y``): the level scan and α's optimizer run
+    once over the body; each series' output has the bits ``ses`` gives it
+    alone, because ``ses`` is this function over one series."""
+    if (ends <= starts).any():
+        raise InsufficientData("empty series")
+    y = np.asarray(y, dtype=np.float64)
+    scan = SegmentLevels(y, starts, ends)
+    a = (_ses_alphas(scan) if alpha is None
+         else np.full(starts.size, float(np.clip(alpha, 0.0001, 0.9999))))
+    levels = scan.levels(a, np.arange(starts.size))
+    # fitted[i] = level after y_{i-1}; fitted[0] = initial level = y[0]
+    fitted = np.empty_like(y)
+    fitted[1:] = levels[:-1]
+    fitted[starts] = y[starts]
+    resid = y - fitted
+    resid[starts] = 0.0
+    hs = np.arange(1, h + 1)
+    spread = np.empty((starts.size, h))
+    for i, (s, e, ai) in enumerate(zip(starts.tolist(), ends.tolist(), a.tolist())):
+        variance = mean_sq(resid[s + 1:e]) if e - s > 1 else 0.0
+        beta2 = (1.0 - ai) ** 2
+        if abs(1.0 - beta2) < 1e-10:
+            factor = hs.astype(np.float64)
+        else:
+            factor = np.where(
+                hs == 1, 1.0, 1.0 + beta2 * (1.0 - beta2 ** (hs - 1)) / (1.0 - beta2)
+            )
+        spread[i] = variance * factor
+    yhat = np.repeat(levels[ends - 1][:, None], h, axis=1)
+    lo, hi = _interval(yhat, np.sqrt(spread), level)
+    return BodyResult(yhat, lo, hi, fitted, resid, {"alpha": a})
 
 
 def ses(
@@ -222,30 +257,11 @@ def ses(
 
     ref src/models/exponential/ses.rs:139-240: level₀=y[0]; fitted[0]=y[0],
     resid[0]=0; σ²=mean(resid[1:]²); CI factor
-    1 + (1−α)²·(1−(1−α)^{2(h−1)})/(1−(1−α)²).
+    1 + (1−α)²·(1−(1−α)^{2(h−1)})/(1−(1−α)²). ``ses_body`` over one series.
     """
-    n = y.size
-    if n == 0:
-        raise InsufficientData("empty series")
-    a = _optimize_ses_alpha(y) if alpha is None else float(np.clip(alpha, 0.0001, 0.9999))
-    levels = _ses_levels(y, a)
-    # fitted[i] = level after y_{i-1}; fitted[0] = initial level = y[0]
-    fitted = np.concatenate([[y[0]], levels[:-1]])
-    lvl = float(levels[-1])
-    resid = y - fitted
-    resid[0] = 0.0
-    variance = mean_sq(resid[1:]) if n > 1 else 0.0
-    yhat = np.full(h, lvl)
-    beta2 = (1.0 - a) ** 2
-    hs = np.arange(1, h + 1)
-    if abs(1.0 - beta2) < 1e-10:
-        factor = hs.astype(np.float64)
-    else:
-        factor = np.where(
-            hs == 1, 1.0, 1.0 + beta2 * (1.0 - beta2 ** (hs - 1)) / (1.0 - beta2)
-        )
-    lo, hi = _interval(yhat, np.sqrt(variance * factor), level)
-    return KernelResult(yhat, lo, hi, fitted, resid, {"alpha": a})
+    r = ses_body(y, *_one_series(y.size), h, level, m, alpha)
+    return KernelResult(r.yhat[0], r.lo[0], r.hi[0], r.fitted, r.residuals,
+                        {"alpha": float(r.params["alpha"][0])})
 
 
 def _damped_sum(phi: float, h: int) -> float:
@@ -526,7 +542,8 @@ def theta(
     ss_xx = float(((xs - x_mean) ** 2).sum())
     b = float(((xs - x_mean) * (des - y_mean)).sum() / ss_xx) if ss_xx > 0 else 0.0
 
-    a = _optimize_ses_alpha(des) if (optimize_alpha or alpha is None) else float(alpha)
+    a = (float(_ses_alphas(SegmentLevels(des, *_one_series(n)))[0])
+         if (optimize_alpha or alpha is None) else float(alpha))
 
     levels = level_fold(des, a)
     lvl = levels[-1]

@@ -57,6 +57,11 @@ MODELS["tbats"] = tbats
 MODELS["auto_tbats"] = auto_tbats
 
 
+# models that also fit every series of a body in one call (``forecast``
+# uses these; every other model runs once per series)
+BODY_FORMS: dict[str, Callable] = {"ses": K.ses_body}
+
+
 def get_model(name: str) -> Callable:
     try:
         return MODELS[name]

@@ -115,11 +115,3 @@ def timestamps(n: int = N) -> list[dt.datetime]:
     start = dt.datetime(2020, 1, 1)
     return [start + dt.timedelta(days=30 * i) for i in range(n)]
 
-
-def corpus_df(spark, n: int = N, seed: int = SEED):
-    """Long Spark frame (series_type, ts, y) of the whole corpus."""
-    ts = timestamps(n)
-    rows = []
-    for name, vals in generate_corpus(n, seed).items():
-        rows.extend((name, ts[i], float(vals[i])) for i in range(n))
-    return spark.createDataFrame(rows, "series_type string, ts timestamp, y double")

@@ -283,15 +283,17 @@ def line_dedup(
     """
     if lines_col is None:
         L = int(tokens_per_line)
-        w = _tokens(F.col(text_col))
         key_udf = _chunk_key_udf(L)
-        wh = F.transform(w, lambda x: F.xxhash64(x))
-        # empty-doc filter BEFORE the UDF (projection-collapse trap —
-        # see minhash_signatures); empty docs never appeared in the
-        # string formulation's output either (their one chunk is "").
-        occ = df.filter(F.size(w) > 0).select(
+        # the word array gets its own projection (inlined, each use
+        # re-tokenizes the doc); the empty-doc filter stays BEFORE the UDF
+        # (projection-collapse trap — see minhash_signatures); empty docs
+        # never appeared in the string formulation's output either (their
+        # one chunk is "").
+        docs = df.select("*", _tokens(F.col(text_col)).alias("__w")).filter(F.size("__w") > 0)
+        occ = docs.select(
             F.col(id_col).alias("id"),
-            F.posexplode(key_udf(wh)).alias("line_no", "key"),
+            F.posexplode(key_udf(F.transform("__w", lambda x: F.xxhash64(x)))).alias(
+                "line_no", "key"),
         )
         first = occ.groupBy("key").agg(
             F.min(F.struct("id", "line_no")).alias("k")
@@ -304,10 +306,10 @@ def line_dedup(
         # side is (id, count, int list) — AQE broadcasts it when it fits
         # and falls back to a keyed join at corpus scale, so the payload
         # side never shuffles in the common case
-        out = df.filter(F.size(w) > 0).select(
+        out = docs.select(
             F.col(id_col).alias("id"),
-            w.alias("__w"),
-            F.ceil(F.size(w) / F.lit(L)).cast("bigint").alias("n_lines"),
+            "__w",
+            F.ceil(F.size("__w") / F.lit(L)).cast("bigint").alias("n_lines"),
         ).join(kept_per_doc, "id", "left")
         rebuilt = F.concat_ws(
             " ",
@@ -433,19 +435,20 @@ def minhash_signatures(
             mins[i] = np.minimum.reduceat(p, starts2)
         return _rows(nonempty, mins.view(np.int64).T)
 
-    words = _tokens(F.col(text_col))
-    wh_col = F.transform(words, lambda w: F.xxhash64(w))
-    # empty-doc filter on the cheap JVM word array, BEFORE the UDF: a
-    # post-filter on size(sig) gets inlined by projection collapse and the
-    # plan runs the whole ArrowEvalPython pass TWICE (caught by the
-    # PLANS.md single-ArrowEvalPython assertion)
+    # the word array gets its own projection (inlined, each use
+    # re-tokenizes the doc), and the empty-doc filter on it runs BEFORE the
+    # UDF: a post-filter on size(sig) gets inlined by projection collapse
+    # and the plan runs the whole ArrowEvalPython pass TWICE (caught by
+    # the PLANS.md single-ArrowEvalPython assertion)
     extra = [F.col(c) for c in (carry_cols or [])]
     # hash-family parameters ride as column metadata (they survive
     # select/persist AND a parquet round-trip), so a stored signature
     # table can be validated before an incremental pass joins against it
     return (
-        df.filter(F.size(words) > 0)
-        .select(F.col(id_col).alias("id"), sig_udf(wh_col).alias("sig"), *extra)
+        df.select("*", _tokens(F.col(text_col)).alias("__w"))
+        .filter(F.size("__w") > 0)
+        .select(F.col(id_col).alias("id"),
+                sig_udf(F.transform("__w", lambda w: F.xxhash64(w))).alias("sig"), *extra)
         .withMetadata("sig", {"n_hashes": n_hashes, "shingle_n": shingle_n,
                               "seed": seed})
     )
@@ -1187,15 +1190,15 @@ def substring_dedup(
     L = int(min_tokens)
     if L < 2:
         raise ValueError("min_tokens must be >= 2")
-    w = _tokens(F.col(text_col))
-    docs = df.select(F.col(id_col).alias("id"), w.alias("__w"))
+    # the word array gets its own projection: inlined, each use
+    # re-tokenizes the doc
+    docs = df.select(F.col(id_col).alias("id"), _tokens(F.col(text_col)).alias("__w"))
+    w = F.col("__w")
     # strict windows only: docs shorter than L contribute nothing (a
     # partial window is a span < L and must never be cut)
     empty = F.array().cast("array<bigint>" if hashed else "array<string>")
     gram_arr = F.when(F.size(w) >= L, grams(w, L, hashed)).otherwise(empty)
-    occ = df.select(
-        F.col(id_col).alias("id"), F.posexplode(gram_arr).alias("pos", "__g")
-    )
+    occ = docs.select("id", F.posexplode(gram_arr).alias("pos", "__g"))
     first = occ.groupBy("__g").agg(
         F.min(F.struct("id", "pos")).alias("k"), F.count("*").alias("c")
     )

@@ -390,14 +390,14 @@ def repetition_stats(
             w_distinct / np.maximum(ne_len, 1),
         ], axis=1))
 
-    words = _tokens(F.col(text_col))
-    wh_col = F.transform(words, lambda w: F.xxhash64(w))
-    # empty-doc filter BEFORE the UDF (projection-collapse trap — see
+    # the word array gets its own projection (as in quality_scores); the
+    # empty-doc filter stays BEFORE the UDF (projection-collapse trap — see
     # minhash_signatures); string-version semantics dropped empty docs too
-    base = df.filter(F.size(words) > 0).select(
+    words = df.select("*", _tokens(F.col(text_col)).alias("__w"))
+    base = words.filter(F.size("__w") > 0).select(
         F.col(id_col).alias("id"),
-        F.size(words).alias("n_words"),
-        rep_udf(wh_col).alias("__r"),
+        F.size("__w").alias("n_words"),
+        rep_udf(F.transform("__w", lambda w: F.xxhash64(w))).alias("__r"),
     )
     out = base.select(
         "id", "n_words",

@@ -313,3 +313,39 @@ def test_boxcox_lambda_per_series(spark):
     df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
     out = boxcox_lambda_per_series(df, ["sid"], "y").collect()
     assert abs(out[0]["lambda"] - lam) < 1e-9
+
+
+def test_inverse_scale_round_trips(spark):
+    """``inverse_scale`` maps each method's scaled column back onto the
+    values through the retained __center/__scale columns; ``range``
+    output first undoes its affine map (``from_range``)."""
+    import datetime as dt
+
+    from anofox_forecast_spark.transform import scale_series
+    from anofox_forecast_spark.transform.scale import inverse_scale
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(sid, t0 + dt.timedelta(hours=i), float(v))
+            for sid, vals in (("a", [2.0, 4.0, 7.0, 8.0]), ("b", [-1.0, 5.0, 5.0, 30.0]))
+            for i, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
+    for method in ("standardize", "normalize", "robust", "center", "range"):
+        scaled = scale_series(df, ["sid"], "y", method=method, range_min=-1.0, range_max=3.0)
+        back = inverse_scale(scaled, "y_scaled", "y_back", range_min=-1.0, range_max=3.0,
+                             from_range=method == "range").toPandas()
+        assert np.allclose(back["y_back"], back["y"], rtol=0, atol=1e-12), method
+
+
+def test_boxcox_shifted():
+    """Non-positive data shift to a minimum of 1 (ref boxcox.rs:156-167) and
+    then transform as plain Box-Cox; positive data do not shift."""
+    from anofox_forecast_spark.transform.boxcox import boxcox_shifted
+
+    y = np.array([-2.0, 0.0, 3.0])
+    out, shift = boxcox_shifted(y, 0.5)
+    assert shift == 3.0
+    assert np.allclose(out, ((y + 3.0) ** 0.5 - 1.0) / 0.5)
+    out, shift = boxcox_shifted(y, 0.0)
+    assert np.allclose(out, np.log(y + 3.0))
+    out, shift = boxcox_shifted(np.array([0.5, 2.0]), 2.0)
+    assert shift == 0.0 and np.allclose(out, (np.array([0.25, 4.0]) - 1.0) / 2.0)

@@ -274,3 +274,63 @@ def test_gapfill_plan_building_sends_no_call_site_capture(spark, monkeypatch):
     monkeypatch.undo()
     assert sent
     assert not [c for c in sent if "PySparkCurrentOrigin" in c]
+
+
+def test_fill_gaps_quotes_column_names(spark):
+    """Key, ts and value columns whose names need quoting (a space, a
+    backtick, a dot) fill as plain names do, for every method, in
+    ``fill_gaps`` and ``gapfill_dense``; a pass-through column keeps its
+    name and place."""
+    rows = [("a", t, float(i), i) for i, t in enumerate(_hours(0, 1, 4, 6))]
+    rows += [("b", t, y, 9) for t, y in zip(_hours(2, 5), (2.0, None))]
+    plain = spark.createDataFrame(rows, "sid string, ts timestamp, y double, extra int")
+    names = {"sid": "series `id`", "ts": "time.stamp", "y": "y value`", "extra": "x y"}
+    odd = plain.toDF(*[names[c] for c in plain.columns])
+    for method in ("none", "locf", "interp"):
+        for fill in (fill_gaps, gapfill_dense):
+            want = fill(plain, ["sid"], "ts", ["y"], "1h", method=method, fill_edges=True)
+            got = fill(odd, [names["sid"]], names["ts"], [names["y"]], "1h", method=method,
+                       fill_edges=True)
+            assert got.columns == [names.get(c, c) for c in want.columns], (fill.__name__, method)
+            assert sorted(map(tuple, got.collect()), key=str) == \
+                sorted(map(tuple, want.collect()), key=str), (fill.__name__, method)
+
+
+def test_plan_builds_stay_under_py4j_command_ceilings(spark, monkeypatch):
+    """Building a gap-fill or forecast plan costs py4j round trips: the
+    gap-fill pass is three DataFrame steps of SQL text, so one build sends
+    about 30 commands (it sent ~420 as Column calls). The ceilings sit a
+    little above the counts measured when the text form landed. py4j's
+    memory-release commands are not counted: they come whenever Python
+    collects a Java object's proxy, not from the build."""
+    from py4j.clientserver import ClientServerConnection
+
+    from anofox_forecast_spark.models import forecast
+
+    df = spark.createDataFrame([("a", "b", t, 1.0) for t in _hours(0, 3)],
+                               "lang string, host string, ts timestamp, y double")
+    keys = ["lang", "host"]
+    builds = {
+        "gapfill_dense": (45, lambda: gapfill_dense(df, keys, "ts", ["y"], "1h")),
+        "none": (35, lambda: fill_gaps(df, keys, "ts", ["y"], "1h")),
+        "locf": (35, lambda: fill_gaps(df, keys, "ts", ["y"], "1h", "locf")),
+        "interp": (35, lambda: fill_gaps(df, keys, "ts", ["y"], "1h", "interp", True)),
+        "month": (35, lambda: fill_gaps(df, keys, "ts", ["y"], "1mo", "locf")),
+        "forecast": (75, lambda: forecast(df, keys, "ts", "y", ["seasonal_naive", "ses", "theta"],
+                                          14, "1d", 7)),
+    }
+    send = ClientServerConnection.send_command
+    counts = {}
+    for name, (_, build) in builds.items():
+        sent = []
+
+        def recording(self, command, sent=sent):
+            if not command.startswith("m\nd\n"):
+                sent.append(command)
+            return send(self, command)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", recording)
+        build()
+        monkeypatch.undo()
+        counts[name] = len(sent)
+    assert all(counts[name] <= ceiling for name, (ceiling, _) in builds.items()), counts

@@ -98,3 +98,33 @@ def test_series_starts_are_null_safe_across_key_columns():
     seen = []
     each_series(lambda g, out: seen.append(g["y"].tolist()))(body, starts, {})
     assert seen == [[0.0, 1.0], [2.0], [3.0, 4.0], [5.0], [6.0]]
+
+
+def test_forecast_body_keeps_other_models_when_one_raises(spark):
+    """One body holds a 3-point series, for which ``theta`` raises
+    (n < 4): that series still emits its ``seasonal_naive`` and ``ses``
+    rows, the other series all three models, and every value equals the
+    one-series kernel's bits (``ses`` runs as one body form)."""
+    # two keys that the kernel stage's hash partitioning puts in one task
+    parts = spark.sparkContext.defaultParallelism
+    by_part: dict = {}
+    for r in spark.sql(f"select concat('s', id) k, pmod(hash(concat('s', id)), {parts}) p "
+                       "from range(20)").collect():
+        by_part.setdefault(r.p, []).append(r.k)
+    short, long_ = next(ks for ks in by_part.values() if len(ks) > 1)[:2]
+    rows = [(short, T0 + dt.timedelta(days=i), float(3 + i)) for i in range(3)]
+    rows += [(long_, T0 + dt.timedelta(days=i), float(10 + i % 5 + i * i % 7)) for i in range(20)]
+    df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
+    models = ["seasonal_naive", "ses", "theta"]
+    pdf = forecast(df, ["sid"], "ts", "y", models=models, horizon=4, freq="1d",
+                   season_length=2).toPandas()
+    assert sorted(set(zip(pdf.sid, pdf.model))) == sorted(
+        [(long_, m) for m in models] + [(short, "seasonal_naive"), (short, "ses")])
+    for sid, n in ((short, 3), (long_, 20)):
+        y = np.array([r[2] for r in rows if r[0] == sid])
+        for name in set(pdf[pdf.sid == sid].model):
+            got = pdf[(pdf.sid == sid) & (pdf.model == name)].sort_values("step")
+            want = getattr(K, name)(y, 4, 0.95, 2)
+            for col in ("yhat", "lo", "hi"):
+                assert got[col].to_numpy().tobytes() == want.__dict__[col].tobytes(), (sid, name)
+            assert list(got.ds) == [T0 + dt.timedelta(days=n - 1 + k) for k in range(1, 5)]
